@@ -204,12 +204,12 @@ def _delete_fixture_store(spark, root):
 def _all_samples(spark, root):
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.sources.writer import live_store_dirs, read_roots
 
     df = read_roots(spark, live_store_dirs(root))
-    out = df.select(
-        "job", F.explode(decode_chunk_udf(F.col("__chunk_bytes"))).alias("s")
+    out = df.transform(with_sample_arrays).select(
+        "job", F.explode(sample_structs()).alias("s")
     ).collect()
     return sorted((r["job"], r["s"]["ts"], r["s"]["value"]) for r in out)
 

@@ -237,13 +237,12 @@ def test_http_otlp_end_to_end_mixed_spool(spark):
 
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.querier import ChunkQuerier
     from tsdb_parquet_spark.remote_write import (
         encode_write_request,
         frame_payload,
     )
-    from tsdb_parquet_spark.schema import CHUNK_BYTES
     from tsdb_parquet_spark.sources.remote_write_server import (
         RemoteWriteServer,
     )
@@ -321,8 +320,8 @@ def test_http_otlp_end_to_end_mixed_spool(spark):
     ingestor.ingest(stream)
     q = ChunkQuerier.from_parquet(spark, ingestor.finalize())
     row = (
-        q.chunks.select(
-            F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s")
+        q.chunks.transform(with_sample_arrays).select(
+            F.explode(sample_structs()).alias("s")
         )
         .agg(F.count("*").alias("n"), F.sum("s.value").alias("total"))
         .collect()[0]
@@ -337,8 +336,8 @@ def test_http_otlp_end_to_end_mixed_spool(spark):
     rw_ing.ingest(rw_stream)
     q2 = ChunkQuerier.from_parquet(spark, rw_ing.finalize())
     row2 = (
-        q2.chunks.select(
-            F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s")
+        q2.chunks.transform(with_sample_arrays).select(
+            F.explode(sample_structs()).alias("s")
         )
         .agg(F.count("*").alias("n"), F.sum("s.value").alias("total"))
         .collect()[0]

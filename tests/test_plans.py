@@ -429,7 +429,8 @@ def test_block_store_promql_chain_pushdown(spark, tmp_path):
     TSDB block must behave like any native store — the PromQL metric
     selector reaches the parquet scan as a pushed equality and the
     ReadSchema carries only the touched columns (no __series__id, no
-    unused labels)."""
+    unused labels), and the import left the XOR blobs behind: the scan
+    reads the ``__ts``/``__values`` arrays."""
     import numpy as np
 
     from tsdb_parquet_spark.plans.promql import PromQLEngine
@@ -466,7 +467,8 @@ def test_block_store_promql_chain_pushdown(spark, tmp_path):
     assert "EqualTo(__name__,m)" in pushed
     schema_line = plan.split("ReadSchema")[1].split("\n")[0]
     assert "__series__id" not in schema_line
-    assert "__chunk_bytes" in schema_line
+    assert "__ts" in schema_line and "__values" in schema_line
+    assert "__chunk_bytes" not in schema_line
 
 
 def test_wal_drain_broadcasts_series_map(spark, tmp_path):
@@ -493,18 +495,14 @@ def test_wal_drain_broadcasts_series_map(spark, tmp_path):
 
 def test_delete_samples_edit_path_is_narrow(spark, tmp_path):
     """The store-delete rewrite's chunk-edit stage must stay NARROW —
-    decode -> higher-order array filter -> re-encode with no Exchange
-    of its own (the only shuffle in the rewrite is write_sorted's
-    inherent range sort).  Pinned by counting exchanges in the edited
-    frame's plan before the write."""
+    a higher-order filter over the zipped payload arrays with no
+    Exchange of its own (the only shuffle in the rewrite is
+    write_sorted's inherent range sort) and no Python operator.  Pinned
+    on the edited frame's plan before the write."""
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import (
-        decode_chunk_udf,
-        encode_chunk_udf,
-        samples_to_chunks,
-    )
+    from tsdb_parquet_spark.chunks import sample_structs, samples_to_chunks
 
     rows = [
         Row(__name__="m", job="a", ts=t * 1000, value=float(t))
@@ -516,31 +514,32 @@ def test_delete_samples_edit_path_is_narrow(spark, tmp_path):
     chunks.write.mode("overwrite").parquet(str(tmp_path / "d"))
     df = spark.read.parquet(str(tmp_path / "d"))
     kept = F.filter(
-        decode_chunk_udf(F.col("__chunk_bytes")),
+        sample_structs(),
         lambda s: (s["ts"] < F.lit(2000)) | (s["ts"] > F.lit(5000)),
     )
     edited = (
         df.withColumn("__kept", kept)
         .filter(F.size("__kept") > 0)
-        .withColumn("__chunk_bytes", encode_chunk_udf(F.col("__kept")))
+        .withColumn("__ts", F.col("__kept")["ts"])
+        .withColumn("__values", F.col("__kept")["value"])
         .drop("__kept")
     )
     plan = edited._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # chunk-local surgery, no shuffle
+    assert "Python" not in plan and "MapInPandas" not in plan
+    assert [r["__ts"] for r in edited.collect()] == [[0, 1000, 6000, 7000, 8000, 9000]]
 
 
 def test_downsample_blocks_shuffle_budget(spark, tmp_path):
     """Block-farm downsampling is decode (one task per block, no
     shuffle) -> ONE rollup groupBy -> re-chunk (one more groupBy): the
-    pre-export plan must contain exactly TWO aggregate exchanges and no
-    Python operator beyond the two Arrow codecs (block decode +
-    chunk encode)."""
+    pre-export plan must contain exactly TWO aggregate exchanges."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from tsdb_parquet_spark.chunks import (
         DEFAULT_CHUNK_SPAN_MS,
-        decode_chunk_udf,
+        chunks_to_samples,
         samples_to_chunks,
     )
     from tsdb_parquet_spark.sources.rollup import downsample_samples
@@ -560,11 +559,7 @@ def test_downsample_blocks_shuffle_budget(spark, tmp_path):
     )
     labels = ["__name__", "job"]
     frame = blocks_to_chunk_frame(spark, [d], labels)
-    samples = frame.select(
-        *labels,
-        F.explode(decode_chunk_udf(F.col("__chunk_bytes"))).alias("s"),
-    ).select(*labels, F.col("s.ts").alias("ts"),
-             F.col("s.value").alias("value"))
+    samples = chunks_to_samples(frame, labels)
     rolled = downsample_samples(samples, labels, step_ms=7_200_000)
     # assign_series_ids=False is the production path (downsample_blocks
     # / compact_blocks): the exporter builds its index from labels, and

@@ -7,6 +7,9 @@ emits 1.0 every 30s — `prometheus/chunks_iterator.go:12-24`)."""
 import math
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from tsdb_parquet_spark.plans.promql import (
     PromQLEngine,
@@ -1837,3 +1840,103 @@ def test_query_range_many_fusion(spark):
     # node twice: once in the tree, once in the numbered details)
     assert plan.count("Scan ExistingRDD") == 6
     assert "Scan parquet" not in plan
+
+
+def test_composed_agg_by_label_no_series_carries(spark):
+    """`sum by (value) (count_over_time(...))`: no series carries a
+    `value` label, so the fused path must not group by the bucketed
+    frame's own `value` column (the raw samples).  It falls back, and
+    both paths group the absent label as absent: one group per step,
+    the same answer as the ungrouped sum."""
+    samples = _messy_samples(spark)
+
+    def run(q, compose):
+        eng = PromQLEngine(samples)
+        eng._compose_aggs = compose
+        df = eng.query_range(q, 0, 300_000, 60_000)
+        key = lambda r: tuple(  # noqa: E731
+            "NaN" if isinstance(x, float) and x != x else x for x in r
+        )
+        return df.columns, sorted(map(key, df.collect()))
+
+    want = run("sum(count_over_time(m[1m]))", False)
+    for q in [
+        "sum by (value) (count_over_time(m[1m]))",
+        "sum by (nolabel) (count_over_time(m[1m]))",
+        "max by (ts) (max_over_time(m[1m]))",
+    ]:
+        fused, plain = run(q, True), run(q, False)
+        assert fused == plain, q
+        if q.startswith("sum"):
+            assert fused == want, q
+    assert want[0] == ["t", "value"] and len(want[1]) == 6
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b"]),  # series
+            st.integers(0, 6).map(lambda k: k * 20_000),  # few ts: many ties
+            st.booleans(),  # is_stale
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_stale_instant_vector_max_by_picks_one_row(spark, rows):
+    """The stale instant vector takes `max_by(value, ts)` and
+    `max_by(is_stale, ts)` as two aggregates of one pass and assumes a
+    tied timestamp resolves to the SAME row in both.  Pinned on a
+    source with duplicated (series, ts) rows, spread over partitions:
+    every value is unique to its row (even for live rows, odd for stale
+    ones), so an output value must come from a live row holding the
+    step's latest timestamp, and a step without output must have a stale
+    row at that timestamp."""
+    data = [
+        ("m", job, ts, float(2 * i + stale), stale)
+        for i, (job, ts, stale) in enumerate(rows)
+    ]
+    samples = spark.createDataFrame(
+        data,
+        "`__name__` STRING, job STRING, ts LONG, value DOUBLE, "
+        "is_stale BOOLEAN",
+    ).repartition(3)
+    # the two aggregates exactly as the engine writes them, plus a row id
+    # picked the same way: both must agree with the id's row
+    picked = (
+        samples.withColumn("rid", (F.col("value") / 2).cast("long"))
+        .groupBy("job")
+        .agg(
+            F.max_by("value", "ts").alias("v"),
+            F.max_by("is_stale", "ts").alias("s"),
+            F.max_by("rid", "ts").alias("rid"),
+        )
+        .collect()
+    )
+    for r in picked:
+        _, _, ts, value, stale = data[r["rid"]]
+        assert (r["v"], r["s"]) == (value, stale)
+
+    lookback = 300_000
+    got = {
+        (r["job"], r["t"]): r["value"]
+        for r in PromQLEngine(samples)
+        .query_range("m", 0, 200_000, 20_000, lookback_ms=lookback)
+        .collect()
+    }
+    for t in range(0, 200_001, 20_000):
+        for job in ("a", "b"):
+            window = [d for d in data
+                      if d[1] == job and t - lookback < d[2] <= t]
+            if not window:
+                assert (job, t) not in got
+                continue
+            last = max(d[2] for d in window)
+            tied = [d for d in window if d[2] == last]
+            if (job, t) in got:
+                v = got[(job, t)]
+                assert int(v) % 2 == 0, (job, t, v)  # a live row's value
+                assert any(d[3] == v and not d[4] for d in tied)
+            else:
+                assert any(d[4] for d in tied)

@@ -203,7 +203,7 @@ def ref_eval(node, t: int) -> dict[tuple, float]:
             }
         keep = set(sorted(inner, key=frac)[: int(k)])
         return {key: v for key, v in inner.items() if key in keep}
-    if kind in ("agg", "agg_postfix"):
+    if kind in ("agg", "agg_postfix", "agg_inline"):
         _, op, by, child = node
         inner = ref_eval(child, t)
         groups: dict[tuple, list[float]] = {}
@@ -340,6 +340,13 @@ def render(node) -> str:
         # Prometheus's other legal grouping position
         _, op, by, child = node
         return f"{op}({render(child)}) by ({', '.join(by)})"
+    if kind == "agg_inline":
+        # the argument is a binary expression LED by a range function,
+        # with no parentheses of its own: `sum(rate(a[5m]) / rate(b[5m]))`
+        _, op, by, (bkind, bop, left, right) = node
+        rhs = render(right) if bkind == "binop" else right
+        grouping = f" by ({', '.join(by)})" if by else ""
+        return f"{op}{grouping} ({render(left)} {bop} {rhs})"
     if kind == "limit":
         _, k, ratio, child = node
         if ratio is not None:
@@ -472,6 +479,25 @@ def _rand_expr(rng):
     return node
 
 
+def _rand_agg_inline(rng):
+    """An aggregation over ``<range function> <op> <scalar or range
+    function>``; the two range functions share matchers and window, so
+    both sides hold the same series (one-to-one match)."""
+    matchers = _rand_matchers(rng)
+    window = rng.choice([60_000, 120_000, 180_000])
+    f1, f2 = rng.sample(list(_FNS), 2)
+    left = ("fn", f1, matchers, window, 0)
+    if rng.random() < 0.5:
+        child = ("scalar_op", rng.choice(["+", "-", "*"]), left,
+                 rng.choice([1, 2, 60]))
+    else:
+        child = ("binop", rng.choice(["+", "-", "*"]), left,
+                 ("fn", f2, matchers, window, 0))
+    by = rng.choice([[], ["job"], ["instance"], ["job", "instance"]])
+    return ("agg_inline", rng.choice(["sum", "min", "max", "count", "avg"]),
+            by, child)
+
+
 def _canon(rows) -> dict[tuple, float]:
     out = {}
     for r in rows:
@@ -484,11 +510,11 @@ def _canon(rows) -> dict[tuple, float]:
     return out
 
 
-def test_promql_fuzz_against_reference(fuzz_engine):
-    rng = random.Random(20260814)
+def _check_against_reference(fuzz_engine, nodes) -> int:
+    """Engine vs reference over every step; returns the number of
+    non-empty answers."""
     n_nonempty = 0
-    for case in range(75):
-        node = _rand_expr(rng)
+    for case, node in enumerate(nodes):
         text = render(node)
         got = _canon(
             fuzz_engine.query_range(
@@ -509,5 +535,21 @@ def test_promql_fuzz_against_reference(fuzz_engine):
                 f"case {case}: {text} @ {k}: engine={got[k]} ref={v}"
             )
         n_nonempty += bool(want)
+    return n_nonempty
+
+
+def test_promql_fuzz_against_reference(fuzz_engine):
+    rng = random.Random(20260814)
+    nodes = [_rand_expr(rng) for _ in range(75)]
     # the generator must not be degenerate (all-empty results prove nothing)
-    assert n_nonempty >= 15
+    assert _check_against_reference(fuzz_engine, nodes) >= 15
+
+
+def test_promql_fuzz_agg_over_range_function_binary(fuzz_engine):
+    """Aggregations whose argument is a range-function-led binary
+    expression (`sum(rate(a[5m]) / rate(b[5m]))`, `avg(rate(m[5m]) *
+    60)`): the shape of the standard error-ratio panel, which the parser
+    once rejected with ``expected ')'``."""
+    rng = random.Random(20261017)
+    nodes = [_rand_agg_inline(rng) for _ in range(20)]
+    assert _check_against_reference(fuzz_engine, nodes) >= 10

@@ -250,17 +250,20 @@ def test_tsdb_stats_counts(spark, tmp_path):
 
 
 def test_querier_over_xor_store_matches_raw(spark):
-    """File-level interop end-to-end: the SAME fixture written once with
-    the engine's raw codec and once as Prometheus/Gorilla XOR bytes (what
-    the reference's cmd/convert stores verbatim, `cmd/convert/main.go:
-    107`) must yield identical samples through ChunkQuerier — the querier
-    never knows which codec a store carries (per-blob sniffing in
-    decode_chunk_udf)."""
+    """File-level interop end-to-end: the SAME fixture written as the
+    engine's array store, as a foreign store of Prometheus/Gorilla XOR
+    bytes (what the reference's cmd/convert stores verbatim,
+    `cmd/convert/main.go:107`), and as that XOR frame imported through
+    the writer must yield identical samples through ChunkQuerier — the
+    querier converts a blob store at the scan (blobs_to_arrays), and the
+    writer converts blobs to the arrays on import."""
     import shutil
+
+    from tsdb_parquet_spark.xorchunk import is_raw_chunk
 
     samples = _fixture_samples(spark)
     stores = {}
-    for enc in ("raw", "xor"):
+    for enc in ("arrays", "xor"):
         chunks = samples_to_chunks(
             samples, LABELS, chunk_span_ms=MINUTE, encoding=enc
         )
@@ -272,13 +275,22 @@ def test_querier_over_xor_store_matches_raw(spark):
         writer = SortedParquetWriter(spark, root, opts)
         writer.write(chunks)
         stores[enc] = writer.compact()
-    # XOR chunk bytes are genuinely different on disk...
-    raw_bytes = spark.read.parquet(stores["raw"]).select("__chunk_bytes")
-    xor_bytes = spark.read.parquet(stores["xor"]).select("__chunk_bytes")
-    assert (
-        raw_bytes.exceptAll(xor_bytes).count() == raw_bytes.count()
-    ), "xor store unexpectedly carries raw-layout blobs"
-    # ...but the decoded sample sets are identical
+        if enc == "xor":
+            stores["foreign"] = os.path.join(WORK, "interop_foreign")
+            chunks.write.mode("overwrite").parquet(stores["foreign"])
+    # the foreign store holds genuine XOR blobs on disk...
+    blobs = [
+        bytes(r[0]) for r in
+        spark.read.parquet(stores["foreign"]).select("__chunk_bytes").collect()
+    ]
+    assert blobs and not any(is_raw_chunk(b) for b in blobs), (
+        "xor store unexpectedly carries raw-layout blobs"
+    )
+    # ...the imported one holds the arrays, no blob column...
+    imported = spark.read.parquet(stores["xor"]).columns
+    assert "__chunk_bytes" not in imported
+    assert {"__ts", "__values"} <= set(imported)
+    # ...and the decoded sample sets are identical
     out = {}
     for enc, store_dir in stores.items():
         q = ChunkQuerier.from_parquet(spark, store_dir)
@@ -288,5 +300,5 @@ def test_querier_over_xor_store_matches_raw(spark):
                 matchers=[Matcher("job", "!=", "kubelet")], labels=LABELS
             ).collect()
         )
-    assert out["raw"] == out["xor"]
-    assert len(out["raw"]) == 3 * 6  # 3 surviving series x 6 samples
+    assert out["arrays"] == out["xor"] == out["foreign"]
+    assert len(out["arrays"]) == 3 * 6  # 3 surviving series x 6 samples

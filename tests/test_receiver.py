@@ -8,10 +8,9 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from tsdb_parquet_spark.chunks import decode_chunk_udf
+from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
 from tsdb_parquet_spark.querier import ChunkQuerier
 from tsdb_parquet_spark.remote_write import encode_write_request, frame_payload
-from tsdb_parquet_spark.schema import CHUNK_BYTES
 from tsdb_parquet_spark.scrape import format_exposition
 from tsdb_parquet_spark.streaming.receiver import (
     remote_write_spool_ingestor,
@@ -56,8 +55,8 @@ def _expected(series):
 def _store_totals(spark, compact):
     q = ChunkQuerier.from_parquet(spark, compact)
     row = (
-        q.chunks.select(
-            F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s")
+        q.chunks.transform(with_sample_arrays).select(
+            F.explode(sample_structs()).alias("s")
         )
         .agg(F.count("*").alias("n"), F.sum("s.value").alias("total"))
         .collect()[0]

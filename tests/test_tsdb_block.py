@@ -183,7 +183,7 @@ def test_block_to_chunk_frame_end_to_end(spark):
     frame drops straight into ChunkQuerier."""
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.operators.selection import Matcher
     from tsdb_parquet_spark.querier import ChunkQuerier
     from tsdb_parquet_spark.schema import CHUNK_BYTES, SERIES_ID
@@ -200,8 +200,8 @@ def test_block_to_chunk_frame_end_to_end(spark):
     ids = sorted(r[SERIES_ID] for r in rows)
     assert ids == [0, 1, 2, 3]  # dense, label-sorted, file-local
 
-    decoded = frame.select(
-        "job", "shard", F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s")
+    decoded = frame.transform(with_sample_arrays).select(
+        "job", "shard", F.explode(sample_structs()).alias("s")
     )
     got = {
         (r["job"], r["shard"]): r["n"]
@@ -240,8 +240,8 @@ def test_blocks_to_chunk_frame_multi_block_farm(spark):
     heterogeneous label schemas ""-fill."""
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES, SERIES_ID
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
+    from tsdb_parquet_spark.schema import SERIES_ID
 
     dirs = []
     all_samples = {}  # (block, job, shard) -> (ts, vals)
@@ -289,10 +289,10 @@ def test_blocks_to_chunk_frame_multi_block_farm(spark):
     assert {r["extra"] for r in rows if r[SERIES_ID] >> 32 == 2} == {"yes"}
     assert {r["extra"] for r in rows if r[SERIES_ID] >> 32 < 2} == {""}
 
-    decoded = frame.select(
+    decoded = frame.transform(with_sample_arrays).select(
         F.shiftrightunsigned(F.col(SERIES_ID), 32).alias("blk"),
         "shard",
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s"),
+        F.explode(sample_structs()).alias("s"),
     )
     got = {
         (r["blk"], r["shard"]): (r["n"], round(r["sv"], 3))
@@ -390,8 +390,7 @@ def test_cli_convert_block_input(spark):
 
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
 
     d = _block_dir("cli_convert")
     series = _sample_series()
@@ -408,8 +407,8 @@ def test_cli_convert_block_input(spark):
     assert proc.returncode == 0, proc.stderr[-2000:]
     store = spark.read.parquet(os.path.join(out, "compact"))
     assert store.count() == 4  # one chunk per series
-    n = store.select(
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s")
+    n = store.transform(with_sample_arrays).select(
+        F.explode(sample_structs()).alias("s")
     ).count()
     assert n == 4 * 40  # every sample survives the CLI round trip
 
@@ -486,8 +485,8 @@ def test_sync_blocks_incremental_idempotent(spark):
     batches, and re-runs are no-ops."""
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES, SERIES_ID
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
+    from tsdb_parquet_spark.schema import SERIES_ID
     from tsdb_parquet_spark.sources.writer import read_roots
     from tsdb_parquet_spark.tsdb_block import discover_blocks, sync_blocks
 
@@ -524,10 +523,10 @@ def test_sync_blocks_incremental_idempotent(spark):
     assert len(r3["skipped"]) == 3
 
     df = read_roots(spark, [r1["part"], r2["part"]])
-    rows = df.select(
+    rows = df.transform(with_sample_arrays).select(
         SERIES_ID,
         "blockname",
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s"),
+        F.explode(sample_structs()).alias("s"),
     )
     got = {
         (r["blockname"], r["blk"]): (r["n"], r["sv"])
@@ -545,48 +544,54 @@ def test_sync_blocks_incremental_idempotent(spark):
     }
 
 
-def test_sync_recode_raw_is_lossless_and_arrow_fast_path(spark):
-    """sync_blocks(recode='raw'): the store's chunk bytes become the
-    raw batch-decodable layout (is_raw_chunk True for every blob), and
-    every sample survives the XOR->raw rewrite bit-exactly."""
+def test_sync_blocks_imports_xor_as_arrays(spark):
+    """sync_blocks: the store's part carries the ``__ts``/``__values``
+    arrays (no blob column survives the import), and every sample
+    survives the XOR->arrays conversion bit-exactly, per chunk row."""
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
     from tsdb_parquet_spark.schema import CHUNK_BYTES
     from tsdb_parquet_spark.tsdb_block import sync_blocks
-    from tsdb_parquet_spark.xorchunk import is_raw_chunk
 
-    data_dir = _block_dir("recode_data")
-    store = os.path.join(WORK, "recode_store")
+    data_dir = _block_dir("import_data")
+    store = os.path.join(WORK, "import_store")
     shutil.rmtree(store, ignore_errors=True)
     series = _sample_series()
     d = os.path.join(data_dir, "b0")
     os.makedirs(d, exist_ok=True)
     write_block(d, [(labels, chs) for labels, chs, _ in series])
 
-    r = sync_blocks(
-        spark, data_dir, store, ["__name__", "job", "shard"], recode="raw"
-    )
+    r = sync_blocks(spark, data_dir, store, ["__name__", "job", "shard"])
     df = spark.read.parquet(r["part"])
-    blobs = [row[CHUNK_BYTES] for row in df.select(CHUNK_BYTES).collect()]
-    assert blobs and all(is_raw_chunk(b) for b in blobs)
+    assert CHUNK_BYTES not in df.columns
+    assert dict(df.dtypes)["__ts"] == "array<bigint>"
+    assert dict(df.dtypes)["__values"] == "array<double>"
 
-    decoded = df.select(
-        "job", "shard",
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s"),
-    )
     for labels, _, (ts, vals) in series:
-        back = (
-            decoded.filter(
+        rows = (
+            df.filter(
                 (F.col("job") == labels["job"])
                 & (F.col("shard") == labels["shard"])
             )
-            .orderBy("s.ts")
-            .select("s.ts", "s.value")
+            .orderBy("__mint")
+            .select("__mint", "__maxt", "__ts", "__values")
             .collect()
         )
-        assert [x["ts"] for x in back] == list(ts)
-        assert [x["value"] for x in back] == list(vals)
+        assert rows
+        for row in rows:
+            # each chunk row: sorted, equal-length, bounds = its samples
+            assert len(row["__ts"]) == len(row["__values"])
+            assert row["__ts"] == sorted(row["__ts"])
+            assert (row["__mint"], row["__maxt"]) == (
+                row["__ts"][0], row["__ts"][-1]
+            )
+        back_ts = [t for row in rows for t in row["__ts"]]
+        back_vals = [v for row in rows for v in row["__values"]]
+        assert back_ts == list(ts)
+        assert np.array_equal(
+            np.asarray(back_vals, np.float64).view(np.int64),
+            np.asarray(vals, np.float64).view(np.int64),
+        )
 
 
 def test_sync_crash_between_part_and_sidecar_no_duplicates(spark):
@@ -595,8 +600,7 @@ def test_sync_crash_between_part_and_sidecar_no_duplicates(spark):
     same batch-keyed part — not publish a second copy of the batch."""
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.sources.writer import (
         SortedParquetWriter,
         WriterOptions,
@@ -626,7 +630,7 @@ def test_sync_crash_between_part_and_sidecar_no_duplicates(spark):
     assert writer.part_dirs == [r1["part"]]  # one live part, no dupes
     total = (
         read_roots(spark, writer.part_dirs)
-        .select(F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s"))
+        .transform(with_sample_arrays).select(F.explode(sample_structs()).alias("s"))
         .count()
     )
     assert total == 4 * 40  # exactly one copy of every sample
@@ -694,15 +698,15 @@ def test_export_block_roundtrip(spark):
     # read back through the FORWARD converter: bit-level format check
     # (index walk, CRC-verified records) + sample-level losslessness
     back = block_to_chunk_frame(spark, d)
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     import pyspark.sql.functions as F
 
     got = sorted(
         (r["__name__"], r["event_type"], r["shard"], r["s"]["ts"],
          r["s"]["value"])
-        for r in back.select(
+        for r in back.transform(with_sample_arrays).select(
             "__name__", "event_type", "shard",
-            F.explode(decode_chunk_udf(F.col("__chunk_bytes"))).alias("s"),
+            F.explode(sample_structs()).alias("s"),
         ).collect()
     )
     from tsdb_parquet_spark.chunks import decode_samples
@@ -784,8 +788,7 @@ def test_cli_export_roundtrip(spark):
 
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
 
     d = _block_dir("cli_export_src")
     series = _sample_series()
@@ -812,12 +815,12 @@ def test_cli_export_roundtrip(spark):
     assert meta["ulid"] == ulid and meta["stats"]["numSeries"] == 4
 
     back = block_to_chunk_frame(spark, out)
-    got = back.select(
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s")
+    got = back.transform(with_sample_arrays).select(
+        F.explode(sample_structs()).alias("s")
     ).agg(F.count("*"), F.round(F.sum("s.value"), 3)).collect()[0]
     src = block_to_chunk_frame(spark, d)
-    want = src.select(
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s")
+    want = src.transform(with_sample_arrays).select(
+        F.explode(sample_structs()).alias("s")
     ).agg(F.count("*"), F.round(F.sum("s.value"), 3)).collect()[0]
     assert tuple(got) == tuple(want) == (160, want[1])
 
@@ -839,7 +842,7 @@ def test_export_blocks_time_partitioned(spark):
 
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.tsdb_block import export_blocks
 
     day = 24 * 3600 * 1000
@@ -865,7 +868,7 @@ def test_export_blocks_time_partitioned(spark):
         ["__name__", "event_type", "shard"],
     )
     got = (
-        farm.select(F.explode(decode_chunk_udf(F.col("__chunk_bytes"))).alias("s"))
+        farm.transform(with_sample_arrays).select(F.explode(sample_structs()).alias("s"))
         .agg(F.count("*"), F.round(F.sum("s.value"), 3))
         .collect()[0]
     )
@@ -879,7 +882,7 @@ def test_export_blocks_then_sync_back_full_circle(spark):
     and the circle is lossless."""
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.tsdb_block import (
         discover_blocks,
         export_blocks,
@@ -900,12 +903,12 @@ def test_export_blocks_then_sync_back_full_circle(spark):
     assert len(r["converted"]) == 3
     back = spark.read.parquet(r["part"])
     got = (
-        back.select(F.explode(decode_chunk_udf(F.col("__chunk_bytes"))).alias("s"))
+        back.transform(with_sample_arrays).select(F.explode(sample_structs()).alias("s"))
         .agg(F.count("*"), F.round(F.sum("s.value"), 3))
         .collect()[0]
     )
     want = (
-        frame.select(F.explode(decode_chunk_udf(F.col("__chunk_bytes"))).alias("s"))
+        frame.transform(with_sample_arrays).select(F.explode(sample_structs()).alias("s"))
         .agg(F.count("*"), F.round(F.sum("s.value"), 3))
         .collect()[0]
     )
@@ -992,7 +995,7 @@ def test_compact_blocks_merges_dedups_and_applies_tombstones(spark):
     forward converter."""
     import json
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.tsdb_block import (
         compact_blocks,
         read_index,
@@ -1040,8 +1043,8 @@ def test_compact_blocks_merges_dedups_and_applies_tombstones(spark):
     back = block_to_chunk_frame(spark, out_dir)
     got = {
         r["s"]["ts"]: r["s"]["value"]
-        for r in back.select(
-            F.explode(decode_chunk_udf(F.col("__chunk_bytes"))).alias("s")
+        for r in back.transform(with_sample_arrays).select(
+            F.explode(sample_structs()).alias("s")
         ).collect()
     }
     want = {}
@@ -1122,7 +1125,7 @@ def test_compact_blocks_resolves_stone_refs_executor_side(
     from pyspark.sql import functions as F
 
     from tsdb_parquet_spark import tsdb_block as tb
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
 
     hour = 3_600_000
     parent_in = str(tmp_path / "in")
@@ -1167,9 +1170,11 @@ def test_compact_blocks_resolves_stone_refs_executor_side(
     _, out_dir = blocks[0]
     got = sorted(
         (r["job"], r["s"]["ts"], r["s"]["value"])
-        for r in tb.block_to_chunk_frame(spark, out_dir).select(
+        for r in tb.block_to_chunk_frame(spark, out_dir)
+        .transform(with_sample_arrays)
+        .select(
             "job",
-            F.explode(decode_chunk_udf(F.col("__chunk_bytes"))).alias("s"),
+            F.explode(sample_structs()).alias("s"),
         ).collect()
     )
     # each block lost exactly its first sample to its own stone
@@ -1193,7 +1198,7 @@ def test_maintain_block_farm_downsample_then_retention(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.tsdb_block import (
         discover_blocks,
         maintain_block_farm,
@@ -1242,8 +1247,8 @@ def test_maintain_block_farm_downsample_then_retention(spark, tmp_path):
     got = sorted(
         (r["__name__"], r["s"]["ts"], r["s"]["value"])
         for r in blocks_to_chunk_frame(spark, rolled, ["__name__", "job"])
-        .select("__name__", F.explode(
-            decode_chunk_udf(F.col("__chunk_bytes"))).alias("s"))
+        .transform(with_sample_arrays).select("__name__", F.explode(
+            sample_structs()).alias("s"))
         .filter(F.col("__name__").isin("m:sum", "m:count"))
         .collect()
     )

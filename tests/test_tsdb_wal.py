@@ -328,8 +328,8 @@ def test_data_dir_to_chunk_frame_unions_blocks_and_wal(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES, SERIES_ID
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
+    from tsdb_parquet_spark.schema import SERIES_ID
     from tsdb_parquet_spark.tsdb_block import write_block
     from tsdb_parquet_spark.tsdb_wal import data_dir_to_chunk_frame
     from tsdb_parquet_spark.xorchunk import encode_xor_chunk
@@ -359,10 +359,10 @@ def test_data_dir_to_chunk_frame_unions_blocks_and_wal(spark, tmp_path):
     frame = data_dir_to_chunk_frame(
         spark, data_dir, ["__name__", "job"], chunk_span_ms=10_000
     )
-    decoded = frame.select(
+    decoded = frame.transform(with_sample_arrays).select(
         SERIES_ID,
         "job",
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s"),
+        F.explode(sample_structs()).alias("s"),
     ).collect()
     got = sorted((r["job"], r["s"]["ts"], r["s"]["value"]) for r in decoded)
     assert got == [
@@ -1104,7 +1104,8 @@ def test_data_dir_block_pruning_by_query_window(spark, tmp_path):
         mint=10 * day, maxt=11 * day,
     )
     assert empty.count() == 0
-    assert "__chunk_bytes" in empty.columns
+    assert dict(empty.dtypes)["__ts"] == "array<bigint>"
+    assert dict(empty.dtypes)["__values"] == "array<double>"
 
 
 # -- round-10 advice fixes ----------------------------------------------------
@@ -1292,8 +1293,7 @@ def test_data_dir_select_pushes_into_blocks_and_wal(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.tsdb_block import write_block
     from tsdb_parquet_spark.tsdb_wal import data_dir_to_chunk_frame
     from tsdb_parquet_spark.xorchunk import encode_xor_chunk
@@ -1322,9 +1322,9 @@ def test_data_dir_select_pushes_into_blocks_and_wal(spark, tmp_path):
         spark, data_dir, ["__name__", "job"], chunk_span_ms=10_000,
         select={"__name__": ["m"]},
     )
-    decoded = frame.select(
+    decoded = frame.transform(with_sample_arrays).select(
         "__name__",
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s"),
+        F.explode(sample_structs()).alias("s"),
     ).collect()
     got = sorted((r["__name__"], r["s"]["ts"], r["s"]["value"])
                  for r in decoded)

@@ -120,3 +120,53 @@ def test_bloom_filter_written(spark, sf_smoke):
     assert offsets["l_orderkey"] > 0, offsets
     # non-bloom columns must not carry one
     assert offsets["l_partkey"] == -1
+
+
+def test_partition_count_capped_by_estimated_bytes(spark):
+    """A spark.range-derived frame whose plan estimate is far off (a
+    cross join's sizeInBytes is the PRODUCT of its inputs') must not
+    turn narrow rows into a huge file count: unless the caller counted
+    the rows, every file carries at least MIN_FILE_BYTES of the plan's
+    byte estimate.  A caller-counted frame keeps its exact sizing."""
+    from tsdb_parquet_spark.sources.writer import (
+        MIN_FILE_BYTES,
+        _est_row_bytes,
+        _partition_count,
+    )
+
+    series = spark.range(1000).withColumnRenamed("id", "sid")
+    steps = spark.range(2880).withColumnRenamed("id", "k")
+    df = series.crossJoin(steps).select(
+        F.col("sid").cast("string").alias("host"),
+        (F.col("k") * 60_000).alias("ts"),
+        F.rand(1).alias("value"),
+    )
+    opts = WriterOptions(sort_columns=["host", "ts"])
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    from_rows = size * 4 // _est_row_bytes(df) // opts.rows_per_part
+    parts = _partition_count(df, opts)
+    assert parts <= -(-size // MIN_FILE_BYTES)
+    assert parts * 2 < from_rows  # the row estimate alone asked for more
+    # the true row count sizes exactly: 2.88M rows / 256Ki rows per part
+    assert _partition_count(df, opts, n_rows=2_880_000) == 11
+
+
+def test_explicit_file_compression_factor_is_honored(spark):
+    """An operator's explicit fileCompressionFactor — 1.0 included — is
+    used as set; only an unset conf falls back to the 4x default."""
+    from tsdb_parquet_spark.sources.writer import _compression_factor
+
+    key = "spark.sql.sources.fileCompressionFactor"
+    before = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        assert _compression_factor(spark) == 4.0
+        spark.conf.set(key, "1.0")
+        assert _compression_factor(spark) == 1.0
+        spark.conf.set(key, "2.5")
+        assert _compression_factor(spark) == 2.5
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)

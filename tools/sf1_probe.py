@@ -694,12 +694,11 @@ def main() -> None:
         # single-block driver-parsed shape, full decode both ways.
         from pyspark.sql import functions as F
 
-        from tsdb_parquet_spark.chunks import decode_chunk_udf
+        from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
         from tsdb_parquet_spark.corpus import (
             _events_tsdb_block,
             _events_tsdb_block_farm,
         )
-        from tsdb_parquet_spark.schema import CHUNK_BYTES
         from tsdb_parquet_spark.tsdb_block import (
             block_to_chunk_frame,
             blocks_to_chunk_frame,
@@ -715,11 +714,8 @@ def main() -> None:
 
         def decode_all(frame):
             return (
-                frame.select(
-                    F.explode(
-                        decode_chunk_udf(F.col(CHUNK_BYTES))
-                    ).alias("s")
-                )
+                with_sample_arrays(frame)
+                .select(F.explode(sample_structs()).alias("s"))
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()[0]["n"]
             )

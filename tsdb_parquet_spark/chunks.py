@@ -1,4 +1,4 @@
-"""Chunk encode/decode + ingestion from a samples table (reference S4 + M3).
+"""Chunk payloads + ingestion from a samples table (reference S4 + M3).
 
 The reference converts a Prometheus TSDB block into one Parquet row per
 chunk (`cmd/convert/main.go:23-126`): series labels, file-local
@@ -7,15 +7,25 @@ payload is a Prometheus XOR chunk of ~120 samples (`db/writer_test.go:
 145-150`); its sample decoder was never implemented
 (`prometheus/chunks_iterator.go:8-41`).
 
-We define our own deterministic chunk encoding (we go further than the
-reference: decode is real):
+Our store keeps a chunk's samples as two Parquet-native repeated columns
+instead of an opaque blob: ``__ts array<bigint>`` and ``__values
+array<double>``, equal length, sorted by timestamp.  Parquet's
+repetition/definition levels (Dremel) encode them, the vectorized reader
+decodes them, and both directions stay in the JVM:
 
-    uint32 LE sample count, then count * (int64 LE ts_ms, float64 LE value)
+- encode (:func:`samples_to_chunks`): one shuffle on (series, time
+  bucket), ``array_sort(collect_list(struct(ts, value)))`` and the two
+  field projections of that sorted array;
+- decode (:func:`chunks_to_samples`): ``explode(arrays_zip(__ts,
+  __values))``.
 
-Encoding runs as ``applyInPandas`` over (series, time-bucket) groups — one
-shuffle on the chunk key, arbitrarily parallel, no driver state.  Decoding
-is a vectorized pandas UDF returning ``array<struct<ts,value>>`` + an
-``explode`` — the Spark-native late materialization of sample data.
+Blobs remain the import/export format.  A ``__chunk_bytes`` column holds
+either the engine's earlier raw layout (``uint32 LE count, then count x
+(int64 LE ts_ms, float64 LE value)``) or a Prometheus XOR chunk; the one
+Arrow function :func:`blobs_to_arrays` turns either into the two arrays
+at every import boundary (:func:`with_sample_arrays`), and
+:func:`encode_xor_chunk_udf` produces XOR blobs from the arrays for the
+export paths (remote-read chunk streaming, TSDB block export).
 """
 
 from __future__ import annotations
@@ -25,29 +35,42 @@ from typing import Sequence
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
 
-from tsdb_parquet_spark.schema import CHUNK_BYTES, MAX_T, MIN_T, SERIES_ID
+from tsdb_parquet_spark.schema import (
+    CHUNK_BYTES,
+    MAX_T,
+    MIN_T,
+    SERIES_ID,
+    TS_ARRAY,
+    VALUES_ARRAY,
+)
 
 #: default chunk span: one day of samples per chunk (the reference targets
 #: ~120 samples/chunk; span is the knob at ingest time)
 DEFAULT_CHUNK_SPAN_MS = 24 * 3600 * 1000
 
-SAMPLE_STRUCT = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("ts", T.LongType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
-    )
+SAMPLE_ARRAYS = T.StructType(
+    [
+        T.StructField(TS_ARRAY, T.ArrayType(T.LongType(), False), False),
+        T.StructField(VALUES_ARRAY, T.ArrayType(T.DoubleType(), False), False),
+    ]
 )
 
 
+_TS_LIST = pa.list_(pa.field("element", pa.int64(), nullable=False))
+_VALUES_LIST = pa.list_(pa.field("element", pa.float64(), nullable=False))
+_SAMPLE_FIELDS = [
+    pa.field(TS_ARRAY, _TS_LIST, nullable=False),
+    pa.field(VALUES_ARRAY, _VALUES_LIST, nullable=False),
+]
+
+
 def encode_samples(ts_ms: np.ndarray, values: np.ndarray) -> bytes:
-    """Pack sorted samples into the chunk byte format."""
+    """Pack sorted samples into the raw blob layout."""
     n = len(ts_ms)
     out = bytearray(struct.pack("<I", n))
     buf = np.empty(2 * n, dtype=np.int64)
@@ -63,151 +86,106 @@ def decode_samples(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
     return buf[0::2].copy(), buf[1::2].copy().view(np.float64)
 
 
-@arrow_udf(SAMPLE_STRUCT)
-def decode_chunk_udf(blobs: pa.Array) -> pa.Array:
-    """Arrow-native chunk decode (the reference's equivalent sample
-    iterator is a stub — `prometheus/chunks_iterator.go:12-24`).
-
-    The hot kernel of every sample query: builds the whole batch's
-    ``array<struct<ts,value>>`` column as ONE pyarrow ListArray over flat
-    numpy buffers — zero per-sample Python objects (a dict-per-sample
-    formulation is ~10x slower and dominated every scan at 100 TB scale).
-    The only Python loop is per-chunk (copying each blob's payload into
-    the flat buffer), not per-sample.
-
-    Codec auto-detection per blob: the engine's raw layout is
-    self-describing by exact length (``xorchunk.is_raw_chunk``);
-    anything else decodes as a Prometheus/Gorilla XOR chunk — so a
-    parquet file written by the reference's ``cmd/convert``
-    (`schema/chunk.go:35-36`, real XOR payloads per
-    `db/writer_test.go:145-150`) reads through the same scan plan,
-    which the reference itself never could (its iterator is the stub
-    above)."""
+@arrow_udf(SAMPLE_ARRAYS)
+def blobs_to_arrays(blobs: pa.Array) -> pa.Array:
+    """Chunk blobs -> ``struct<__ts, __values>``, the import-boundary
+    decode.  The codec is detected per blob: the raw layout is
+    self-describing by exact length (``xorchunk.is_raw_chunk``) and
+    slices zero-copy out of the batch's data buffer; anything else
+    decodes as a Prometheus/Gorilla XOR chunk, so a parquet file written
+    by the reference's ``cmd/convert`` (`schema/chunk.go:35-36`) imports
+    through the same function.  The only Python loop is per chunk; the
+    output is two ListArrays over flat numpy buffers."""
     from tsdb_parquet_spark.xorchunk import decode_xor_chunk
 
     if isinstance(blobs, pa.ChunkedArray):
         blobs = blobs.combine_chunks()
+    if len(blobs) == 0:
+        return pa.array([], pa.struct(_SAMPLE_FIELDS))
     # explicit buffer math (BinaryArray has no .offsets accessor):
     # buffers() = [validity, byte-offsets, data]; honor the slice offset
     # and both 32-bit (binary) and 64-bit (large_binary) offset widths
     off_dtype = np.int64 if pa.types.is_large_binary(blobs.type) else np.int32
     off_buf = np.frombuffer(blobs.buffers()[1], dtype=off_dtype)
     bounds = off_buf[blobs.offset : blobs.offset + len(blobs) + 1]
-    starts = bounds[:-1]
     mem = memoryview(blobs.buffers()[2])
     counts = np.empty(len(blobs), dtype=np.int64)
-    flat_parts = []
+    ts_parts, val_parts = [], []
     for i in range(len(blobs)):
-        base = starts[i]
+        base = bounds[i]
         blob_len = bounds[i + 1] - base
-        if blob_len >= 4:
-            (n,) = struct.unpack_from("<I", mem, base)
+        n = struct.unpack_from("<I", mem, base)[0] if blob_len >= 4 else -1
+        if blob_len == 4 + 16 * n:
+            pairs = np.frombuffer(mem, dtype=np.int64, count=2 * n, offset=base + 4)
+            ts, vals = pairs[0::2], pairs[1::2].view(np.float64)
         else:
-            n = -1
-        if blob_len == 4 + 16 * n:  # raw layout: zero-copy slice
-            counts[i] = n
-            flat_parts.append(
-                np.frombuffer(mem, dtype=np.int64, count=2 * n, offset=base + 4)
-            )
-            continue
-        ts, vals = decode_xor_chunk(bytes(mem[base : base + blob_len]))
+            ts, vals = decode_xor_chunk(bytes(mem[base : base + blob_len]))
         counts[i] = len(ts)
-        interleaved = np.empty(2 * len(ts), dtype=np.int64)
-        interleaved[0::2] = ts
-        interleaved[1::2] = vals.view(np.int64)
-        flat_parts.append(interleaved)
-    flat = (
-        np.concatenate(flat_parts) if flat_parts else np.empty(0, np.int64)
-    )
-    ts = flat[0::2]
-    vals = flat[1::2].view(np.float64)
+        ts_parts.append(ts)
+        val_parts.append(vals)
     offsets = np.zeros(len(blobs) + 1, dtype=np.int32)
     np.cumsum(counts, out=offsets[1:])
-    struct_arr = pa.StructArray.from_arrays(
-        [pa.array(ts, pa.int64()), pa.array(vals, pa.float64())],
-        fields=[
-            pa.field("ts", pa.int64(), nullable=False),
-            pa.field("value", pa.float64(), nullable=False),
+    offsets = pa.array(offsets, pa.int32())
+    ts, vals = pa.array(np.concatenate(ts_parts)), pa.array(np.concatenate(val_parts))
+    return pa.StructArray.from_arrays(
+        [
+            pa.ListArray.from_arrays(offsets, ts, type=_TS_LIST),
+            pa.ListArray.from_arrays(offsets, vals, type=_VALUES_LIST),
         ],
+        fields=_SAMPLE_FIELDS,
     )
-    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct_arr)
 
 
 @arrow_udf(T.BinaryType())
-def recode_chunk_udf(blobs: pa.Array) -> pa.Array:
-    """Chunk-bytes -> chunk-bytes: re-encode any XOR (Gorilla) blob into
-    the engine's raw batch-decodable layout; raw blobs pass through
-    untouched.
-
-    This is the "rewrite on ingest" pass the XOR migration-economics
-    guidance prescribes: pay the pure-Python XOR decode ONCE at convert
-    time, and every later scan of the store decodes at Arrow/memcpy
-    speed instead of ~0.43 Msamples/s/core.  Used by ``cli convert
-    --recode raw`` and ``sync_blocks(recode="raw")``; lossless by
-    construction (decode -> interleave -> length-prefixed raw bytes,
-    the same layout ``encode_samples`` emits), asserted round-trip in
-    tests."""
-    from tsdb_parquet_spark.xorchunk import decode_xor_chunk, is_raw_chunk
-
-    if isinstance(blobs, pa.ChunkedArray):
-        blobs = blobs.combine_chunks()
-    out = []
-    for i in range(len(blobs)):
-        blob = blobs[i].as_py()
-        if blob is None or is_raw_chunk(blob):
-            out.append(blob)
-            continue
-        ts, vals = decode_xor_chunk(blob)
-        out.append(encode_samples(ts, vals))
-    return pa.array(out, pa.binary())
-
-
-@arrow_udf(T.BinaryType())
-def encode_chunk_udf(samples: pa.Array) -> pa.Array:
-    """Arrow-native chunk encode: the input is the Arrow list<struct>
-    column itself; ts/value land in flat numpy buffers via zero-copy
-    ``.field().to_numpy()`` and each blob is one interleaved-buffer slice.
-    One Arrow batch covers thousands of chunks; no per-sample Python."""
-    if isinstance(samples, pa.ChunkedArray):
-        samples = samples.combine_chunks()
-    counts = pa.compute.list_value_length(samples).to_numpy().astype(np.int64)
-    flat = samples.flatten()  # StructArray, slice-safe
-    ts = flat.field("ts").to_numpy(zero_copy_only=False).astype(np.int64)
-    vals = flat.field("value").to_numpy(zero_copy_only=False)
-    interleaved = np.empty(2 * len(ts), dtype=np.int64)
-    interleaved[0::2] = ts
-    interleaved[1::2] = vals.astype(np.float64).view(np.int64)
-    ends = np.cumsum(counts)
-    blobs = []
-    for i in range(len(counts)):
-        s, e = ends[i] - counts[i], ends[i]
-        blobs.append(
-            struct.pack("<I", int(counts[i])) + interleaved[2 * s : 2 * e].tobytes()
-        )
-    return pa.array(blobs, pa.binary())
-
-
-@arrow_udf(T.BinaryType())
-def encode_xor_chunk_udf(samples: pa.Array) -> pa.Array:
-    """Prometheus/Gorilla XOR encode (`xorchunk.py`): per-chunk Python
-    over the Arrow batch's flat buffers — the interop write path for
-    producing stores byte-compatible with the reference's converter
-    output (`cmd/convert/main.go:107`).  Use :func:`encode_chunk_udf`
-    (memcpy-speed raw layout) for engine-native stores."""
+def encode_xor_chunk_udf(ts: pa.Array, values: pa.Array) -> pa.Array:
+    """``(__ts, __values)`` -> Prometheus/Gorilla XOR blob
+    (`xorchunk.py`): per-chunk Python over the Arrow batch's flat
+    buffers — the export encoder for readers that need spec chunks
+    (remote-read streaming; byte-compatible with the reference's
+    converter output, `cmd/convert/main.go:107`)."""
     from tsdb_parquet_spark.xorchunk import encode_xor_chunk
 
-    if isinstance(samples, pa.ChunkedArray):
-        samples = samples.combine_chunks()
-    counts = pa.compute.list_value_length(samples).to_numpy().astype(np.int64)
-    flat = samples.flatten()
-    ts = flat.field("ts").to_numpy(zero_copy_only=False).astype(np.int64)
-    vals = flat.field("value").to_numpy(zero_copy_only=False).astype(np.float64)
+    if isinstance(ts, pa.ChunkedArray):
+        ts, values = ts.combine_chunks(), values.combine_chunks()
+    counts = pa.compute.list_value_length(ts).to_numpy().astype(np.int64)
+    flat_ts = ts.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+    flat_vals = values.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
     ends = np.cumsum(counts)
     blobs = []
     for i in range(len(counts)):
         s, e = ends[i] - counts[i], ends[i]
-        blobs.append(encode_xor_chunk(ts[s:e], vals[s:e]))
+        blobs.append(encode_xor_chunk(flat_ts[s:e], flat_vals[s:e]))
     return pa.array(blobs, pa.binary())
+
+
+def with_sample_arrays(chunks: DataFrame) -> DataFrame:
+    """The chunk frame with its payload as ``__ts``/``__values``: a blob
+    frame (``__chunk_bytes`` — an imported block, a reference-converted
+    file, a store written before the array layout) is converted by
+    :func:`blobs_to_arrays` in place of the blob column; an array frame
+    passes through untouched.  Every reader and writer goes through
+    here, so everything downstream sees one payload layout."""
+    if CHUNK_BYTES not in chunks.columns:
+        return chunks
+    decoded = chunks.withColumn(CHUNK_BYTES, blobs_to_arrays(F.col(CHUNK_BYTES)))
+    cols = []
+    for c in chunks.columns:
+        if c == CHUNK_BYTES:
+            cols += [
+                F.col(CHUNK_BYTES)[TS_ARRAY].alias(TS_ARRAY),
+                F.col(CHUNK_BYTES)[VALUES_ARRAY].alias(VALUES_ARRAY),
+            ]
+        else:
+            cols.append(F.col(f"`{c}`"))
+    return decoded.select(*cols)
+
+
+def sample_structs() -> Column:
+    """A chunk row's samples as ``array<struct<ts, value>>``, zipped from
+    the payload arrays in the JVM."""
+    return F.arrays_zip(
+        F.col(TS_ARRAY).alias("ts"), F.col(VALUES_ARRAY).alias("value")
+    )
 
 
 def samples_to_chunks(
@@ -217,7 +195,7 @@ def samples_to_chunks(
     value_col: str = "value",
     chunk_span_ms: int = DEFAULT_CHUNK_SPAN_MS,
     assign_series_ids: bool = True,
-    encoding: str = "raw",
+    encoding: str = "arrays",
 ) -> DataFrame:
     """Convert a samples DataFrame (int64 ms ``ts_col``, double
     ``value_col``, string label columns) into the chunk table.
@@ -228,18 +206,17 @@ def samples_to_chunks(
     `schema/chunk.go:28-30` — file-local identity).
 
     Scale: ONE shuffle — the groupBy on (series, bucket) — with the sample
-    collection, sort, and min/max all JVM-side (hash aggregate +
-    array_sort); Python only packs bytes, vectorized over whole Arrow
-    batches.  The dense_rank for series ids runs over the distinct-series
-    reduction, so its window input is |series|, not |chunks|.
+    collection, sort, min/max and the payload arrays all JVM-side (hash
+    aggregate + array_sort + field projection); no Python runs.  The
+    dense_rank for series ids runs over the distinct-series reduction, so
+    its window input is |series|, not |chunks|.
 
-    ``encoding``: ``"raw"`` (default, the engine's batch-decodable
-    layout) or ``"xor"`` (Prometheus/Gorilla bytes, interop with the
-    reference's converted blocks — readers auto-detect per blob).
+    ``encoding``: ``"arrays"`` (default, the store's ``__ts``/``__values``
+    payload) or ``"xor"`` (a ``__chunk_bytes`` Prometheus/Gorilla blob
+    per chunk, for exports that need spec chunks).
     """
-    if encoding not in ("raw", "xor"):
+    if encoding not in ("arrays", "xor"):
         raise ValueError(f"unknown chunk encoding {encoding!r}")
-    encoder = encode_chunk_udf if encoding == "raw" else encode_xor_chunk_udf
     labels = list(label_columns)
     bucket = F.expr(f"{ts_col} div {int(chunk_span_ms)}").alias("__bucket")
     # missing-label convention enforced at WRITE time (`schema/chunk.go:
@@ -261,20 +238,29 @@ def samples_to_chunks(
         # sample order contract
         F.array_sort(F.collect_list(F.struct("ts", "value"))).alias("__samples"),
     )
-    chunks = agg.withColumn(CHUNK_BYTES, encoder(F.col("__samples"))).drop(
-        "__samples"
+    chunks = agg.select(
+        *labels,
+        MIN_T,
+        MAX_T,
+        F.col("__samples")["ts"].alias(TS_ARRAY),
+        F.col("__samples")["value"].alias(VALUES_ARRAY),
+    )
+    payload = (
+        [encode_xor_chunk_udf(TS_ARRAY, VALUES_ARRAY).alias(CHUNK_BYTES)]
+        if encoding == "xor"
+        else [TS_ARRAY, VALUES_ARRAY]
     )
 
     if not assign_series_ids:
         # streaming parts defer id assignment to compaction —
         # `__series__id` is file-local identity (`schema/chunk.go:28-30`)
-        return chunks.select(MIN_T, MAX_T, CHUNK_BYTES, *sorted(labels))
+        return chunks.select(MIN_T, MAX_T, *payload, *sorted(labels))
 
     series_ids = dense_series_ids(chunks.select(*labels).distinct(), labels)
     # no broadcast hint: one row per distinct series can exceed driver
     # memory at 100M+ series — AQE broadcasts only when actually small
     return chunks.join(series_ids, on=labels, how="inner").select(
-        SERIES_ID, MIN_T, MAX_T, CHUNK_BYTES, *sorted(labels)
+        SERIES_ID, MIN_T, MAX_T, *payload, *sorted(labels)
     )
 
 
@@ -346,11 +332,16 @@ def dense_series_ids(series: DataFrame, label_columns: Sequence[str]) -> DataFra
 
 
 def chunks_to_samples(chunks: DataFrame, label_columns: Sequence[str]) -> DataFrame:
-    """Inverse of :func:`samples_to_chunks`: decode + explode back to
-    (labels..., ts, value) rows."""
+    """Inverse of :func:`samples_to_chunks`: explode the payload arrays
+    back to (labels..., ts, value) rows.  A blob frame is converted first
+    (:func:`with_sample_arrays`), so every source ends in the same JVM
+    ``explode(arrays_zip(...))``."""
     labels = list(label_columns)
-    decoded = chunks.select(
-        *labels, F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s")
+    exploded = with_sample_arrays(chunks).select(
+        *[F.col(f"`{c}`") for c in labels], F.explode(sample_structs()).alias("s")
     )
-    return decoded.select(*labels, F.col("s.ts").alias("ts"),
-                          F.col("s.value").alias("value"))
+    return exploded.select(
+        *[F.col(f"`{c}`") for c in labels],
+        F.col("s.ts").alias("ts"),
+        F.col("s.value").alias("value"),
+    )

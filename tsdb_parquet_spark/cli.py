@@ -236,21 +236,7 @@ def cmd_convert(args) -> int:
             # expanded native-histogram series carry the classic `le`
             # label; float chunks fill it "" (missing-label convention)
             in_labels = in_labels + ["le"]
-        frame = data_dir_to_chunk_frame(
-            spark,
-            args.data_dir,
-            in_labels,
-            wal_encoding="raw" if args.recode == "raw" else "xor",
-        )
-        if args.recode == "raw":
-            from pyspark.sql import functions as F
-
-            from tsdb_parquet_spark.chunks import recode_chunk_udf
-            from tsdb_parquet_spark.schema import CHUNK_BYTES
-
-            frame = frame.withColumn(
-                CHUNK_BYTES, recode_chunk_udf(F.col(CHUNK_BYTES))
-            )
+        frame = data_dir_to_chunk_frame(spark, args.data_dir, in_labels)
         labels = label_columns(frame.schema)
         opts = WriterOptions(
             sort_columns=sort_columns(labels),
@@ -321,17 +307,6 @@ def cmd_convert(args) -> int:
         else:
             frame = blocks_to_chunk_frame(
                 spark, args.block, args.labels.split(",")
-            )
-        if args.recode == "raw":
-            # rewrite-on-ingest: pay the XOR decode once here so every
-            # later scan of the store decodes at Arrow speed
-            from pyspark.sql import functions as F
-
-            from tsdb_parquet_spark.chunks import recode_chunk_udf
-            from tsdb_parquet_spark.schema import CHUNK_BYTES
-
-            frame = frame.withColumn(
-                CHUNK_BYTES, recode_chunk_udf(F.col(CHUNK_BYTES))
             )
         labels = label_columns(frame.schema)
         opts = WriterOptions(
@@ -565,7 +540,6 @@ def cmd_sync(args) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     result = sync_blocks(
         spark, args.data_dir, args.store, args.labels.split(","),
-        recode=args.recode,
     )
     print(
         f"# converted {len(result['converted'])} block(s), skipped "
@@ -582,7 +556,6 @@ def cmd_sync(args) -> int:
         if wal_dir is not None:
             head = sync_wal(
                 spark, wal_dir, args.store, args.labels.split(","),
-                encoding="raw" if args.recode == "raw" else "xor",
             )
             print(
                 f"# head: {head['samples']} new sample(s)"
@@ -1146,12 +1119,6 @@ def main(argv: list[str] | None = None) -> int:
              "(wal/ segments + latest checkpoint) — nothing in the "
              "installation is left behind",
     )
-    conv.add_argument(
-        "--recode", choices=["raw"], default=None,
-        help="block input only: re-encode XOR chunks into the raw "
-             "batch-decodable layout during convert (pay the decode "
-             "once; later scans run at Arrow speed)",
-    )
     conv.add_argument("--out", required=True)
     conv.add_argument("--labels", default="__name__,event_type")
     conv.add_argument("--metric-name", default="app_events")
@@ -1223,10 +1190,6 @@ def main(argv: list[str] | None = None) -> int:
     sync.add_argument("--data-dir", required=True)
     sync.add_argument("--store", required=True)
     sync.add_argument("--labels", default="__name__,event_type,shard")
-    sync.add_argument(
-        "--recode", choices=["raw"], default=None,
-        help="re-encode XOR chunks to the raw layout during sync",
-    )
     sync.add_argument(
         "--blocks-only", action="store_true",
         help="skip the head-WAL drain (blocks only, the pre-WAL behavior)",

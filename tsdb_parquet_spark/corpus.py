@@ -407,7 +407,7 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # The events table is converted into the reference's chunk-per-row layout
 # (`schema/chunk.go:25-37`): labels (__name__, event_type, shard), one chunk
-# per (series, day), samples encoded into __chunk_bytes; written through the
+# per (series, day), samples in the __ts/__values arrays; written through the
 # sorted-part writer and queried back through ChunkQuerier.  The oracle
 # reproduces the chunking math in plain SQL over the raw events.
 
@@ -441,7 +441,7 @@ def events_chunk_store(spark: SparkSession, sf_dir: str) -> str:
     work = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".work")
     # version tag guards against stale cached stores when the chunk format
     # or store layout changes across rounds
-    root = os.path.join(work, f"chunk_store_v3_{tag}")
+    root = os.path.join(work, f"chunk_store_v4_{tag}")
     compact_dir = os.path.join(root, "compact")
     if os.path.exists(os.path.join(compact_dir, "_SUCCESS")):
         return compact_dir
@@ -525,7 +525,7 @@ ORDER BY s.event_type""",
 def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3: full sample round-trip through the chunk layout — select chunks
     (containment window + != matcher, which the reference mishandles,
-    `prometheus/querier.go:71-73`), decode __chunk_bytes, explode, and
+    `prometheus/querier.go:71-73`), explode the __ts/__values arrays, and
     aggregate.  Hash-matching the raw events proves the encode/write/
     compact/scan/decode cycle is lossless."""
     from tsdb_parquet_spark.operators.selection import Matcher
@@ -1351,7 +1351,7 @@ def events_rollup_store(spark: SparkSession, sf_dir: str) -> str:
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     work = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".work")
-    dest = os.path.join(work, f"rollup_store_v2_{tag}")
+    dest = os.path.join(work, f"rollup_store_v3_{tag}")
     if os.path.exists(os.path.join(dest, "_SUCCESS")):
         return dest
     src = events_chunk_store(spark, sf_dir)
@@ -1424,7 +1424,7 @@ def _multi_label_stores(spark: SparkSession, sf_dir: str) -> list[str]:
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     work = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".work")
-    root = os.path.join(work, f"multistore_v1_{tag}")
+    root = os.path.join(work, f"multistore_v2_{tag}")
     out = [os.path.join(root, "store_a"), os.path.join(root, "store_b")]
     if all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in out):
         return out
@@ -1553,7 +1553,7 @@ def q44(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (`select_samples(late_materialize=True)`): a keys-only pass
     evaluates the residual regex matcher over just the label columns,
     then the surviving series-id set re-enters the payload scan as pushed
-    range + In predicates, zone-map-pruning the fat `__chunk_bytes` row
+    range + In predicates, zone-map-pruning the fat `__ts`/`__values` row
     groups of non-matching series (reference analog: filter-first page
     reads, `compute/projection.go:93-95`, `dataset/pages.go:30-64`).
     Hash-matching q17-shaped output proves the flagged path is exact."""
@@ -1706,7 +1706,7 @@ def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     tag = os.path.basename(sf_dir.rstrip("/"))
     work = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".work")
-    root = os.path.join(work, f"stream_store_v2_{tag}")
+    root = os.path.join(work, f"stream_store_v3_{tag}")
     compact_dir = os.path.join(root, "compact")
 
     if not os.path.exists(os.path.join(compact_dir, "_SUCCESS")):
@@ -4646,19 +4646,22 @@ GROUP BY s.event_type
 ORDER BY s.event_type""",
 )
 def q103(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prometheus XOR chunk interop (`xorchunk.py`): shards 0-3 encode
-    into the engine's raw layout, shards 4-7 into Gorilla/Prometheus XOR
-    bytes — the exact format the reference's converter stores verbatim
-    (`cmd/convert/main.go:107`, `schema/chunk.go:35-36`) and its own
-    iterator never decodes (`prometheus/chunks_iterator.go:12-24`) —
-    then ONE scan decodes both via per-blob codec sniffing and
-    aggregates the samples.  ``n_xor_chunks`` counts blobs whose length
-    breaks the raw layout's 4+16n self-description, pinning that the
-    XOR path actually ran (if the union silently produced raw bytes the
-    count would be 0, not the oracle's per-type day-chunk count)."""
+    """Prometheus XOR chunk interop (`xorchunk.py`): shards 0-3 chunk
+    into the store's ``__ts``/``__values`` arrays, shards 4-7 into
+    Gorilla/Prometheus XOR bytes — the exact format the reference's
+    converter stores verbatim (`cmd/convert/main.go:107`,
+    `schema/chunk.go:35-36`) and its own iterator never decodes
+    (`prometheus/chunks_iterator.go:12-24`) — which the import
+    conversion (`chunks.blobs_to_arrays`) turns into arrays; ONE union
+    then explodes both and aggregates the samples.  ``n_xor_chunks``
+    counts blobs whose length breaks the raw layout's 4+16n
+    self-description, pinning that the XOR path actually ran (if the
+    encoder silently produced raw bytes the count would be 0, not the
+    oracle's per-type day-chunk count)."""
     from tsdb_parquet_spark.chunks import (
-        decode_chunk_udf,
+        sample_structs,
         samples_to_chunks,
+        with_sample_arrays,
     )
     from tsdb_parquet_spark.schema import CHUNK_BYTES
 
@@ -4671,17 +4674,13 @@ def q103(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value"),
     )
     kw = dict(chunk_span_ms=_DAY_MS, assign_series_ids=False)
-    chunks = samples_to_chunks(
-        samples.filter(F.col("shard").cast("int") < 4), _CHUNK_LABELS, **kw
-    ).unionByName(
-        samples_to_chunks(
-            samples.filter(F.col("shard").cast("int") >= 4),
-            _CHUNK_LABELS,
-            encoding="xor",
-            **kw,
-        )
+    xor = samples_to_chunks(
+        samples.filter(F.col("shard").cast("int") >= 4),
+        _CHUNK_LABELS,
+        encoding="xor",
+        **kw,
     )
-    # replicate the decoder's sniff exactly (xorchunk.is_raw_chunk):
+    # replicate the raw-layout sniff exactly (xorchunk.is_raw_chunk):
     # length == 4 + 16 * uint32_le(bytes[0:4]).  An XOR blob's first four
     # bytes (BE16 count + varint t0 bytes with high bits set) decode to a
     # huge LE uint32, so this never collides — unlike comparing against
@@ -4693,14 +4692,16 @@ def q103(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"substring({CHUNK_BYTES}, 2, 1) || "
         f"substring({CHUNK_BYTES}, 1, 1)), 16, 10)"
     ).cast("long")
-    decoded = chunks.withColumn(
-        "__samples", decode_chunk_udf(F.col(CHUNK_BYTES))
-    ).withColumn(
+    xor = xor.withColumn(
         "__is_xor",
         (F.length(F.col(CHUNK_BYTES)) != header_n * 16 + F.lit(4)).cast(
             "int"
         ),
     )
+    chunks = samples_to_chunks(
+        samples.filter(F.col("shard").cast("int") < 4), _CHUNK_LABELS, **kw
+    ).withColumn("__is_xor", F.lit(0)).unionByName(with_sample_arrays(xor))
+    decoded = chunks.withColumn("__samples", sample_structs())
     return (
         decoded.select(
             "event_type",
@@ -4944,16 +4945,15 @@ def q105(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> distributed record fetch -> XOR decode is lossless end-to-end.
     The reference can only WRITE this layout to parquet; it cannot read
     its own chunk bytes back (`prometheus/chunks_iterator.go:12-24`)."""
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.tsdb_block import block_to_chunk_frame
 
     block_dir = _events_tsdb_block(spark, sf_dir)
     frame = block_to_chunk_frame(spark, block_dir)
-    decoded = frame.select(
+    decoded = with_sample_arrays(frame).select(
         "event_type",
         "shard",
-        F.posexplode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("pos", "s"),
+        F.posexplode(sample_structs()).alias("pos", "s"),
     )
     return (
         decoded.groupBy("event_type")
@@ -5121,7 +5121,7 @@ def _block_sync_store_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     dirs = _events_tsdb_block_farm(spark, sf_dir)
     tag = os.path.basename(sf_dir.rstrip("/"))
     work = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".work")
-    store = os.path.join(work, f"block_sync_store_v1_{tag}")
+    store = os.path.join(work, f"block_sync_store_v2_{tag}")
     parts_file = os.path.join(store, "_q107_parts.json")
     if os.path.exists(parts_file):
         with open(parts_file) as fh:
@@ -5190,15 +5190,15 @@ def q107(spark: SparkSession, sf_dir: str) -> DataFrame:
     the high 32 bits, and the aggregate over the synced store must
     hash-match DuckDB recomputing the same calendar split from raw
     events — proving the incremental farm path is lossless."""
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES, SERIES_ID
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
+    from tsdb_parquet_spark.schema import SERIES_ID
 
     frame = _block_sync_store_frame(spark, sf_dir)
-    decoded = frame.select(
+    decoded = with_sample_arrays(frame).select(
         F.shiftrightunsigned(F.col(SERIES_ID), 32).cast("int").alias("blk"),
         "event_type",
         "shard",
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s"),
+        F.explode(sample_structs()).alias("s"),
     )
     return (
         decoded.groupBy("blk", "event_type")
@@ -5423,17 +5423,17 @@ def q109(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity), and the per-origin aggregates must hash-match DuckDB
     splitting raw events at the same head boundary: nothing in the
     installation is dropped or double-counted at the block/WAL seam."""
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES, SERIES_ID
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
+    from tsdb_parquet_spark.schema import SERIES_ID
     from tsdb_parquet_spark.tsdb_wal import data_dir_to_chunk_frame
 
     data_dir = _events_data_dir(spark, sf_dir)
     frame = data_dir_to_chunk_frame(spark, data_dir, _CHUNK_LABELS)
-    decoded = frame.select(
+    decoded = with_sample_arrays(frame).select(
         "event_type",
         "shard",
         (F.col(SERIES_ID) >= (1 << 32)).cast("int").alias("from_head"),
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s"),
+        F.explode(sample_structs()).alias("s"),
     )
     return (
         decoded.groupBy("event_type", "from_head")
@@ -5910,16 +5910,15 @@ def q112(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless, so a parquet store can be handed back to any
     Prometheus-ecosystem reader (promtool/Thanos backfill) — the
     reference converter is strictly one-way (`cmd/convert/main.go`)."""
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.tsdb_block import block_to_chunk_frame
 
     block_dir = _events_export_block_dir(spark, sf_dir)
     frame = block_to_chunk_frame(spark, block_dir)
-    decoded = frame.select(
+    decoded = with_sample_arrays(frame).select(
         "event_type",
         "shard",
-        F.posexplode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("pos", "s"),
+        F.posexplode(sample_structs()).alias("pos", "s"),
     )
     return (
         decoded.groupBy("event_type")
@@ -6190,18 +6189,17 @@ def q114(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-exported.  The output block farm's decode must hash-match DuckDB
     computing the same merge relationally (dedup -> anti-interval ->
     full outer coalesce)."""
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.tsdb_block import blocks_to_chunk_frame
 
     parts = _events_compacted_blocks(spark, sf_dir)
     frame = blocks_to_chunk_frame(
         spark, parts, ["__name__", "event_type", "shard"]
     )
-    decoded = frame.select(
+    decoded = with_sample_arrays(frame).select(
         "event_type",
         "shard",
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s"),
+        F.explode(sample_structs()).alias("s"),
     )
     return (
         decoded.groupBy("event_type")
@@ -6338,8 +6336,7 @@ def q116(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match DuckDB computing the same right-closed 6h buckets over
     the raw events, proving the rollup covers everything even though
     half the raw farm is gone (downsample-before-retention)."""
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.tsdb_block import (
         blocks_to_chunk_frame,
         discover_blocks,
@@ -6351,11 +6348,11 @@ def q116(spark: SparkSession, sf_dir: str) -> DataFrame:
         discover_blocks(rollup_dir),
         ["__name__", "event_type", "shard"],
     )
-    decoded = frame.select(
+    decoded = with_sample_arrays(frame).select(
         F.col("__name__").alias("metric"),
         "event_type",
         "shard",
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s"),
+        F.explode(sample_structs()).alias("s"),
     )
     return (
         decoded.groupBy("metric", "event_type")
@@ -6468,8 +6465,7 @@ def q117(spark: SparkSession, sf_dir: str) -> DataFrame:
     events.  Closes the retro-tombstone loop: `sync_wal` REPORTS stones
     that arrived after their samples shipped; `apply_retro_tombstones`
     resolves them through the series side table and runs THIS pass."""
-    from tsdb_parquet_spark.chunks import decode_chunk_udf
-    from tsdb_parquet_spark.schema import CHUNK_BYTES
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.sources.writer import (
         live_store_dirs,
         read_roots,
@@ -6477,10 +6473,10 @@ def q117(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _events_deleted_store(spark, sf_dir)
     df = read_roots(spark, live_store_dirs(root))
-    decoded = df.select(
+    decoded = with_sample_arrays(df).select(
         "event_type",
         "shard",
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("s"),
+        F.explode(sample_structs()).alias("s"),
     )
     return (
         decoded.groupBy("event_type")

@@ -1184,15 +1184,10 @@ class _Parser:
             return PromTopK(k=int(sign * float(num)),
                             ascending=(op == "bottomk"),
                             inner=inner, by=by, without=without)
-        kind, tok = self.peek()
-        if kind == "ident" and tok in RANGE_FUNCS:
-            inner = self._func()
-        elif kind == "ident" and tok in PARAM_RANGE_FUNCS:
-            inner = self._param_range_func()
-        else:
-            # any vector expression (nested function, binary, set op...);
-            # a plain selector keeps the fused selector+agg fast path below
-            inner = self._set_or()
+        # any vector expression (range function, binary, set op...) —
+        # `sum(rate(a[5m]) / rate(b[5m]))` included; a plain selector or
+        # range function keeps the fused selector+agg fast path below
+        inner = self._set_or()
         self.expect(")")
         postfix_grouping()
         if not isinstance(inner, PromExpr):
@@ -1951,7 +1946,8 @@ class PromQLEngine:
             if node.without is not None:
                 by = [c for c in label_cols if c not in node.without]
             else:
-                by = node.by or []
+                # a label no series carries groups as absent: drop it
+                by = [c for c in node.by or [] if c in label_cols]
             return inner.groupBy("t", *by).agg(
                 _OUTER_AGGS[node.op](F.col("value")).alias("value")
             )
@@ -1961,7 +1957,8 @@ class PromQLEngine:
             if node.without is not None:
                 by = [c for c in label_cols if c not in node.without]
             else:
-                by = node.by or []
+                # a label no series carries groups as absent: drop it
+                by = [c for c in node.by or [] if c in label_cols]
             return inner.groupBy("t", *by).agg(
                 F.percentile("value", F.lit(node.phi)).alias("value")
             )
@@ -2722,7 +2719,8 @@ class PromQLEngine:
         if expr.without is not None:
             by = [c for c in series_cols if c not in expr.without]
         else:
-            by = expr.by or []
+            # a label no series carries groups as absent: drop it
+            by = [c for c in expr.by or [] if c in series_cols]
         return per_series.groupBy("t", *by).agg(
             _OUTER_AGGS[expr.agg](F.col("value")).alias("value")
         )
@@ -2766,6 +2764,11 @@ class PromQLEngine:
             by = [c for c in series_cols if c not in expr.without]
         else:
             by = expr.by or []
+        if not set(by) <= set(series_cols):
+            # a `by` label no series carries would resolve against the
+            # bucketed frame's own columns (`by (value)` = the raw sample
+            # values); the per-series path groups by labels only
+            return None
         bucketed, _, special = self._bucketed_selector(
             core, start_ms, end_ms, step_ms, lookback_ms
         )

@@ -11,8 +11,11 @@ Implements the querier semantics of `prometheus/querier.go:26-101`:
   declares them and panics — `prometheus/querier.go:93-101`).
 - ``select_chunks``: the raw filtered chunk rows (the CLI path,
   `cmd/read/main.go:95-126`).
-- ``select_samples``: select + decode + explode — real sample reads, which
-  the reference stubs (`prometheus/chunks_iterator.go:12-24`).
+- ``select_samples``: select + explode of the ``__ts``/``__values``
+  payload arrays — real sample reads, which the reference stubs
+  (`prometheus/chunks_iterator.go:12-24`).  A store whose payload is
+  still a ``__chunk_bytes`` blob (a reference-converted file) is
+  converted at the scan by `chunks.blobs_to_arrays`.
 
 Every method returns a lazy DataFrame; Catalyst pushes the matcher and time
 predicates into the Parquet scan (bloom / zone-map / dictionary pruning =
@@ -29,7 +32,6 @@ from pyspark.sql import functions as F
 from tsdb_parquet_spark.chunks import chunks_to_samples
 from tsdb_parquet_spark.operators.selection import Matcher, conjunction
 from tsdb_parquet_spark.schema import (
-    CHUNK_BYTES,
     MAX_T,
     MIN_T,
     RESERVED_COLUMNS,
@@ -146,7 +148,7 @@ class ChunkQuerier:
 
         ``late_materialize=True`` is the two-pass escape hatch for the
         reference's payload late materialization (`compute/scan.go:64-78`
-        decodes filter columns first, then reads ``__chunk_bytes`` pages
+        decodes filter columns first, then reads the payload pages
         only for surviving row ranges — `compute/projection.go:93-95`,
         `dataset/pages.go:30-64`):
 
@@ -156,7 +158,7 @@ class ChunkQuerier:
         2. the surviving ``__series__id`` set (bounded by ``max_keys``) is
            re-applied to a fresh scan as a pushed ``In`` filter, so the
            payload pass prunes row groups on the SORT-PREFIX column and
-           skips the fat chunk-bytes pages of non-matching series
+           skips the fat payload pages of non-matching series
            entirely.
 
         When the key set exceeds ``max_keys`` (unselective matchers) the
@@ -224,12 +226,10 @@ class ChunkQuerier:
             if labels is not None
             else self.label_columns
         )
+        # the explode projects labels + payload; Catalyst prunes the scan
+        # to those columns
         df = self.select_chunks(
-            mint,
-            maxt,
-            matchers,
-            columns=[*labels, CHUNK_BYTES],
-            late_materialize=late_materialize,
+            mint, maxt, matchers, late_materialize=late_materialize
         )
         return chunks_to_samples(df, labels)
 

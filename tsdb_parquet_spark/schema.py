@@ -1,10 +1,17 @@
 """Chunk-table data model (reference §1: `schema/chunk.go`).
 
 One row per time-series chunk: reserved columns ``__series__id``, ``__mint``,
-``__maxt``, ``__chunk_bytes`` (`schema/chunk.go:13-23`) plus one string
-column per label name, alphabetically ordered (`schema/chunk.go:87-95`).
-Timestamps are int64 Unix milliseconds; absent labels are empty strings
+``__maxt`` (`schema/chunk.go:13-23`), the chunk's samples as two
+equal-length Parquet-native arrays ``__ts array<bigint>`` and ``__values
+array<double>`` (sorted by timestamp), plus one string column per label
+name, alphabetically ordered (`schema/chunk.go:87-95`).  Timestamps are
+int64 Unix milliseconds; absent labels are empty strings
 (`schema/chunk.go:109-112`) — no nulls anywhere (`schema/column.go:30`).
+
+The reference's opaque ``__chunk_bytes`` payload (`schema/chunk.go:35-36`)
+is the import/export form: it stays reserved, so a blob store (a
+reference-converted file, an imported TSDB block) never reads it as a
+label, and `chunks.with_sample_arrays` converts it to the arrays.
 """
 
 from __future__ import annotations
@@ -14,10 +21,12 @@ from pyspark.sql import types as T
 SERIES_ID = "__series__id"
 MIN_T = "__mint"
 MAX_T = "__maxt"
+TS_ARRAY = "__ts"
+VALUES_ARRAY = "__values"
 CHUNK_BYTES = "__chunk_bytes"
 METRIC_NAME = "__name__"
 
-RESERVED_COLUMNS = (SERIES_ID, MIN_T, MAX_T, CHUNK_BYTES)
+RESERVED_COLUMNS = (SERIES_ID, MIN_T, MAX_T, TS_ARRAY, VALUES_ARRAY, CHUNK_BYTES)
 
 
 def chunk_schema(label_names: list[str]) -> T.StructType:
@@ -28,7 +37,10 @@ def chunk_schema(label_names: list[str]) -> T.StructType:
         T.StructField(SERIES_ID, T.LongType(), nullable=False),
         T.StructField(MIN_T, T.LongType(), nullable=False),
         T.StructField(MAX_T, T.LongType(), nullable=False),
-        T.StructField(CHUNK_BYTES, T.BinaryType(), nullable=False),
+        T.StructField(TS_ARRAY, T.ArrayType(T.LongType(), False), nullable=False),
+        T.StructField(
+            VALUES_ARRAY, T.ArrayType(T.DoubleType(), False), nullable=False
+        ),
     ]
     for name in sorted(label_names):
         if name in RESERVED_COLUMNS:

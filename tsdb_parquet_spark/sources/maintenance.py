@@ -128,11 +128,11 @@ def delete_samples(
        all-miss case, so a delete touching one day of one series probes
        a 100 TB store without scanning it;
     2. each touched directory rewrites to a fresh versioned directory:
-       untouched rows pass through byte-identical; affected chunks
-       decode (`decode_chunk_udf`), drop in-interval samples with a JVM
-       higher-order ``filter`` on the sample array, re-encode
-       (`encode_chunk_udf`, the raw batch-decodable layout) with
-       recomputed ``__mint``/``__maxt``, and chunks left empty vanish;
+       untouched rows pass through unchanged; affected chunks drop
+       their in-interval samples with a JVM higher-order ``filter`` over
+       the zipped ``__ts``/``__values`` arrays, with recomputed
+       ``__mint``/``__maxt``, and chunks left empty vanish — no sample
+       leaves the JVM;
     3. the store publishes a new snapshot via the writer's own
        machinery (``adopt``/``mark_folded``/alias swap), so pinned
        readers finish on the old version and ``vacuum_snapshots``
@@ -144,12 +144,13 @@ def delete_samples(
     """
     from pyspark.sql import functions as F
 
-    from tsdb_parquet_spark.chunks import decode_chunk_udf, encode_chunk_udf
+    from tsdb_parquet_spark.chunks import sample_structs, with_sample_arrays
     from tsdb_parquet_spark.operators.selection import conjunction
     from tsdb_parquet_spark.schema import (
-        CHUNK_BYTES,
         MAX_T,
         MIN_T,
+        TS_ARRAY,
+        VALUES_ARRAY,
         label_columns,
         sort_columns,
     )
@@ -221,7 +222,9 @@ def delete_samples(
     for d in dirs:
         if d not in touched:
             continue
-        df = spark.read.parquet(d)
+        # a blob-payload dir (written before the array layout) is
+        # rewritten with the arrays like any import
+        df = with_sample_arrays(spark.read.parquet(d))
         if label_names is None:
             label_names = label_columns(df.schema)
         opts = writer_opts or WriterOptions(
@@ -237,14 +240,15 @@ def delete_samples(
             writer = SortedParquetWriter(spark, store_root, opts)
         keep = df.filter(~pred)
         kept_samples = F.filter(
-            decode_chunk_udf(F.col(CHUNK_BYTES)),
+            sample_structs(),
             lambda s: (s["ts"] < F.lit(mint)) | (s["ts"] > F.lit(maxt)),
         )
         edited = (
             df.filter(pred)
             .withColumn("__kept", kept_samples)
             .filter(F.size("__kept") > 0)
-            .withColumn(CHUNK_BYTES, encode_chunk_udf(F.col("__kept")))
+            .withColumn(TS_ARRAY, F.col("__kept")["ts"])
+            .withColumn(VALUES_ARRAY, F.col("__kept")["value"])
             .withColumn(MIN_T, F.element_at("__kept", 1)["ts"])
             .withColumn(MAX_T, F.element_at("__kept", -1)["ts"])
             .drop("__kept")
@@ -257,9 +261,8 @@ def delete_samples(
                 F.sum(
                     F.size(
                         F.filter(
-                            decode_chunk_udf(F.col(CHUNK_BYTES)),
-                            lambda s: (s["ts"] >= F.lit(mint))
-                            & (s["ts"] <= F.lit(maxt)),
+                            F.col(TS_ARRAY),
+                            lambda t: (t >= F.lit(mint)) & (t <= F.lit(maxt)),
                         )
                     )
                 ).alias("n")

@@ -41,13 +41,21 @@ from pyspark.sql import DataFrame, SparkSession
 REFERENCE_PAGE_SIZE = 8 * 1024
 REFERENCE_PART_ROWS = 256 * 1024
 
+# The chunk payload arrays (``__ts``/``__values``) need much larger pages
+# than the reference's label-sized ones: zstd compresses each page on its
+# own, and an 8 KiB page holds only a few chunks' samples.  The values'
+# Parquet leaf also skips the dictionary, which pays only for repeated
+# values.  See FIXTURES.md (F1) for the measurements behind both.
+DEFAULT_PAGE_SIZE = 1024 * 1024
+VALUES_LEAF = "__values.list.element"
+
 
 @dataclass
 class WriterOptions:
     sort_columns: list[str]
     bloom_columns: list[str] = field(default_factory=list)
     compression: str = "zstd"
-    page_size: int = REFERENCE_PAGE_SIZE
+    page_size: int = DEFAULT_PAGE_SIZE
     dictionary: bool = True
     rows_per_part: int = REFERENCE_PART_ROWS
     max_files: int | None = None  # cap on output files (partitions)
@@ -84,7 +92,7 @@ class WriterOptions:
             # split-block bloom filter per label column
             # (`db/writer.go:55-58`, 10 bits/value)
             writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-        for col in self.no_dictionary_columns:
+        for col in [*self.no_dictionary_columns, VALUES_LEAF]:
             writer = writer.option(f"parquet.enable.dictionary#{col}", "false")
         return writer
 
@@ -96,7 +104,14 @@ _TYPE_BYTES = {
     "boolean": 1, "byte": 1, "short": 2, "integer": 4, "long": 8,
     "float": 4, "double": 8, "date": 4, "timestamp": 8,
     "timestamp_ntz": 8, "string": 20, "binary": 100,
+    # the chunk payload pair (__ts, __values) weighs what the blob it
+    # replaced did, so chunk stores size their files as before
+    "array": 50,
 }
+
+#: the least plan-estimated bytes per output file when a partition count
+#: comes from plan statistics (see ``_partition_count``)
+MIN_FILE_BYTES = 8 << 20
 
 # Catalyst marks an unknown relation size with spark.sql.defaultSizeInBytes
 # (Long.MaxValue by default) and propagates it through joins/unions — any
@@ -110,6 +125,18 @@ def _est_row_bytes(df: DataFrame) -> int:
     )
 
 
+def _compression_factor(spark: SparkSession) -> float:
+    """In-memory bytes per file byte for a file relation's size estimate.
+    File-relation sizeInBytes is COMPRESSED file bytes while
+    ``_est_row_bytes`` is the in-memory Catalyst width — the mismatch
+    ``spark.sql.sources.fileCompressionFactor`` exists for.  An explicit
+    setting is honored, 1.0 included; unset, 4x is a representative
+    parquet+zstd ratio for telemetry rows (measured 4.06x on the shipped
+    events table)."""
+    factor = spark.conf.get("spark.sql.sources.fileCompressionFactor", None)
+    return 4.0 if factor is None else float(factor)
+
+
 def _partition_count(
     df: DataFrame, opts: WriterOptions, n_rows: int | None = None
 ) -> int:
@@ -119,47 +146,38 @@ def _partition_count(
     # from it (guide §6.2: size the output from the input, not from the
     # session's shuffle parallelism — the old fallback wrote
     # shuffle-partitions-many tiny files locally and would UNDER-size a
-    # 100 TB write the same way).  The byte estimate is the plan's
-    # in-memory figure over a Catalyst per-row width, so compressed
-    # inputs under-count rows by the codec ratio — files come out a few
-    # times over rows_per_part, still inside the 128 MB-1 GB sweet spot
-    # the reference's tiny 256Ki-row parts sit far below.  The shuffle
-    # parallelism remains only as the last resort when the plan carries
-    # Catalyst's unknown-size sentinel (streams, some RDD scans).
-    if n_rows is None:
+    # 100 TB write the same way).  The shuffle parallelism remains only
+    # as the last resort when the plan carries Catalyst's unknown-size
+    # sentinel (streams, some RDD scans).
+    #
+    # Plan statistics are estimates, and narrow rows turn a loose byte
+    # estimate into a huge row count (a spark.range-derived store once
+    # asked for ~24,000 files): unless the caller counted the rows, the
+    # count is also capped so every file carries at least
+    # ``MIN_FILE_BYTES`` of the plan's byte estimate.
+    counted = n_rows is not None
+    try:
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        size = int(stats.sizeInBytes())
+    except Exception:
+        stats, size = None, _SIZE_UNKNOWN
+    if n_rows is None and stats is not None:
         try:
-            n_rows = int(
-                df._jdf.queryExecution().optimizedPlan().stats().rowCount().get()
-            )
+            n_rows = int(stats.rowCount().get())
         except Exception:
             n_rows = None
+    size_known = 0 <= size < _SIZE_UNKNOWN
     estimated = False
-    if n_rows is None:
-        try:
-            size = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            size = _SIZE_UNKNOWN
-        if 0 <= size < _SIZE_UNKNOWN:
-            # file-relation sizeInBytes is COMPRESSED file bytes while
-            # _est_row_bytes is the in-memory Catalyst width — the same
-            # mismatch spark.sql.sources.fileCompressionFactor exists
-            # for (its default 1.0 leaves scan estimates compressed).
-            # Honor that conf when the operator set it; otherwise use
-            # 4x, a representative parquet+zstd ratio for telemetry
-            # rows (measured 4.06x on the shipped events table).
-            factor = float(
-                df.sparkSession.conf.get(
-                    "spark.sql.sources.fileCompressionFactor", "1.0"
-                )
-            )
-            if factor == 1.0:
-                factor = 4.0
-            n_rows = max(1, int(size * factor) // _est_row_bytes(df))
-            estimated = True
+    if n_rows is None and size_known:
+        n_rows = max(
+            1,
+            int(size * _compression_factor(df.sparkSession)) // _est_row_bytes(df),
+        )
+        estimated = True
     if n_rows is not None:
         parts = max(1, (n_rows + opts.rows_per_part - 1) // opts.rows_per_part)
+        if not counted and size_known:
+            parts = min(parts, max(1, -(-size // MIN_FILE_BYTES)))
         if estimated and parts < (
             cores := df.sparkSession.sparkContext.defaultParallelism
         ):
@@ -191,22 +209,37 @@ def write_sorted(
     """S5 — write ``df`` as range-partitioned, internally sorted parquet
     parts honoring the reference layout contract (`db/writer.go:169-216`).
 
+    A ``__chunk_bytes`` blob input (an import: converted blocks, a
+    reference-written file) is written with the ``__ts``/``__values``
+    payload (`chunks.with_sample_arrays`).
+
     ``n_rows``: exact input size when the caller already knows it (e.g. a
     counted+cached micro-batch).  A batch that fits one part then skips the
     range shuffle entirely — ``coalesce(1)`` + in-partition sort produces
     the same single globally sorted file without an exchange.
     """
+    from tsdb_parquet_spark.chunks import with_sample_arrays
+
     n = _partition_count(df, opts, n_rows=n_rows)
     sort_cols = [c for c in opts.sort_columns if c in df.columns]
     shuffle_cols = [c for c in opts.partition_by if c in df.columns] + [
         c for c in sort_cols if c not in opts.partition_by
     ]
+    if opts.partition_by:
+        # the file writer re-sorts by the partition columns unless the
+        # plan's ordering proves them sorted, which a Python projection
+        # above the sort does not — convert blobs before sorting instead
+        df = with_sample_arrays(df)
     if shuffle_cols and n == 1 and n_rows is not None and not opts.partition_by:
         df = df.coalesce(1).sortWithinPartitions(*shuffle_cols)
     elif shuffle_cols:
         df = df.repartitionByRange(n, *shuffle_cols).sortWithinPartitions(
             *shuffle_cols
         )
+    # blob inputs (imports) become the array payload AFTER the range
+    # shuffle and sort: converting first would also run the conversion
+    # in the range partitioner's sampling job, a second full pass
+    df = with_sample_arrays(df)
     writer = opts.apply(df.write.mode("overwrite"))
     if opts.partition_by:
         writer = writer.partitionBy(*opts.partition_by)
@@ -214,15 +247,28 @@ def write_sorted(
     return out_dir
 
 
+def _read_frames(spark: SparkSession, paths: list[str]) -> list[DataFrame]:
+    from tsdb_parquet_spark.chunks import with_sample_arrays
+    from tsdb_parquet_spark.schema import CHUNK_BYTES
+
+    frames = [spark.read.parquet(p) for p in paths]
+    if len({CHUNK_BYTES in f.columns for f in frames}) > 1:
+        frames = [with_sample_arrays(f) for f in frames]
+    return frames
+
+
 def read_roots(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Read several dataset roots as one DataFrame, per-root reads
     unioned.  Several hive-partitioned roots in ONE ``read.parquet`` call
     trip partition discovery ("Suspicious paths"); per-root reads keep
     each root's partition column intact.  Shared by ``compact`` and
-    ``manifest.read_snapshot`` so the workaround can't diverge."""
-    df = spark.read.parquet(paths[0])
-    for p in paths[1:]:
-        df = df.unionByName(spark.read.parquet(p))
+    ``manifest.read_snapshot`` so the workaround can't diverge.  Roots
+    that disagree on the chunk payload (a blob store written before the
+    array layout, appended to since) are all read as arrays."""
+    frames = _read_frames(spark, paths)
+    df = frames[0]
+    for f in frames[1:]:
+        df = df.unionByName(f)
     return df
 
 
@@ -280,7 +326,7 @@ def compact(
     from tsdb_parquet_spark.schema import SERIES_ID, label_columns
 
     paths = [part_dirs] if isinstance(part_dirs, str) else list(part_dirs)
-    frames = [spark.read.parquet(p) for p in paths]
+    frames = _read_frames(spark, paths)
     has_id = [SERIES_ID in f.columns for f in frames]
     if any(has_id) and not all(has_id):
         from tsdb_parquet_spark.chunks import dense_series_ids

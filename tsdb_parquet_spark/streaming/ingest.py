@@ -51,17 +51,11 @@ class StreamingChunkIngestor:
         to_samples: Callable[[DataFrame], DataFrame],
         chunk_span_ms: int,
         writer_options: WriterOptions | None = None,
-        chunk_encoding: str = "raw",
     ):
         self.spark = spark
         self.labels = list(label_columns)
         self.to_samples = to_samples
         self.chunk_span_ms = chunk_span_ms
-        #: "raw" (engine-native batch-decodable layout) or "xor"
-        #: (Prometheus/Gorilla interop bytes — readers sniff per blob);
-        #: compaction rewrites rows, not chunk payloads, so the encoding
-        #: chosen at ingest survives the whole part->compact lifecycle
-        self.chunk_encoding = chunk_encoding
         opts = writer_options or WriterOptions(
             sort_columns=sort_columns(self.labels),
             bloom_columns=[c for c in self.labels if c != "__name__"],
@@ -97,7 +91,6 @@ class StreamingChunkIngestor:
             self.labels,
             chunk_span_ms=self.chunk_span_ms,
             assign_series_ids=False,  # ids are assigned at compaction
-            encoding=self.chunk_encoding,
         ).persist()
         try:
             # counting the cached chunks is one extra cheap action and buys

@@ -704,7 +704,8 @@ def block_to_chunk_frame(
     `schema/chunk.go:28-30`), ``__mint``/``__maxt``, label columns
     (missing labels as "", `schema/chunk.go:109-112`), and
     ``__chunk_bytes`` holding the block's raw chunk payload (XOR — which
-    `chunks.decode_chunk_udf` decodes via its codec sniff).
+    `chunks.blobs_to_arrays` converts to the store's arrays wherever the
+    frame is read or written).
 
     Driver side parses ONLY the index (series + chunk metas, the small
     part); payload reads run executor-side per partition against the
@@ -991,7 +992,6 @@ def sync_blocks(
     store_root: str,
     label_names: Sequence[str],
     writer_opts=None,
-    recode: str | None = None,
 ) -> dict:
     """Incremental block-farm migration: convert every block in
     ``data_dir`` NOT yet in the store, as one farm job (one task per
@@ -1011,16 +1011,14 @@ def sync_blocks(
     keeps a STABLE ordinal in the sidecar, so ``__series__id``'s high
     bits never collide across batches.
 
-    ``recode="raw"`` re-encodes each XOR chunk into the engine's raw
-    batch-decodable layout during the convert (one decode+encode pass —
-    the migration-economics guidance), so every later scan of the store
-    runs at Arrow speed instead of the pure-Python XOR rate.
+    The part's writer converts each XOR chunk to the store's
+    ``__ts``/``__values`` arrays (`chunks.blobs_to_arrays`, after the
+    sort), so the pure-Python XOR decode is paid once, here, and never
+    by a scan of the store.
 
     Returns ``{"converted": [ulid...], "skipped": [ulid...],
     "part": dir|None}``.
     """
-    if recode not in (None, "raw"):
-        raise ValueError(f"unknown recode target {recode!r}")
     from tsdb_parquet_spark.schema import sort_columns
     from tsdb_parquet_spark.sources.writer import (
         SortedParquetWriter,
@@ -1053,15 +1051,6 @@ def sync_blocks(
         label_names,
         block_ids=[o for _, _, o in pending],
     )
-    if recode == "raw":
-        from pyspark.sql import functions as F
-
-        from tsdb_parquet_spark.chunks import recode_chunk_udf
-        from tsdb_parquet_spark.schema import CHUNK_BYTES
-
-        frame = frame.withColumn(
-            CHUNK_BYTES, recode_chunk_udf(F.col(CHUNK_BYTES))
-        )
     labels = list(label_names)
     opts = writer_opts or WriterOptions(
         sort_columns=sort_columns(labels),
@@ -1105,8 +1094,9 @@ def export_block(
 ) -> str:
     """Distributed REVERSE converter: a chunk frame (the store's native
     schema — ``__series__id``/``__mint``/``__maxt``, label columns,
-    ``__chunk_bytes``) -> a real, spec-complete Prometheus TSDB block
-    directory (index v2 + chunk segment files + meta.json) that
+    ``__ts``/``__values``; or a ``__chunk_bytes`` blob frame) -> a
+    real, spec-complete Prometheus TSDB block directory (index v2 +
+    chunk segment files + meta.json) that
     ``tsdb.OpenBlock`` can open.  The reference converter is one-way
     (`cmd/convert/main.go:30-126`: block -> parquet); this closes the
     loop, so a parquet store can be handed BACK to any
@@ -1125,12 +1115,12 @@ def export_block(
     the index + meta.json.  ``block_dir`` must be on storage all tasks
     can reach (the same assumption every Spark file sink makes).
 
-    Chunks carrying the engine's RAW codec are re-encoded to Gorilla
-    XOR executor-side (`xorchunk.encode_xor_chunk`) — a Prometheus
-    block can only hold spec encodings.  Per-series chunk windows must
-    be time-ordered and non-overlapping (the store's layout contract;
-    ``write_index`` rejects violations because the index's uvarint
-    inter-chunk deltas cannot represent overlap).
+    Array payloads, and blobs in the engine's earlier RAW layout, are
+    encoded to Gorilla XOR executor-side (`xorchunk.encode_xor_chunk`)
+    — a Prometheus block can only hold spec encodings.  Per-series
+    chunk windows must be time-ordered and non-overlapping (the store's
+    layout contract; ``write_index`` rejects violations because the
+    index's uvarint inter-chunk deltas cannot represent overlap).
 
     Returns the block's ULID (content-derived, spec-valid — see
     ``_ulid_from_bytes``); ``meta.json`` is written LAST as the publish
@@ -1139,6 +1129,7 @@ def export_block(
     import glob
     import shutil
 
+    import numpy as np
     import pandas as pd
     from pyspark import TaskContext
     from pyspark.sql import types as T
@@ -1148,13 +1139,16 @@ def export_block(
         MAX_T,
         MIN_T,
         SERIES_ID,
+        TS_ARRAY,
+        VALUES_ARRAY,
     )
     from tsdb_parquet_spark.xorchunk import encode_xor_chunk, is_raw_chunk
 
     # every non-internal column is a label — including "__name__", which
     # is a real Prometheus label despite the dunder (only the engine's
     # own frame columns are internal)
-    internal = {CHUNK_BYTES, MAX_T, MIN_T, SERIES_ID}
+    internal = {CHUNK_BYTES, MAX_T, MIN_T, SERIES_ID, TS_ARRAY, VALUES_ARRAY}
+    blobs = CHUNK_BYTES in frame.columns
     label_names = sorted(c for c in frame.columns if c not in internal)
     seg_dir = os.path.join(block_dir, "chunks")
     shutil.rmtree(seg_dir, ignore_errors=True)
@@ -1195,13 +1189,21 @@ def export_block(
             out = bytearray(header)
 
         for pdf in batches:
-            blobs = pdf[CHUNK_BYTES].to_numpy()
+            if blobs:
+                payload = pdf[CHUNK_BYTES].to_numpy()
+            else:
+                tss = pdf[TS_ARRAY].to_numpy()
+                vals = pdf[VALUES_ARRAY].to_numpy()
             mints = pdf[MIN_T].to_numpy()
             maxts = pdf[MAX_T].to_numpy()
             labs = [pdf[n].to_numpy() for n in label_names]
             for i in range(len(pdf)):
-                blob = bytes(blobs[i])
-                if is_raw_chunk(blob):
+                if not blobs:
+                    blob = encode_xor_chunk(
+                        np.asarray(tss[i], np.int64),
+                        np.asarray(vals[i], np.float64),
+                    )
+                elif is_raw_chunk(blob := bytes(payload[i])):
                     ts, values = decode_samples(blob)
                     blob = encode_xor_chunk(ts, values)
                 rec_len = 1 + len(blob) + 9 + 4  # enc + payload + varint + crc
@@ -1379,7 +1381,7 @@ def compact_blocks(
 
     from tsdb_parquet_spark.chunks import (
         DEFAULT_CHUNK_SPAN_MS,
-        decode_chunk_udf,
+        chunks_to_samples,
         samples_to_chunks,
     )
     from tsdb_parquet_spark.schema import CHUNK_BYTES, SERIES_ID
@@ -1449,15 +1451,13 @@ def compact_blocks(
     frame = blocks_to_chunk_frame(
         spark, list(block_dirs), labels, tombstones="ignore"
     )
-    decoded = frame.select(
-        *labels,
-        F.shiftrightunsigned(F.col(SERIES_ID), 32).alias("__block_ord"),
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("__s"),
-    ).select(
-        *labels,
-        "__block_ord",
-        F.col("__s.ts").alias("ts"),
-        F.col("__s.value").alias("value"),
+    decoded = chunks_to_samples(
+        frame.select(
+            *labels,
+            F.shiftrightunsigned(F.col(SERIES_ID), 32).alias("__block_ord"),
+            CHUNK_BYTES,
+        ),
+        [*labels, "__block_ord"],
     )
     if dels is not None:
         cond = decoded["__block_ord"] == dels["__del_ord"]
@@ -1586,10 +1586,9 @@ def downsample_blocks(
 
     from tsdb_parquet_spark.chunks import (
         DEFAULT_CHUNK_SPAN_MS,
-        decode_chunk_udf,
+        chunks_to_samples,
         samples_to_chunks,
     )
-    from tsdb_parquet_spark.schema import CHUNK_BYTES
     from tsdb_parquet_spark.sources.rollup import (
         ROLLUP_AGGS,
         downsample_samples,
@@ -1599,11 +1598,7 @@ def downsample_blocks(
     frame = blocks_to_chunk_frame(
         spark, list(block_dirs), labels, tombstones="error"
     )
-    samples = frame.select(
-        *labels,
-        F.explode(decode_chunk_udf(F.col(CHUNK_BYTES))).alias("__s"),
-    ).select(*labels, F.col("__s.ts").alias("ts"),
-             F.col("__s.value").alias("value"))
+    samples = chunks_to_samples(frame, labels)
     rolled = downsample_samples(
         samples,
         labels,

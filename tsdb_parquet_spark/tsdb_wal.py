@@ -1451,7 +1451,6 @@ def sync_wal(
     label_names: Sequence[str],
     writer_opts=None,
     chunk_span_ms: int | None = None,
-    encoding: str = "raw",
     batch_rows: int = 65536,
 ) -> dict:
     """Incremental head migration: drain every WAL sample NOT yet in the
@@ -1603,7 +1602,6 @@ def sync_wal(
                     label_names,
                     chunk_span_ms=span,
                     assign_series_ids=False,
-                    encoding=encoding,
                 )
                 opts = writer_opts or WriterOptions(
                     sort_columns=sort_columns(label_names),
@@ -1740,12 +1738,7 @@ def live_samples_frame(
     frames: list[DataFrame] = []
     if paths:
         chunk_df = spark.read.parquet(*paths)
-        frames.append(
-            chunks_to_samples(
-                chunk_df.select(*label_names, "__chunk_bytes"),
-                label_names,
-            )
-        )
+        frames.append(chunks_to_samples(chunk_df, label_names))
 
     # delta side: the read-only replica of sync_wal's plan — the SAME
     # _drain_plan computation (pure-duplicate checkpoints skipped, so a
@@ -1811,7 +1804,6 @@ def data_dir_to_chunk_frame(
     data_dir: str,
     label_names: Sequence[str],
     chunk_span_ms: int | None = None,
-    wal_encoding: str = "raw",
     mint: int | None = None,
     maxt: int | None = None,
     select: "dict[str, Sequence[str]] | None" = None,
@@ -1826,7 +1818,9 @@ def data_dir_to_chunk_frame(
     30-126` opens `tsdb.OpenBlock`); the most recent ~2-3 h of a live
     installation live exclusively in the WAL, so block-only conversion
     silently drops the head.  Here the head lands in the same store
-    with the same layout contract.
+    with the same layout contract: block chunks are converted to the
+    ``__ts``/``__values`` arrays (`chunks.blobs_to_arrays`) so both
+    origins share one payload.
 
     ``__series__id`` uniqueness across origins: block ids are
     ``block_ordinal << 32 | local``, WAL-origin ids are offset by
@@ -1858,6 +1852,7 @@ def data_dir_to_chunk_frame(
     from tsdb_parquet_spark.chunks import (
         DEFAULT_CHUNK_SPAN_MS,
         samples_to_chunks,
+        with_sample_arrays,
     )
     from tsdb_parquet_spark.schema import SERIES_ID
     from tsdb_parquet_spark.tsdb_block import blocks_to_chunk_frame
@@ -1879,8 +1874,10 @@ def data_dir_to_chunk_frame(
                 maxt if maxt is not None else (1 << 62),
             )
         frames.append(
-            blocks_to_chunk_frame(
-                spark, blocks, label_names, select=select, window=win
+            with_sample_arrays(
+                blocks_to_chunk_frame(
+                    spark, blocks, label_names, select=select, window=win
+                )
             )
         )
     if wal:
@@ -1896,7 +1893,6 @@ def data_dir_to_chunk_frame(
             samples,
             sorted(label_names),
             chunk_span_ms=span,
-            encoding=wal_encoding,
         ).withColumn(
             SERIES_ID, F.col(SERIES_ID) + F.lit(len(blocks) << 32)
         )
@@ -1906,16 +1902,17 @@ def data_dir_to_chunk_frame(
         # right schema (ask for one unpruned block's schema is overkill
         # — synthesize from label_names)
         from tsdb_parquet_spark.schema import (
-            CHUNK_BYTES,
             MAX_T,
             MIN_T,
             SERIES_ID,
+            TS_ARRAY,
+            VALUES_ARRAY,
         )
 
         schema = (
             f"`{SERIES_ID}` long, `{MIN_T}` long, `{MAX_T}` long, "
             + ", ".join(f"`{c}` string" for c in sorted(label_names))
-            + f", `{CHUNK_BYTES}` binary"
+            + f", `{TS_ARRAY}` array<long>, `{VALUES_ARRAY}` array<double>"
         )
         return spark.createDataFrame([], schema)
     out = frames[0]

@@ -32,17 +32,14 @@ Layout of a chunk's bytes (``chunkenc.Chunk.Bytes()``):
   ``1`` + 5 bits of leading-zero count (capped at 31) + 6 bits of
   significant-bit count (64 encodes as 0) + those bits.
 
-Pure-Python bit I/O, per-chunk: this is the interop path, not the hot
-scan path — the engine's own raw layout (`chunks.py`) decodes whole
-Arrow batches with zero per-sample Python.  The Arrow UDF wrappers in
-`chunks.py` auto-detect the codec per blob, so mixed stores read
-transparently.  Throughput measured ~3,550 chunks/s/core (~0.43
-Msamples/s at 120-sample chunks, r08 inlined decoder) vs memcpy-speed
-for the raw codec — fine for converted-block ingest, which is a
-one-shot migration; a store that will be queried repeatedly should be
-rewritten to the raw layout on ingest (one decode+encode pass).  The
-measured wall for a full block convert and the projected hours/TB live
-in README's scale section.
+Pure-Python bit I/O, per-chunk: this is the interop path, not the scan
+path — the store keeps samples as Parquet-native arrays (`chunks.py`),
+and `chunks.blobs_to_arrays` decodes XOR (or the engine's earlier raw
+blob layout, sniffed per blob) once, at import.  Throughput measured
+~3,550 chunks/s/core (~0.43 Msamples/s at 120-sample chunks, r08
+inlined decoder) — fine for converted-block ingest, which is a one-shot
+migration.  The measured wall for a full block convert and the
+projected hours/TB live in README's scale section.
 """
 
 from __future__ import annotations
