@@ -23,6 +23,7 @@ from tsdb_parquet_spark.api import (
     _parse_time_ms,
     _ts_json,
 )
+from tsdb_parquet_spark.operators.selection import Matcher
 from tsdb_parquet_spark.plans.promql import PromQLEngine
 from tsdb_parquet_spark.scrape import parse_exposition
 
@@ -195,10 +196,62 @@ def test_statically_empty_selector(api):
         ('app_events{nolabel!~".+"}', True),
     ],
 )
-def test_absent_label_matcher_semantics(api, selector, matches_all):
-    p = api_get_json(api, "/api/v1/series", {"match[]": [selector]})
-    want = 2 if matches_all else 0  # two app_events series in the store
-    assert len(p["data"]) == want, selector
+def test_absent_label_matcher_semantics(api, engine, selector, matches_all):
+    """Every reader of the engine gives the same keep-all or keep-none
+    answer: the range query, series, labels, label values, federate and
+    both remote-read response types."""
+    from tsdb_parquet_spark.plans.promql import parse_promql
+    from tsdb_parquet_spark.remote_read import (
+        decode_read_response,
+        decode_streamed_read_body,
+        encode_read_request,
+        serve_read_request,
+        serve_read_request_streamed,
+    )
+    from tsdb_parquet_spark.remote_write import frame_payload, unframe_payload
+
+    match = {"match[]": [selector]}
+    node = parse_promql(selector)
+    read_body = frame_payload(encode_read_request([(
+        0, 2_000_000, [*node.matchers, Matcher("__name__", "=", node.metric)]
+    )]))
+    with urllib.request.urlopen(
+        f"{api}/federate?" + urllib.parse.urlencode(
+            {**match, "time": 1120}, doseq=True
+        )
+    ) as resp:
+        federated = parse_exposition(resp.read().decode())
+    [read] = decode_read_response(
+        unframe_payload(serve_read_request(engine, read_body))
+    )
+    [streamed] = decode_streamed_read_body(
+        b"".join(serve_read_request_streamed(engine, read_body)), 1
+    )
+    rows = api_query_range_rows(api, selector, 1_000_000, 1_120_000, 60_000)
+    got = {
+        "query_range": len({tuple(sorted(lbl.items())) for _, lbl, _ in rows}),
+        "series": len(api_get_json(api, "/api/v1/series", match)["data"]),
+        "labels": api_get_json(api, "/api/v1/labels", match)["data"],
+        "label_values": api_get_json(
+            api, "/api/v1/label/event_type/values", match
+        )["data"],
+        "federate": len(federated),
+        "remote_read": len(read),
+        "remote_read_streamed": len(streamed),
+    }
+    # two app_events series in the store
+    want = {
+        "query_range": 2,
+        "series": 2,
+        "labels": ["__name__", "event_type", "shard"],
+        "label_values": ["click", "view"],
+        "federate": 2,
+        "remote_read": 2,
+        "remote_read_streamed": 2,
+    }
+    if not matches_all:
+        want = {k: [] if isinstance(v, list) else 0 for k, v in want.items()}
+    assert got == want, selector
 
 
 def test_error_envelopes(api):
@@ -207,10 +260,23 @@ def test_error_envelopes(api):
     assert exc.value.code == 400
     body = json.loads(exc.value.read().decode())
     assert body["status"] == "error" and body["errorType"] == "bad_data"
-    # aggregations are not valid match[] selectors
-    with pytest.raises(urllib.error.HTTPError) as exc:
-        api_get_json(api, "/api/v1/series", {"match[]": ["sum(app_events)"]})
-    assert exc.value.code == 400
+    # aggregations and the offset/@ modifiers are not valid match[]
+    # selectors (Prometheus ParseMetricSelector)
+    for bad in (
+        "sum(app_events)",
+        "app_events offset 1h",
+        "app_events @ 0",
+    ):
+        for path in ("/api/v1/series", "/api/v1/labels", "/federate"):
+            params = {"match[]": [bad], "time": 1120}
+            with pytest.raises(urllib.error.HTTPError) as exc:
+                urllib.request.urlopen(
+                    f"{api}{path}?"
+                    + urllib.parse.urlencode(params, doseq=True)
+                )
+            assert exc.value.code == 400, (path, bad)
+            body = json.loads(exc.value.read().decode())
+            assert body["errorType"] == "bad_data", (path, bad)
     with pytest.raises(urllib.error.HTTPError) as exc:
         api_get_json(api, "/api/v1/nope", {})
     assert exc.value.code == 404
@@ -338,14 +404,31 @@ def test_query_exemplars_endpoint(spark, engine, tmp_path):
                 ],
             }
         ]
-        # aggregations rejected
-        with pytest.raises(urllib.error.HTTPError) as exc:
-            api_get_json(
-                url,
-                "/api/v1/query_exemplars",
-                {"query": "sum(app_events)", "start": 0, "end": 1},
+        # a matcher on a label no series carries: {nolabel="x"} keeps
+        # nothing, {nolabel=""} is a no-op
+        window = {"start": 0, "end": 3 * 86_400}
+        unfiltered = api_get_json(
+            url, "/api/v1/query_exemplars", {"query": "app_events", **window}
+        )["data"]
+        assert len(unfiltered) == 2
+        for query, want in (
+            ('app_events{nolabel="x"}', []),
+            ('app_events{nolabel=""}', unfiltered),
+        ):
+            p = api_get_json(
+                url, "/api/v1/query_exemplars", {"query": query, **window}
             )
-        assert exc.value.code == 400
+            assert p["data"] == want, query
+        # aggregations and the offset/@ modifiers rejected
+        for query in ("sum(app_events)", "app_events offset 1h",
+                      "app_events @ 0"):
+            with pytest.raises(urllib.error.HTTPError) as exc:
+                api_get_json(
+                    url,
+                    "/api/v1/query_exemplars",
+                    {"query": query, "start": 0, "end": 1},
+                )
+            assert exc.value.code == 400, query
 
 
 def test_query_exemplars_absent_without_store(api):
@@ -549,10 +632,19 @@ def test_admin_tsdb_api(spark, tmp_path):
             {"query": "count(m)", "time": day // 1000},
         )["data"]["result"][0]["value"][1]
         assert after == "1"
-        # missing match[] -> bad_data
-        with pytest.raises(urllib.error.HTTPError) as exc:
-            post(url, "/api/v1/admin/tsdb/delete_series", {})
-        assert exc.value.code == 400
+        # missing match[], or a selector with offset/@ -> bad_data,
+        # and nothing is deleted
+        for params in ({}, {"match[]": ["m offset 1h"]},
+                       {"match[]": ["m @ 0"]}):
+            with pytest.raises(urllib.error.HTTPError) as exc:
+                post(url, "/api/v1/admin/tsdb/delete_series", params)
+            assert exc.value.code == 400, params
+            body = json.loads(exc.value.read().decode())
+            assert body["errorType"] == "bad_data", params
+        assert api_get_json(
+            url, "/api/v1/query",
+            {"query": "count(m)", "time": day // 1000},
+        )["data"]["result"][0]["value"][1] == "1"
     # admin disabled -> 403 envelope
     with PromApiServer(PromQLEngine(factory())) as url:
         with pytest.raises(urllib.error.HTTPError) as exc:

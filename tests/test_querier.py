@@ -76,6 +76,16 @@ def test_select_by_matcher(spark, store):
         grouping=["instance"],
     ).collect()
     assert sorted(r["instance"] for r in out) == ["0", "1"]
+    # a matcher on a label the store never materialized: absent == "",
+    # so {nolabel="x"} keeps no series and {nolabel=""} is a no-op
+    name = Matcher("__name__", "=", "http_requests_total")
+    for extra, want in (
+        (Matcher("nolabel", "=", "x"), 0),
+        (Matcher("nolabel", "=", ""), 3),
+    ):
+        assert q.select(matchers=[name, extra]).count() == want, extra
+        samples = q.select_samples(matchers=[name, extra])
+        assert samples.count() == want * 6, extra
 
 
 def test_select_time_containment(spark, store):
@@ -105,6 +115,15 @@ def test_label_api(spark, store):
     assert q.label_names() == ["__name__", "instance", "job"]
     vals = [r["value"] for r in q.label_values("job").collect()]
     assert vals == ["api-server", "kubelet"]
+    for extra, want in (
+        (Matcher("nolabel", "=", "x"), []),
+        (Matcher("nolabel", "=", ""), ["api-server", "kubelet"]),
+    ):
+        got = [r["value"] for r in q.label_values("job", [extra]).collect()]
+        assert got == want, extra
+        assert q.label_names([extra]) == (
+            ["__name__", "instance", "job"] if want else []
+        ), extra
 
 
 def test_regex_matchers_fully_anchored(spark, store):

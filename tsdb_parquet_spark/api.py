@@ -62,6 +62,7 @@ import threading
 import urllib.parse
 import urllib.request
 from datetime import datetime, timezone
+from functools import reduce
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Sequence
 
@@ -92,6 +93,7 @@ __all__ = [
     "tsdb_status_result",
     "rules_result",
     "render_federate",
+    "parse_match_selectors",
     "api_query_range_rows",
     "api_get_json",
 ]
@@ -164,64 +166,60 @@ def vector_result(df: DataFrame) -> list[dict]:
     return to_api_instant_response(df)["data"]["result"]
 
 
+def parse_match_selectors(
+    selectors: Sequence[str], metric_label: str, param: str = "match[]"
+) -> list[list[Matcher]]:
+    """The matchers of each ``match[]`` selector — the one parser behind
+    series, labels, label values, federate, ``query_exemplars``, admin
+    ``delete_series`` and ``cli exemplars``.  Like Prometheus's
+    ``ParseMetricSelector`` it accepts a plain instant selector only: a
+    function, aggregation, ``offset`` or ``@`` is bad input, never
+    silently dropped."""
+    out = []
+    for raw in selectors:
+        node = parse_promql(raw)
+        if (
+            not isinstance(node, PromExpr)
+            or node.func
+            or node.agg
+            or node.offset_ms
+            or node.at_ms is not None
+        ):
+            raise ValueError(f"{param} must be a plain selector: {raw!r}")
+        matchers = list(node.matchers)
+        if node.metric:
+            matchers.append(Matcher(metric_label, "=", node.metric))
+        out.append(matchers)
+    return out
+
+
 def _match_frame(
     engine,
     selectors: Sequence[str],
     start_ms: int | None,
     end_ms: int | None,
     values: bool = False,
-) -> DataFrame | None:
-    """Samples matching ANY of the ``match[]`` selectors inside
-    [start, end] — the shared core of series/labels/values/federate.
-    Returns None when every selector is statically empty (a matcher on
-    a label the store does not carry that does not match "" — the
-    Prometheus absent-label-is-"" convention).
+) -> DataFrame:
+    """Samples matching ANY of the ``match[]`` selectors (every sample
+    when there are none) inside [start, end] — the shared core of
+    series/labels/values/federate, one `PromQLEngine.matched_samples`
+    per selector.
 
     ``values=True`` marks a VALUE-returning caller (federate): the
     engine's per-query transform (e.g. the replica winner vote) runs
     with these exact bounds so exported samples match what the query
     endpoints serve.  The default serves series/label METADATA, where
     the transform contract guarantees the answer is identical without
-    the per-row work — only the transformed schema is projected."""
-    # a shared-scan engine (the server default) serves these metadata
-    # queries from its checkpointed working set — matchers filter the
-    # decoded frame instead of re-running scan+decode per request; a
-    # plain engine keeps the fully pushed-down scan.
-    base = (
-        engine.bounded_samples(start_ms, end_ms)
-        if values
-        else engine.metadata_frame()
-    )
-    frames = []
-    for raw in selectors:
-        node = parse_promql(raw)
-        if not isinstance(node, PromExpr) or node.func or node.agg:
-            raise ValueError(f"match[] must be a plain selector: {raw!r}")
-        matchers = list(node.matchers)
-        if node.metric:
-            matchers.append(Matcher(engine.metric_label, "=", node.metric))
-        df = base
-        dead = False
-        for m in matchers:
-            if m.name in df.columns:
-                df = df.filter(m.to_column())
-            elif not m.matches_empty():
-                # absent label == "" on every series: keep-none unless
-                # the matcher matches "" (then it is a no-op)
-                dead = True
-                break
-        if not dead:
-            frames.append(df)
-    if not frames:
-        return None
-    df = frames[0]
-    for other in frames[1:]:
-        df = df.unionByName(other)
-    if start_ms is not None:
-        df = df.filter(F.col("ts") >= F.lit(start_ms))
-    if end_ms is not None:
-        df = df.filter(F.col("ts") <= F.lit(end_ms))
-    return df
+    the per-row work — only the transformed schema is projected.  A
+    shared-scan engine (the server default) serves both from its
+    checkpointed working set; a plain engine keeps the fully
+    pushed-down scan."""
+    frames = [
+        engine.matched_samples(m, start_ms, end_ms, metadata=not values)
+        for m in parse_match_selectors(selectors, engine.metric_label)
+        or [[]]
+    ]
+    return reduce(DataFrame.unionByName, frames)
 
 
 def series_result(
@@ -234,24 +232,11 @@ def series_result(
     One distinct over the label columns (map-side combined); the union
     across selectors dedups in the same shuffle."""
     df = _match_frame(engine, selectors, start_ms, end_ms)
-    if df is None:
-        return []
     cols = list(engine.label_columns)
     rows = df.select(*cols).dropDuplicates(cols).collect()
     out = [_metric_of(r.asDict(), cols) for r in rows]
     out.sort(key=lambda m: sorted(m.items()))
     return out
-
-
-def _labels_source(engine, selectors, start_ms, end_ms) -> DataFrame | None:
-    if selectors:
-        return _match_frame(engine, selectors, start_ms, end_ms)
-    df = engine.metadata_frame()
-    if start_ms is not None:
-        df = df.filter(F.col("ts") >= F.lit(start_ms))
-    if end_ms is not None:
-        df = df.filter(F.col("ts") <= F.lit(end_ms))
-    return df
 
 
 def labels_result(
@@ -262,9 +247,7 @@ def labels_result(
 ) -> list[str]:
     """``/api/v1/labels``: names with >=1 non-empty value in range —
     one all-labels aggregate, the `querier.label_names` plan."""
-    df = _labels_source(engine, selectors, start_ms, end_ms)
-    if df is None:
-        return []
+    df = _match_frame(engine, selectors, start_ms, end_ms)
     cols = list(engine.label_columns)
     agg = df.agg(
         *[F.max(F.col(c) != F.lit("")).alias(c) for c in cols]
@@ -282,8 +265,8 @@ def label_values_result(
     """``/api/v1/label/<name>/values``: sorted distinct non-empty
     values.  A UTF-8 ``name`` resolves to its U__ column."""
     name = escape_name(name)
-    df = _labels_source(engine, selectors, start_ms, end_ms)
-    if df is None or name not in df.columns:
+    df = _match_frame(engine, selectors, start_ms, end_ms)
+    if name not in df.columns:
         return []
     rows = (
         df.select(name)
@@ -465,8 +448,6 @@ def render_federate(
         engine, selectors, time_ms - lookback_ms + 1, time_ms,
         values=True,
     )
-    if df is None:
-        return ""
     cols = list(engine.label_columns)
     latest = (
         df.groupBy(*cols)
@@ -719,16 +700,9 @@ class PromApiServer:
             ]
             if missing:
                 raise ValueError(f"missing parameter(s): {', '.join(missing)}")
-            node = parse_promql(p("query"))
-            if not isinstance(node, PromExpr) or node.func or node.agg:
-                raise ValueError(
-                    f"query_exemplars needs a plain selector: {p('query')!r}"
-                )
-            matchers = list(node.matchers)
-            if node.metric:
-                matchers.append(
-                    Matcher(eng.metric_label, "=", node.metric)
-                )
+            [matchers] = parse_match_selectors(
+                [p("query")], eng.metric_label, param="query"
+            )
             from tsdb_parquet_spark.sources.exemplars import select_exemplars
 
             df = select_exemplars(
@@ -915,19 +889,9 @@ class PromApiServer:
         maxt = (
             _parse_time_ms(raw_end) if raw_end is not None else (1 << 62)
         )
-        matcher_sets = []
-        for raw in selectors:
-            node = parse_promql(raw)
-            if not isinstance(node, PromExpr) or node.func or node.agg:
-                raise ValueError(
-                    f"match[] must be a plain selector: {raw!r}"
-                )
-            matchers = list(node.matchers)
-            if node.metric:
-                matchers.append(
-                    Matcher(self.engine.metric_label, "=", node.metric)
-                )
-            matcher_sets.append(matchers)
+        matcher_sets = parse_match_selectors(
+            selectors, self.engine.metric_label
+        )
         spark = self.engine.samples.sparkSession
         deleted = 0
         with self._engine_lock:

@@ -166,20 +166,16 @@ def cmd_exemplars(args) -> int:
     to the fully pushed-down scan (`sources.exemplars.select_exemplars`).
     ``--api-json`` prints the Prometheus response body — exemplars
     grouped per series, values as strings, timestamps in seconds."""
-    from tsdb_parquet_spark.operators.selection import Matcher
-    from tsdb_parquet_spark.plans.promql import PromExpr, parse_promql
+    from tsdb_parquet_spark.api import parse_match_selectors
     from tsdb_parquet_spark.session import get_spark
     from tsdb_parquet_spark.sources.exemplars import select_exemplars
 
-    node = parse_promql(args.query)
-    if not isinstance(node, PromExpr) or node.func or node.agg:
-        raise SystemExit(
-            "exemplars needs a plain instant selector, e.g. "
-            'app_events{event_type="click"}'
+    try:
+        [matchers] = parse_match_selectors(
+            [args.query], "__name__", param="query"
         )
-    matchers = list(node.matchers)
-    if node.metric:
-        matchers.append(Matcher("__name__", "=", node.metric))
+    except ValueError as exc:
+        raise SystemExit(str(exc)) from None
     spark = get_spark(app_name="tsdb-exemplars")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.perf_counter()

@@ -45,7 +45,8 @@ class Matcher:
         static: keep ALL series if the matcher matches ``""``, keep
         NONE otherwise.  `{foo=~".*"}` and `{foo=""}` keep everything;
         `{foo!=""}` ("series that have the label") and `{foo="x"}`
-        keep nothing.
+        keep nothing.  :func:`apply_matchers` is the only caller: every
+        reader resolves absent labels through it, never by hand.
         """
         import re
 
@@ -152,5 +153,21 @@ def conjunction(predicates: Iterable[Column]) -> Column:
 
 
 def apply_matchers(df: DataFrame, matchers: Iterable[Matcher]) -> DataFrame:
-    """P7 scan driver — the whole filter pipeline (`compute/scan.go:51-78`)."""
-    return df.filter(conjunction(m.to_column() for m in matchers))
+    """P7 scan driver — the whole filter pipeline (`compute/scan.go:51-78`).
+
+    The single owner of series selection: every reader filters label
+    matchers through here.  Each matcher on a column of ``df`` is one
+    filter (Catalyst combines them into the scan's pushed filters).  A
+    matcher on a column ``df`` lacks names a label absent (``""``) on
+    every series (`schema/chunk.go:109-112`), so
+    :meth:`Matcher.matches_empty` resolves it statically: a no-op, or
+    ``filter(lit(False))``.  Catalyst folds that dead filter to an empty
+    ``LocalTableScan`` (even under an aggregate over a Parquet scan), so
+    a dead selector scans nothing and callers need no branch for it.
+    """
+    for m in matchers:
+        if m.name in df.columns:
+            df = df.filter(m.to_column())
+        elif not m.matches_empty():
+            return df.filter(F.lit(False))
+    return df

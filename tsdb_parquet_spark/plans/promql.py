@@ -91,7 +91,7 @@ from pyspark.sql import functions as F
 
 from tsdb_parquet_spark.names import escape_name as _escape_name
 from tsdb_parquet_spark.names import unescape_name as _unescape_name
-from tsdb_parquet_spark.operators.selection import Matcher
+from tsdb_parquet_spark.operators.selection import Matcher, apply_matchers
 
 DEFAULT_LOOKBACK_MS = 5 * 60 * 1000  # PromQL staleness window
 
@@ -1458,6 +1458,18 @@ _COMPOSED_AGGS = {
 }
 
 
+def _grouping(
+    columns: "list[str]", by: "list[str] | None", without: "list[str] | None"
+) -> list[str]:
+    """Grouping labels of a ``by``/``without`` clause over a frame's
+    label ``columns`` (``t``/``value`` are never labels).  A ``by``
+    label no series carries groups as absent, so it drops out."""
+    labels = [c for c in columns if c not in ("t", "value")]
+    if without is not None:
+        return [c for c in labels if c not in without]
+    return [c for c in by or [] if c in labels]
+
+
 class PromQLEngine:
     """Evaluates the PromQL subset over a samples DataFrame.
 
@@ -1583,6 +1595,34 @@ class PromQLEngine:
         if self.samples_transform is None:
             return base
         return base.select(*self._transformed_cols)
+
+    def matched_samples(
+        self,
+        matchers: "list[Matcher]",
+        start_ms: int | None = None,
+        end_ms: int | None = None,
+        metadata: bool = False,
+    ) -> DataFrame:
+        """Samples of the series ``matchers`` select with ``start_ms <=
+        ts <= end_ms`` (None = unbounded): the one selection seam of
+        every engine reader — PromQL selectors, series/labels/values,
+        federate and both remote-read paths.  The base frame is
+        :meth:`bounded_samples` at these bounds, or :meth:`metadata_frame`
+        for ``metadata`` callers; matchers go through
+        `operators.selection.apply_matchers` (absent labels included),
+        then the ``ts`` window, so both reach the Parquet scan as pushed
+        filters."""
+        df = (
+            self.metadata_frame()
+            if metadata
+            else self.bounded_samples(start_ms, end_ms)
+        )
+        df = apply_matchers(df, matchers)
+        if start_ms is not None:
+            df = df.filter(F.col("ts") >= F.lit(start_ms))
+        if end_ms is not None:
+            df = df.filter(F.col("ts") <= F.lit(end_ms))
+        return df
 
     def _shared_scan_alive(self) -> bool:
         """True when every materialized block of the shared-scan
@@ -1734,11 +1774,9 @@ class PromQLEngine:
                 continue
             ordered = sorted(cores.items())
             rep = ordered[0][1]
-            bucketed, series_cols, special = self._bucketed_selector(
+            bucketed, series_cols = self._bucketed_selector(
                 rep, start_ms, end_ms, step_ms, lookback_ms
             )
-            if special is not None:
-                continue  # statically empty: per-core paths handle it
             if self.stale_aware:
                 # markers are not samples in range selections
                 bucketed = bucketed.filter(~F.col("is_stale"))
@@ -1942,23 +1980,13 @@ class PromQLEngine:
             )
         if isinstance(node, PromAgg):
             inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
-            label_cols = [c for c in inner.columns if c not in ("t", "value")]
-            if node.without is not None:
-                by = [c for c in label_cols if c not in node.without]
-            else:
-                # a label no series carries groups as absent: drop it
-                by = [c for c in node.by or [] if c in label_cols]
+            by = _grouping(inner.columns, node.by, node.without)
             return inner.groupBy("t", *by).agg(
                 _OUTER_AGGS[node.op](F.col("value")).alias("value")
             )
         if isinstance(node, PromQuantileAgg):
             inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
-            label_cols = [c for c in inner.columns if c not in ("t", "value")]
-            if node.without is not None:
-                by = [c for c in label_cols if c not in node.without]
-            else:
-                # a label no series carries groups as absent: drop it
-                by = [c for c in node.by or [] if c in label_cols]
+            by = _grouping(inner.columns, node.by, node.without)
             return inner.groupBy("t", *by).agg(
                 F.percentile("value", F.lit(node.phi)).alias("value")
             )
@@ -2080,11 +2108,7 @@ class PromQLEngine:
         becomes the named label (cast to string — both engines print
         doubles as '<int>.0' for integral values), count as the new
         value.  One groupBy shuffle."""
-        label_cols = [c for c in df.columns if c not in ("t", "value")]
-        if node.without is not None:
-            by = [c for c in label_cols if c not in node.without]
-        else:
-            by = node.by or []  # default: aggregate every label away
+        by = _grouping(df.columns, node.by, node.without)
         return (
             df.groupBy(
                 "t", *by, F.col("value").cast("string").alias(node.label)
@@ -2217,7 +2241,7 @@ class PromQLEngine:
             base, grp, start_ms, end_ms, step_ms, lookback_ms
         )
         if mean is None:
-            # statically empty selector — keep the two-eval join shape
+            # `@`-pinned selector — the two-eval join resolves the pin
             mean = ev("_sum").withColumnRenamed("value", "__sum").join(
                 ev("_count").withColumnRenamed("value", "__count"),
                 on=["t", *grp],
@@ -2274,8 +2298,8 @@ class PromQLEngine:
         max_by replaces two instant-vector chains plus their join
         (guide §2.4).  Inner-join semantics preserved: a step/series
         where either side's latest sample is missing (or stale) drops.
-        Returns None when the selector is statically empty (caller
-        falls back to the two-eval join)."""
+        Returns None for an ``@``-pinned selector (caller falls back to
+        the two-eval join)."""
         import dataclasses
 
         if base.at_ms is not None:
@@ -2288,11 +2312,9 @@ class PromQLEngine:
         pair_core = dataclasses.replace(
             base, metric=None, agg=None, by=None, without=None
         )
-        bucketed, _, special = self._bucketed_selector(
+        bucketed, _ = self._bucketed_selector(
             pair_core, start_ms, end_ms, step_ms, lookback_ms
         )
-        if special is not None:
-            return None
         # deterministic column filter: Catalyst pushes the In through
         # the step-bucketing projection to the parquet scan
         bucketed = bucketed.filter(F.col(mn).isin(sum_m, cnt_m))
@@ -2715,12 +2737,7 @@ class PromQLEngine:
         )
         if expr.agg is None:
             return per_series
-        series_cols = [c for c in self.label_columns if c != self.metric_label]
-        if expr.without is not None:
-            by = [c for c in series_cols if c not in expr.without]
-        else:
-            # a label no series carries groups as absent: drop it
-            by = [c for c in expr.by or [] if c in series_cols]
+        by = _grouping(per_series.columns, expr.by, expr.without)
         return per_series.groupBy("t", *by).agg(
             _OUTER_AGGS[expr.agg](F.col("value")).alias("value")
         )
@@ -2759,25 +2776,12 @@ class PromQLEngine:
             # the core is already served by a fused multi-function frame
             # (query_range_many) — reuse it instead of a parallel chain
             return None
-        series_cols = [c for c in self.label_columns if c != self.metric_label]
-        if expr.without is not None:
-            by = [c for c in series_cols if c not in expr.without]
-        else:
-            by = expr.by or []
-        if not set(by) <= set(series_cols):
-            # a `by` label no series carries would resolve against the
-            # bucketed frame's own columns (`by (value)` = the raw sample
-            # values); the per-series path groups by labels only
-            return None
-        bucketed, _, special = self._bucketed_selector(
+        bucketed, series_cols = self._bucketed_selector(
             core, start_ms, end_ms, step_ms, lookback_ms
         )
-        if special is not None:
-            # statically empty selector: mirror the per-series path's
-            # empty-aggregation plan exactly
-            return special.groupBy("t", *by).agg(
-                _OUTER_AGGS[expr.agg](F.col("value")).alias("value")
-            )
+        # group by labels only, never the bucketed frame's own columns
+        # (`by (value)` would otherwise group by the raw sample values)
+        by = _grouping(series_cols, expr.by, expr.without)
         if self.stale_aware:
             # markers are not samples in range selections (_range_value)
             bucketed = bucketed.filter(~F.col("is_stale"))
@@ -2810,58 +2814,35 @@ class PromQLEngine:
     def _selector_series_inner(
         self, expr: PromExpr, start_ms, end_ms, step_ms, lookback_ms
     ) -> DataFrame:
-        bucketed, series_cols, special = self._bucketed_selector(
+        bucketed, series_cols = self._bucketed_selector(
             expr, start_ms, end_ms, step_ms, lookback_ms
         )
-        if special is not None:
-            return special
+        if expr.func == "absent_over_time":
+            return self._absent_over_time(
+                expr, bucketed, start_ms, end_ms, step_ms
+            )
         return self._range_value(expr, bucketed, series_cols)
 
     def _bucketed_selector(
         self, expr: PromExpr, start_ms, end_ms, step_ms, lookback_ms
     ):
         """Matcher-filtered, step-bucketed sample frame of a selector
-        core — the shared front half of :meth:`_selector_series_inner`
-        and :meth:`_composed_agg`.  Returns ``(bucketed, series_cols,
-        None)``, or ``(None, None, frame)`` when the selector
-        short-circuits (statically empty matcher, absent_over_time)."""
+        core — the shared front half of :meth:`_selector_series_inner`,
+        :meth:`_composed_agg`, the fused cores and the histogram mean.
+        Returns ``(bucketed, series_cols)``."""
         window_ms = expr.range_ms if expr.func else lookback_ms
         off = expr.offset_ms
 
         matchers = list(expr.matchers)
         if expr.metric:
             matchers.append(Matcher(self.metric_label, "=", expr.metric))
-        # the per-query transform (e.g. bounded replica vote) sees THIS
-        # selector's exact pre-offset-shift window; matcher filters
-        # apply above it and Catalyst pushes them through to the scan
-        df = self.bounded_samples(
-            start_ms - window_ms - off + 1, end_ms - off
-        )
-        selector_matches_nothing = False
-        for m in matchers:
-            if m.name in df.columns:
-                df = df.filter(m.to_column())
-            elif not m.matches_empty():
-                # column never materialized -> the label is absent ("")
-                # on EVERY series; a matcher that does not match ""
-                # statically empties the selector ({foo!=""}, {foo="x"}),
-                # while one that does ({foo=""}, {foo=~".*"}) is a no-op
-                if expr.func == "absent_over_time":
-                    selector_matches_nothing = True
-                    break
-                return None, None, self._empty(expr)
-        if expr.func == "absent_over_time":
-            return None, None, self._absent_over_time(
-                expr, df, selector_matches_nothing, start_ms, end_ms, step_ms
-            )
-
         # prune to the evaluation window before any join/shuffle; the
-        # offset modifier shifts the BOUNDS (plain ts comparisons still
-        # reach the parquet scan as pushed filters), then shifts the
-        # surviving timestamps so all downstream step math is unchanged
-        df = df.filter(
-            (F.col("ts") > F.lit(start_ms - window_ms - off))
-            & (F.col("ts") <= F.lit(end_ms - off))
+        # offset modifier shifts the BOUNDS (the per-query transform sees
+        # this exact pre-shift window, and plain ts comparisons reach the
+        # parquet scan as pushed filters), then shifts the surviving
+        # timestamps so all downstream step math is unchanged
+        df = self.matched_samples(
+            matchers, start_ms - window_ms - off + 1, end_ms - off
         )
         if off:
             df = df.withColumn("ts", F.col("ts") + F.lit(off))
@@ -2875,7 +2856,7 @@ class PromQLEngine:
         else:
             bucketed = self._join_steps(df, start_ms, end_ms, step_ms, window_ms)
 
-        return bucketed, series_cols, None
+        return bucketed, series_cols
 
     def _info(
         self, inner: DataFrame, node: PromInfo,
@@ -2964,42 +2945,22 @@ class PromQLEngine:
         )
 
     def _absent_over_time(
-        self, expr, df, selector_matches_nothing, start_ms, end_ms, step_ms
+        self, expr, bucketed, start_ms, end_ms, step_ms
     ) -> DataFrame:
         """absent_over_time(m[d]): 1.0 at every step whose window holds NO
         matching sample — the step axis anti-joined against the distinct
-        present steps (both sides are tiny: O(steps)); labels synthesized
-        from the equality matchers, Prometheus-style."""
-        spark = self.samples.sparkSession
-        steps = spark.range(1).select(
-            F.explode(
-                F.sequence(F.lit(start_ms), F.lit(end_ms), F.lit(step_ms))
-            ).alias("t")
-        )
-        eq_labels = [
-            (m.name, m.value)
+        present steps of the bucketed selector (both sides are tiny:
+        O(steps)); labels synthesized from the equality matchers,
+        Prometheus-style."""
+        label_cols = [
+            F.lit(m.value).alias(m.name)
             for m in expr.matchers
             if m.op == "=" and m.name != self.metric_label
         ]
-        label_cols = [F.lit(v).alias(k) for k, v in eq_labels]
-        if selector_matches_nothing:
-            absent = steps
-        else:
-            window_ms = expr.range_ms
-            off = expr.offset_ms
-            pruned = df.filter(
-                (F.col("ts") > F.lit(start_ms - window_ms - off))
-                & (F.col("ts") <= F.lit(end_ms - off))
-            )
-            if off:
-                pruned = pruned.withColumn("ts", F.col("ts") + F.lit(off))
-            bucketed = (
-                self._assign_steps(pruned, start_ms, end_ms, step_ms, window_ms)
-                if window_ms == step_ms
-                else self._join_steps(pruned, start_ms, end_ms, step_ms, window_ms)
-            )
-            present = bucketed.select("t").distinct()
-            absent = steps.join(present, "t", "left_anti")
+        present = bucketed.select("t").distinct()
+        absent = self._steps_frame(start_ms, end_ms, step_ms).join(
+            present, "t", "left_anti"
+        )
         return absent.select("t", *label_cols, F.lit(1.0).alias("value"))
 
     def query_instant(
@@ -3300,14 +3261,6 @@ class PromQLEngine:
         if expr.func == "increase":
             return F.when(sampled > 0, inc)
         return F.when(sampled > 0, inc * F.lit(1000.0) / F.lit(range_ms))
-
-    def _empty(self, expr: PromExpr) -> DataFrame:
-        spark = self.samples.sparkSession
-        cols = expr.by if expr.agg is not None else [
-            c for c in self.label_columns if c != self.metric_label
-        ]
-        schema = "t BIGINT, " + "".join(f"{c} STRING, " for c in cols) + "value DOUBLE"
-        return spark.createDataFrame([], schema)
 
 
 # ---------------------------------------------------------------------------

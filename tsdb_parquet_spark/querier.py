@@ -30,7 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsdb_parquet_spark.chunks import chunks_to_samples
-from tsdb_parquet_spark.operators.selection import Matcher, conjunction
+from tsdb_parquet_spark.operators.selection import (
+    Matcher,
+    apply_matchers,
+    conjunction,
+)
 from tsdb_parquet_spark.schema import (
     MAX_T,
     MIN_T,
@@ -132,8 +136,9 @@ class ChunkQuerier:
     def _filtered(
         self, mint: int | None, maxt: int | None, matchers: Iterable[Matcher]
     ) -> DataFrame:
-        preds = [m.to_column() for m in matchers] + self._time_preds(mint, maxt)
-        return self.chunks.filter(conjunction(preds))
+        return apply_matchers(self.chunks, matchers).filter(
+            conjunction(self._time_preds(mint, maxt))
+        )
 
     def select_chunks(
         self,

@@ -212,14 +212,23 @@ def decode_read_response(
     return results
 
 
+def _query_samples(engine, start_ms, end_ms, matchers):
+    """One read query's samples through the engine's selection seam.
+    Wire matchers carry RAW (possibly UTF-8) names; the store's columns
+    are their U__ value-encoded forms."""
+    return engine.matched_samples(
+        [Matcher(escape_name(m.name), m.op, m.value) for m in matchers],
+        int(start_ms),
+        int(end_ms),
+    )
+
+
 def serve_read_request(engine, body: bytes) -> bytes:
     """Snappy-framed ReadRequest body -> snappy-framed ReadResponse.
 
-    Per query: matchers compile onto the engine's samples frame (full
-    predicate + ts-range pushdown — a matcher naming a label the store
-    does not carry resolves statically via the ""-is-absent convention:
-    keep-none unless it matches "", in which case it is a no-op),
-    samples group per series via ``collect_list`` (one
+    Per query: `PromQLEngine.matched_samples` selects the samples (full
+    predicate + ts-range pushdown, absent labels resolved like every
+    other reader), samples group per series via ``collect_list`` (one
     shuffle), and series sort by label set like Prometheus's response
     writer.  Matched-sample materialization is the protocol's own
     contract — see the module docstring."""
@@ -227,29 +236,7 @@ def serve_read_request(engine, body: bytes) -> bytes:
     cols = list(engine.label_columns)
     results = []
     for start_ms, end_ms, matchers in queries:
-        # bounded_samples applies the engine's per-query transform
-        # (e.g. the replica vote pruned to this query's buckets);
-        # without one it is the plain samples frame
-        df = engine.bounded_samples(int(start_ms), int(end_ms))
-        dead = False
-        for m in matchers:
-            # wire matchers carry RAW (possibly UTF-8) names; the
-            # store's columns are their U__ value-encoded forms
-            m = Matcher(escape_name(m.name), m.op, m.value)
-            if m.name in df.columns:
-                df = df.filter(m.to_column())
-            elif not m.matches_empty():
-                # absent label == "" on every series: keep-none unless
-                # the matcher matches "" (then it is a no-op)
-                dead = True
-                break
-        if dead:
-            results.append([])
-            continue
-        df = df.filter(
-            (F.col("ts") >= F.lit(int(start_ms)))
-            & (F.col("ts") <= F.lit(int(end_ms)))
-        )
+        df = _query_samples(engine, start_ms, end_ms, matchers)
         grouped = df.groupBy(*cols).agg(
             F.sort_array(
                 F.collect_list(F.struct("ts", "value"))
@@ -425,29 +412,7 @@ def serve_read_request_streamed(
     cols = list(engine.label_columns)
     sorted_cols = sorted(cols)
     for qi, (start_ms, end_ms, matchers) in enumerate(queries):
-        df = engine.bounded_samples(int(start_ms), int(end_ms))
-        dead = False
-        for m in matchers:
-            # wire matchers carry RAW (possibly UTF-8) names; the
-            # store's columns are their U__ value-encoded forms
-            m = Matcher(escape_name(m.name), m.op, m.value)
-            if m.name in df.columns:
-                df = df.filter(m.to_column())
-            elif not m.matches_empty():
-                # absent label == "": keep-none unless it matches ""
-                dead = True
-                break
-        if dead:
-            # an empty QueryResult still gets one (empty) frame so the
-            # client sees the query_index advance
-            yield frame_chunked_message(
-                encode_chunked_read_response([], qi)
-            )
-            continue
-        df = df.filter(
-            (F.col("ts") >= F.lit(int(start_ms)))
-            & (F.col("ts") <= F.lit(int(end_ms)))
-        )
+        df = _query_samples(engine, start_ms, end_ms, matchers)
         chunk_rows = samples_to_chunks(
             df,
             cols,
@@ -481,6 +446,8 @@ def serve_read_request_streamed(
                 emitted = True
                 pending, pending_bytes, prev_key = [], 0, None
         if pending or not emitted:
+            # an empty QueryResult still gets one (empty) frame so the
+            # client sees the query_index advance
             yield frame_chunked_message(
                 encode_chunked_read_response(pending, qi)
             )

@@ -132,7 +132,7 @@ def select_exemplars(
     derived ``__day`` bounds before any footer is read."""
     import os
 
-    from tsdb_parquet_spark.operators.selection import conjunction
+    from tsdb_parquet_spark.operators.selection import apply_matchers
 
     mint, maxt = int(mint), int(maxt)
     if os.path.isdir(store) and any(
@@ -151,13 +151,11 @@ def select_exemplars(
     else:
         df = spark.read.parquet(store)
     pred = (F.col("ts") >= F.lit(mint)) & (F.col("ts") <= F.lit(maxt))
-    if matchers:
-        pred = conjunction([m.to_column() for m in matchers]) & pred
     if "__day" in df.columns:
         pred = (
             pred
             & (F.col("__day") >= F.lit(mint // _DAY_MS))
             & (F.col("__day") <= F.lit(maxt // _DAY_MS))
         )
-    out = df.filter(pred)
+    out = apply_matchers(df, matchers).filter(pred)
     return out.drop("__day") if "__day" in df.columns else out
