@@ -450,6 +450,35 @@ def test_nan_value_survives_json(spark):
     assert p["data"]["result"][0]["value"][1] == "NaN"
 
 
+@pytest.mark.parametrize(
+    "query,order",
+    [
+        ("sort(m)", ["b", "c", "a", "d"]),
+        ("sort_desc(m)", ["a", "c", "b", "d"]),
+        ('sort_by_label(m, "inst")', ["a", "b", "c", "d"]),
+        ('sort_by_label_desc(m, "inst")', ["d", "c", "b", "a"]),
+        ("m", ["d", "c", "a", "b"]),
+    ],
+)
+def test_instant_sort_order(spark, query, order):
+    # label-set order (az sorts first) is d, c, a, b: unlike every sort*
+    # order, so each case fails if the renderer ignores the sort.  NaN
+    # sorts last under sort and sort_desc alike, as in Prometheus
+    rows = [
+        ("m", "a", "y", 60_000, 3.0),
+        ("m", "b", "z", 60_000, 1.0),
+        ("m", "c", "x", 60_000, 2.0),
+        ("m", "d", "w", 60_000, float("nan")),
+    ]
+    df = spark.createDataFrame(
+        rows, "`__name__` STRING, inst STRING, az STRING, ts LONG, value DOUBLE"
+    )
+    with PromApiServer(PromQLEngine(df)) as url:
+        p = api_get_json(url, "/api/v1/query", {"query": query, "time": 90})
+    assert p["status"] == "success"
+    assert [e["metric"]["inst"] for e in p["data"]["result"]] == order
+
+
 def test_buildinfo_and_lifecycle_probes(api):
     p = api_get_json(api, "/api/v1/status/buildinfo", {})
     assert p["status"] == "success"

@@ -11,7 +11,9 @@ pruning stack must actually appear in the executed plans.
 """
 
 import io
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from tsdb_parquet_spark.operators.selection import Matcher
@@ -722,3 +724,94 @@ def test_utf8_quoted_matcher_pushed_on_escaped_column(spark, tmp_path):
     pushed = plan.split("PushedFilters")[1].split("\n")[0]
     assert "EqualTo(U__deploy_2e_env,prod)" in pushed.replace(" ", "")
     assert "EqualTo(__name__,m)" in pushed.replace(" ", "")
+
+
+ADHOC_LABELS = ["__name__", "instance", "job"]
+
+
+@pytest.fixture(scope="module")
+def adhoc_server(spark, tmp_path_factory):
+    """A small native chunk store served the way the ``adhoc`` benchmark
+    serves one: ``PromApiServer`` over a plain (unpinned) engine."""
+    from tsdb_parquet_spark.api import PromApiServer
+    from tsdb_parquet_spark.chunks import samples_to_chunks
+    from tsdb_parquet_spark.plans.promql import PromQLEngine
+    from tsdb_parquet_spark.querier import ChunkQuerier
+    from tsdb_parquet_spark.schema import sort_columns
+    from tsdb_parquet_spark.sources.writer import WriterOptions, write_sorted
+
+    rows = [
+        (name, host, job, k * 60_000, float(k * (i + 1)) if name == "c" else float(i))
+        for name in ("c", "g")
+        for i, (job, host) in enumerate(
+            (j, h) for j in ("j0", "j1") for h in ("h0", "h1", "h2")
+        )
+        for k in range(180)
+    ]
+    samples = spark.createDataFrame(
+        rows, "`__name__` string, instance string, job string, ts long, value double"
+    )
+    store = str(tmp_path_factory.mktemp("adhoc") / "store")
+    write_sorted(
+        samples_to_chunks(samples, ADHOC_LABELS, chunk_span_ms=3_600_000),
+        store,
+        WriterOptions(sort_columns=sort_columns(ADHOC_LABELS), max_files=2),
+    )
+    engine = PromQLEngine(
+        ChunkQuerier.from_store(spark, store).select_samples(labels=ADHOC_LABELS)
+    )
+    server = PromApiServer(engine)
+    url = server.start()
+    yield url
+    server.stop()
+
+
+@pytest.mark.parametrize(
+    "query,pushed",
+    [
+        ('rate(c{instance="h1"}[5m])',
+         ["EqualTo(instance,h1)", "EqualTo(__name__,c)"]),
+        ('max_over_time(g{job="j0",instance=~"h0|h2"}[10m])',
+         ["EqualTo(job,j0)", "In(instance, [h0,h2])", "EqualTo(__name__,g)"]),
+    ],
+)
+def test_adhoc_range_request_runs_two_jobs_unsorted(
+    spark, adhoc_server, monkeypatch, query, pushed
+):
+    """A one-selector range request over HTTP runs exactly two Spark
+    jobs (the map stage and the aggregate): the engine never orders its
+    result with a distributed sort, whose range-partition sampling job
+    and shuffle the renderer's own ordering made pure cost.  The step
+    fan-out is ONE generator producing ``t`` straight from ``ts``, and
+    the scan keeps its pruning: same ReadSchema, same pushed matchers."""
+    from tsdb_parquet_spark import api
+
+    rendered = []
+    real = api.matrix_result
+    monkeypatch.setattr(
+        api, "matrix_result", lambda df: rendered.append(df) or real(df)
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    body = api.api_get_json(
+        adhoc_server, "/api/v1/query_range",
+        {"query": query, "start": 3600, "end": 7200, "step": 60},
+    )
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert body["status"] == "success" and len(body["data"]["result"]) == 2
+    assert len(jobs) == 2, sorted(jobs)
+
+    plan = _plan(rendered[0]).split("== Initial Plan ==")[0]
+    assert "rangepartitioning" not in plan
+    assert not re.search(r"\bSort \[", plan), plan
+    fanout = [ln for ln in plan.splitlines() if "Generate explode(sequence(" in ln]
+    assert len(fanout) == 1, plan
+    assert re.search(r", false, \[t#\d+L?\]$", fanout[0]), fanout[0]
+    assert (
+        "ReadSchema: struct<__ts:array<bigint>,__values:array<double>,"
+        "__name__:string,instance:string,job:string>" in plan
+    )
+    pushed_line = plan.split("PushedFilters: ")[1].split("ReadSchema")[0]
+    for f in pushed:
+        assert f in pushed_line, pushed_line
+    assert "__mint" not in pushed_line and "__maxt" not in pushed_line

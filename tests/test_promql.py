@@ -15,6 +15,7 @@ from tsdb_parquet_spark.plans.promql import (
     PromQLEngine,
     parse_duration_ms,
     parse_promql,
+    sort_vector,
 )
 
 
@@ -60,7 +61,7 @@ def test_golden_sum_constant_series(spark):
     """`prometheus/promql_test.go:45-58` golden expectation."""
     engine = PromQLEngine(_stub_samples(spark))
     out = engine.query_range("sum(http_requests_total)", 0, 300_000, 60_000)
-    rows = out.collect()
+    rows = sorted(out.collect(), key=lambda r: r["t"])
     assert [r["t"] for r in rows] == [0, 60_000, 120_000, 180_000, 240_000, 300_000]
     assert all(r["value"] == 3.0 for r in rows)
 
@@ -802,6 +803,7 @@ def test_instant_absent(spark):
     e = PromQLEngine(samples)
     # selector matching nothing: absent at every step, labels synthesized
     out = e.query_range('absent(m{job="zzz"})', 0, 120_000, 60_000).collect()
+    out.sort(key=lambda r: r["t"])
     assert [(r["t"], r["job"], r["value"]) for r in out] == [
         (0, "zzz", 1.0), (60_000, "zzz", 1.0), (120_000, "zzz", 1.0)
     ]
@@ -809,23 +811,32 @@ def test_instant_absent(spark):
     out = e.query_range(
         'absent(m{job="b"})', 0, 300_000, 60_000, lookback_ms=30_000
     ).collect()
-    assert [r["t"] for r in out] == [60_000, 120_000]
+    assert sorted(r["t"] for r in out) == [60_000, 120_000]
     # derived vectors: label-free, and empty when the vector is dense
     assert (
         e.query_range('absent(sum(m{job="a"}))', 0, 60_000, 60_000).count() == 0
     )
 
 
+def _step_order(promql: str, rows, t: int) -> list:
+    """Step ``t``'s rows in the order the vector renderer gives them:
+    frames are unordered, ``sort*`` is applied at the render boundary."""
+    samples = [
+        ({k: v for k, v in r.asDict().items() if k not in ("t", "value") and v},
+         r["value"], r)
+        for r in rows if r["t"] == t
+    ]
+    return [s[2] for s in sort_vector(parse_promql(promql), samples)]
+
+
 def test_sort_desc(spark):
     samples = _stub_samples(spark)
     e = PromQLEngine(samples)
-    out = e.query_range(
-        "sort_desc(sum by (job) (count_over_time(http_requests_total[1m])))",
-        60_000, 120_000, 60_000,
-    ).collect()
+    q = "sort_desc(sum by (job) (count_over_time(http_requests_total[1m])))"
+    out = e.query_range(q, 60_000, 120_000, 60_000).collect()
     # api-server has 2 series, kubelet 1 -> desc order within each step
     for t in (60_000, 120_000):
-        vals = [(r["job"], r["value"]) for r in out if r["t"] == t]
+        vals = [(r["job"], r["value"]) for r in _step_order(q, out, t)]
         assert vals == sorted(vals, key=lambda x: -x[1])
         assert vals[0][0] == "api-server"
     # nested sort is a presentation no-op, not an error
@@ -840,21 +851,21 @@ def test_sort_by_label(spark):
     sorting as empty string."""
     samples = _stub_samples(spark)
     e = PromQLEngine(samples)
-    out = e.query_range(
+    q = (
         'sort_by_label(sum by (job) '
-        "(count_over_time(http_requests_total[1m])), \"job\")",
-        60_000, 120_000, 60_000,
-    ).collect()
+        "(count_over_time(http_requests_total[1m])), \"job\")"
+    )
+    out = e.query_range(q, 60_000, 120_000, 60_000).collect()
     for t in (60_000, 120_000):
-        jobs = [r["job"] for r in out if r["t"] == t]
+        jobs = [r["job"] for r in _step_order(q, out, t)]
         assert jobs == sorted(jobs)
-    out = e.query_range(
+    q = (
         'sort_by_label_desc(sum by (job) '
-        "(count_over_time(http_requests_total[1m])), \"job\")",
-        60_000, 120_000, 60_000,
-    ).collect()
+        "(count_over_time(http_requests_total[1m])), \"job\")"
+    )
+    out = e.query_range(q, 60_000, 120_000, 60_000).collect()
     for t in (60_000, 120_000):
-        jobs = [r["job"] for r in out if r["t"] == t]
+        jobs = [r["job"] for r in _step_order(q, out, t)]
         assert jobs == sorted(jobs, reverse=True)
     # a label the vector does not carry sorts as "" for every series —
     # remaining labels break the tie, and parsing must not error
@@ -1092,12 +1103,13 @@ def test_postfix_grouping_positions_equivalent(spark):
 def test_unary_minus_and_negative_offset(spark):
     engine = PromQLEngine(_stub_samples(spark))
     # unary minus: value-wise negation, labels kept
-    neg = engine.query_range(
-        "-sum(http_requests_total)", 0, 300_000, 60_000
-    ).collect()
-    pos = engine.query_range(
-        "sum(http_requests_total)", 0, 300_000, 60_000
-    ).collect()
+    def by_t(q, start, end):
+        # frames are unordered: order this comparison's rows by step
+        rows = engine.query_range(q, start, end, 60_000).collect()
+        return sorted(rows, key=lambda r: r["t"])
+
+    neg = by_t("-sum(http_requests_total)", 0, 300_000)
+    pos = by_t("sum(http_requests_total)", 0, 300_000)
     assert [(r["t"], r["value"]) for r in neg] == [
         (r["t"], -r["value"]) for r in pos
     ]
@@ -1105,13 +1117,8 @@ def test_unary_minus_and_negative_offset(spark):
     assert parse_promql("-2^2") == -4.0
     # negative offset looks FORWARD: evaluating at t with offset -60s
     # equals evaluating at t+60s without it
-    fwd = engine.query_range(
-        'http_requests_total{job="kubelet"} offset -60s',
-        0, 240_000, 60_000,
-    ).collect()
-    base = engine.query_range(
-        'http_requests_total{job="kubelet"}', 60_000, 300_000, 60_000
-    ).collect()
+    fwd = by_t('http_requests_total{job="kubelet"} offset -60s', 0, 240_000)
+    base = by_t('http_requests_total{job="kubelet"}', 60_000, 300_000)
     assert [r["value"] for r in fwd] == [r["value"] for r in base]
     assert [r["t"] + 60_000 for r in fwd] == [r["t"] for r in base]
 

@@ -174,6 +174,44 @@ def test_remote_write_frame_prunes_to_payload_column(spark, tmp_path):
     assert out.count() == len(SERIES[0][1])
 
 
+NAN_SERIES = [({"__name__": "up", "job": "a"}, [(60_000, 1.0), (120_000, float("nan"))])]
+
+
+@pytest.fixture(scope="module")
+def nan_samples(spark):
+    body = frame_payload(encode_write_request(NAN_SERIES, version=1))
+    df = spark.createDataFrame([(bytearray(body),)], "payload binary")
+    return remote_write_frame(df, ["__name__", "job"])
+
+
+def test_remote_write_frame_keeps_nan(nan_samples):
+    # a NaN sample value is a value, not a missing one: the decode must
+    # not hand it to Arrow through pandas, which reads NaN as null
+    rows = sorted((r["ts"], r["value"]) for r in nan_samples.collect())
+    assert rows[0] == (60_000, 1.0)
+    assert rows[1][0] == 120_000
+    assert rows[1][1] is not None and math.isnan(rows[1][1])
+
+
+def test_remote_write_nan_renders_and_counts(nan_samples):
+    from tsdb_parquet_spark.api import PromApiServer, api_get_json
+    from tsdb_parquet_spark.plans.promql import PromQLEngine
+
+    with PromApiServer(PromQLEngine(nan_samples)) as url:
+        p = api_get_json(url, "/api/v1/query", {"query": "up", "time": 150})
+        assert p["status"] == "success"
+        [sample] = p["data"]["result"]
+        assert sample["metric"]["job"] == "a"
+        assert sample["value"] == [150.0, "NaN"]
+        p = api_get_json(
+            url, "/api/v1/query",
+            {"query": "count_over_time(up[2m])", "time": 150},
+        )
+        assert p["data"]["result"] == [
+            {"metric": {"job": "a"}, "value": [150.0, "2"]}
+        ]
+
+
 # ---------------------------------------------------------------------------
 # adversarial-input fuzz: the decoder ingests bytes from the network; it
 # must either decode or raise ValueError — never IndexError/KeyError/

@@ -160,10 +160,11 @@ def matrix_result(df: DataFrame) -> list[dict]:
     return to_api_response(df)["data"]["result"]
 
 
-def vector_result(df: DataFrame) -> list[dict]:
+def vector_result(df: DataFrame, node=None) -> list[dict]:
     """``resultType: vector`` payload — the frame must hold one step
-    (`plans.promql.to_api_instant_response`)."""
-    return to_api_instant_response(df)["data"]["result"]
+    (`plans.promql.to_api_instant_response`); ``node`` is the parsed
+    query, whose top-level ``sort*`` orders the samples."""
+    return to_api_instant_response(df, node=node)["data"]["result"]
 
 
 def parse_match_selectors(
@@ -674,7 +675,10 @@ class PromApiServer:
                 df = eng.query_range(
                     expr, t, t, 1, lookback_ms=self.lookback_ms
                 )
-                return {"resultType": "vector", "result": vector_result(df)}
+                return {
+                    "resultType": "vector",
+                    "result": vector_result(df, node),
+                }
         if path == "/api/v1/query_range":
             expr = p("query")
             missing = [

@@ -148,9 +148,21 @@ def cmd_promql(args) -> int:
         n = sum(len(s["values"]) for s in resp["data"]["result"])
         print(_json.dumps(resp))
     else:
-        rows = out.collect()
-        n = len(rows)
-        for row in rows:
+        from tsdb_parquet_spark.names import unescape_name
+        from tsdb_parquet_spark.plans.promql import parse_promql, sort_vector
+
+        # the frame is unordered: print each step's samples in the
+        # order an instant query at that step would render them
+        label_cols = [c for c in out.columns if c not in ("t", "value")]
+        samples = [
+            ({unescape_name(c): row[c] for c in label_cols if row[c]},
+             row["value"], row)
+            for row in out.collect()
+        ]
+        sort_vector(parse_promql(args.query), samples)
+        samples.sort(key=lambda s: s[2]["t"])
+        n = len(samples)
+        for _metric, _value, row in samples:
             print(row.asDict())
     print(
         f"# evaluated in {time.perf_counter() - t0:.1f}s rows={n}",

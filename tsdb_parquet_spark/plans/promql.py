@@ -519,8 +519,9 @@ class PromSort:
     ``sort_by_label(v, "lbl", ...)`` / ``sort_by_label_desc`` (Prometheus
     experimental functions) order by the named labels' string values
     instead, absent labels sorting as "".  Only meaningful at the top of
-    the query (Prometheus ignores nested sorts in range queries); the
-    evaluator applies it as the final ORDER BY."""
+    an instant query (Prometheus ignores sorts in range queries and
+    nested ones): the evaluator passes the inner frame through, and the
+    vector renderer orders its collected samples by :func:`sort_vector`."""
 
     inner: "PromNode"
     ascending: bool = True
@@ -1664,7 +1665,14 @@ class PromQLEngine:
         lookback_ms: int = DEFAULT_LOOKBACK_MS,
     ) -> DataFrame:
         """Evaluate at steps t = start, start+step, ..., <=end.  Output:
-        (t BIGINT, <series or by labels>..., value DOUBLE)."""
+        (t BIGINT, <series or by labels>..., value DOUBLE).
+
+        The frame is UNORDERED: order is a rendering concern, owned by
+        the boundary that collects it (`to_api_response` orders a
+        matrix by labels, `to_api_instant_response` a vector by
+        :func:`sort_vector`, which applies a top-level ``sort*``).  A
+        distributed sort here would cost a range-partition sampling job
+        and a shuffle that the driver-side collect then redoes."""
         node = parse_promql(promql)
         if isinstance(node, float):
             raise ValueError("scalar-only query has no vector result")
@@ -1685,8 +1693,7 @@ class PromQLEngine:
         self._subtree_refs = _count_subtrees(node)
         self._core_refs = _count_selector_cores(node)
         self._inner_evals: dict[str, int] = {}
-        out = self._eval(node, start_ms, end_ms, step_ms, lookback_ms)
-        return self._ordered(node, out)
+        return self._eval(node, start_ms, end_ms, step_ms, lookback_ms)
 
     def query_range_many(
         self,
@@ -1731,9 +1738,7 @@ class PromQLEngine:
         self._inner_evals = {}
         self._seed_fused_cores(nodes, start_ms, end_ms, step_ms, lookback_ms)
         return [
-            self._ordered(
-                n, self._eval(n, start_ms, end_ms, step_ms, lookback_ms)
-            )
+            self._eval(n, start_ms, end_ms, step_ms, lookback_ms)
             for n in nodes
         ]
 
@@ -1795,29 +1800,6 @@ class PromQLEngine:
                 ] = fused.select(
                     *keys, F.col(f"__fused_{i}").alias("value")
                 )
-
-    def _ordered(self, node, out: DataFrame) -> DataFrame:
-        label_cols = [c for c in out.columns if c not in ("t", "value")]
-        if isinstance(node, PromSort):
-            if node.by_labels:
-                # absent labels sort as "" (Prometheus string order);
-                # remaining labels break ties deterministically
-                keys = [
-                    (
-                        F.coalesce(F.col(lbl), F.lit(""))
-                        if lbl in label_cols
-                        else F.lit("")
-                    )
-                    for lbl in node.by_labels
-                ]
-                keys = [k.asc() if node.ascending else k.desc() for k in keys]
-                rest = [c for c in label_cols if c not in node.by_labels]
-                return out.orderBy("t", *keys, *rest)
-            value_order = (
-                F.col("value").asc() if node.ascending else F.col("value").desc()
-            )
-            return out.orderBy("t", value_order, *label_cols)
-        return out.orderBy("t", *label_cols)
 
     def release_cache(self) -> None:
         """Drop the engine's references to the shared-subtree frames
@@ -1926,8 +1908,8 @@ class PromQLEngine:
         if isinstance(node, PromSetOp):
             return self._eval_setop(node, start_ms, end_ms, step_ms, lookback_ms)
         if isinstance(node, PromSort):
-            # ordering is applied at the top of query_range; nested sorts
-            # are presentation no-ops (Prometheus range-query semantics)
+            # ordering is applied by the renderer (sort_vector); nested
+            # sorts are presentation no-ops
             return self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
         if isinstance(node, PromAbsent):
             return self._absent_instant(
@@ -2845,7 +2827,7 @@ class PromQLEngine:
             matchers, start_ms - window_ms - off + 1, end_ms - off
         )
         if off:
-            df = df.withColumn("ts", F.col("ts") + F.lit(off))
+            df = df.withColumn("ts", F.expr(f"ts + {off}L"))
 
         series_cols = [c for c in self.label_columns if c != self.metric_label]
 
@@ -2986,16 +2968,18 @@ class PromQLEngine:
                 df, start_ms, end_ms, step_ms, window_ms
             )
         # numerator is >= 0 because ts > start - window >= start - step;
-        # integer `div` keeps the bucket math exact (no float rounding)
-        t = F.expr(
-            f"{start_ms}L + ((ts - {start_ms}L + {step_ms - 1}L) div {step_ms}L)"
-            f" * {step_ms}L"
+        # integer `div` keeps the bucket math exact (no float rounding).
+        # SQL text, one projection and one filter: each DataFrame call
+        # is a JVM round trip and an eager analysis
+        t = (
+            f"{start_ms}L + ((ts - {start_ms}L + {step_ms - 1}L)"
+            f" div {step_ms}L) * {step_ms}L"
         )
-        df = df.withColumn("t", t).filter(F.col("t") <= F.lit(end_ms))
+        keep = f"t <= {end_ms}L"
         if window_ms < step_ms:
             # sample must fall inside (t-window, t], not just the step
-            df = df.filter(F.col("ts") > F.col("t") - F.lit(window_ms))
-        return df
+            keep += f" AND ts > t - {window_ms}L"
+        return df.selectExpr("*", f"{t} AS t").where(keep)
 
     @staticmethod
     def _join_steps(df, start_ms, end_ms, step_ms, window_ms) -> DataFrame:
@@ -3003,37 +2987,32 @@ class PromQLEngine:
 
         A sample at ``ts`` contributes to steps ``t`` with ``ts <= t <
         ts + window`` — a contiguous run of step indices computable in
-        closed form.  ``explode(sequence(k_first, k_last))`` fans each
-        sample out to exactly its ~window/step steps and stays equi-shaped
-        (narrow, whole-stage codegen), where a range-predicate join against
-        the step axis would be a broadcast nested-loop testing every sample
-        against every step — O(samples x steps), a scale-killer at
-        30d/1m = 43k steps.
+        closed form.  ``explode(sequence(t_first, t_last, step))`` fans
+        each sample out to exactly its ~window/step steps and stays
+        equi-shaped (narrow, whole-stage codegen), where a range-predicate
+        join against the step axis would be a broadcast nested-loop
+        testing every sample against every step — O(samples x steps), a
+        scale-killer at 30d/1m = 43k steps.  Built as SQL text, one
+        ``where`` and one ``selectExpr``: each DataFrame call is a JVM
+        round trip and an eager analysis.
         """
         k_max = (end_ms - start_ms) // step_ms
         # k_first = ceil((ts - start)/step) clamped to >= 0.  For negative
         # numerators Spark's `div` truncates toward zero (!= ceil), but
         # every such k is <=0 and the clamp lands on the same 0.
-        k_first = F.greatest(
-            F.lit(0),
-            F.expr(f"(ts - {start_ms}L + {step_ms - 1}L) div {step_ms}L"),
+        k_first = (
+            f"greatest(0L, (ts - {start_ms}L + {step_ms - 1}L) div {step_ms}L)"
         )
         # k_last = ceil((ts + window - start)/step) - 1; numerator > 0
         # because the caller prefilters ts > start - window.
-        k_last = F.least(
-            F.lit(k_max),
-            F.expr(
-                f"(ts + {window_ms}L - {start_ms}L + {step_ms - 1}L)"
-                f" div {step_ms}L - 1L"
-            ),
+        k_last = (
+            f"least({k_max}L, (ts + {window_ms}L - {start_ms}L"
+            f" + {step_ms - 1}L) div {step_ms}L - 1L)"
         )
-        return (
-            df.withColumn("__k1", k_first)
-            .withColumn("__k2", k_last)
-            .filter(F.col("__k1") <= F.col("__k2"))
-            .withColumn("__k", F.explode(F.sequence("__k1", "__k2")))
-            .withColumn("t", F.lit(start_ms) + F.col("__k") * F.lit(step_ms))
-            .drop("__k1", "__k2", "__k")
+        return df.where(f"{k_first} <= {k_last}").selectExpr(
+            "*",
+            f"explode(sequence({start_ms}L + {k_first} * {step_ms}L,"
+            f" {start_ms}L + {k_last} * {step_ms}L, {step_ms}L)) AS t",
         )
 
     # -- range-function evaluation -------------------------------------------
@@ -3136,29 +3115,33 @@ class PromQLEngine:
         # array per (series, t) group — same single shuffle as before —
         # and the compensation is a JVM `aggregate` HOF over adjacent
         # pairs.  Without ``extrapolate`` the result is the plain
-        # delta-over-sampled-span form (documented deviation).
+        # delta-over-sampled-span form (documented deviation).  The value
+        # is SQL text (double literals carry a D suffix; a bare 1000.0
+        # is a DECIMAL): a Column tree costs a JVM round trip per node.
         grouped = bucketed.groupBy(*keys).agg(
-            F.array_sort(F.collect_list(F.struct("ts", "value"))).alias("__w")
+            F.expr("array_sort(collect_list(struct(ts, value))) AS __w")
         )
         # two projections: materialize the array once, then read it —
         # interpreted HOFs have no common-subexpression elimination
-        first = F.element_at("__w", 1)
-        last = F.element_at("__w", -1)
-        n = F.size("__w")
+        first = "element_at(__w, 1)"
+        last = "element_at(__w, -1)"
+        n = "size(__w)"
         if expr.func == "delta":
             # gauge difference, no reset correction (and, like rate, the
             # plain last-first form without extrapolation by default)
-            value = F.when(n >= 2, last["value"] - first["value"])
+            value = f"CASE WHEN {n} >= 2 THEN {last}.value - {first}.value END"
         elif expr.func == "idelta":
-            prev = F.element_at("__w", -2)
-            value = F.when(n >= 2, last["value"] - prev["value"])
+            prev = "element_at(__w, -2)"
+            value = f"CASE WHEN {n} >= 2 THEN {last}.value - {prev}.value END"
         elif expr.func == "irate":
-            prev = F.element_at("__w", -2)
-            dv = F.when(
-                last["value"] >= prev["value"], last["value"] - prev["value"]
-            ).otherwise(last["value"])  # counter reset between the two
-            dt_s = (last["ts"] - prev["ts"]) / F.lit(1000.0)
-            value = F.when((n >= 2) & (dt_s > 0), dv / dt_s)
+            prev = "element_at(__w, -2)"
+            # a counter reset between the two keeps the last value
+            dv = (
+                f"CASE WHEN {last}.value >= {prev}.value"
+                f" THEN {last}.value - {prev}.value ELSE {last}.value END"
+            )
+            dt_s = f"(({last}.ts - {prev}.ts) / 1000.0D)"
+            value = f"CASE WHEN {n} >= 2 AND {dt_s} > 0 THEN ({dv}) / {dt_s} END"
         elif expr.func == "holt_winters":
             # Prometheus double exponential smoothing: s/b recurrence
             # folded over the window's 3rd..nth samples, seeded from the
@@ -3172,23 +3155,20 @@ class PromQLEngine:
             v1 = "element_at(__w, 1).value"
             v2 = "element_at(__w, 2).value"
             trend = f"({tf_}D * (acc.s1 - acc.s0) + (1.0D - {tf_}D) * acc.b)"
-            value = F.when(
-                n >= 2,
-                F.expr(
-                    "aggregate("
-                    " slice(__w, 3, greatest(size(__w) - 2, 0)),"
-                    " named_struct("
-                    f"  's0', {v1},"
-                    f"  's1', {sf_}D * {v2}"
-                    f"    + (1.0D - {sf_}D) * ({v1} + ({v2} - {v1})),"
-                    f"  'b', {v2} - {v1}),"
-                    " (acc, s) -> named_struct("
-                    "  's0', acc.s1,"
-                    f"  's1', {sf_}D * s.value"
-                    f"    + (1.0D - {sf_}D) * (acc.s1 + {trend}),"
-                    f"  'b', {trend}),"
-                    " acc -> acc.s1)"
-                ),
+            value = (
+                f"CASE WHEN {n} >= 2 THEN aggregate("
+                " slice(__w, 3, greatest(size(__w) - 2, 0)),"
+                " named_struct("
+                f"  's0', {v1},"
+                f"  's1', {sf_}D * {v2}"
+                f"    + (1.0D - {sf_}D) * ({v1} + ({v2} - {v1})),"
+                f"  'b', {v2} - {v1}),"
+                " (acc, s) -> named_struct("
+                "  's0', acc.s1,"
+                f"  's1', {sf_}D * s.value"
+                f"    + (1.0D - {sf_}D) * (acc.s1 + {trend}),"
+                f"  'b', {trend}),"
+                " acc -> acc.s1) END"
             )
         elif expr.func in ("changes", "resets"):
             cond = (
@@ -3196,7 +3176,7 @@ class PromQLEngine:
                 if expr.func == "resets"
                 else "s.value <> acc.prev"
             )
-            value = F.expr(
+            value = (
                 "aggregate(__w,"
                 " named_struct('prev', cast(null as double), 'c', 0.0D),"
                 " (acc, s) -> named_struct('prev', s.value,"
@@ -3206,7 +3186,7 @@ class PromQLEngine:
             )
         else:
             # rate / increase with Prometheus counter-reset correction
-            comp = F.expr(
+            comp = (
                 "aggregate(__w,"
                 " named_struct('prev', cast(null as double), 'comp', 0.0D),"
                 " (acc, s) -> named_struct('prev', s.value,"
@@ -3214,53 +3194,65 @@ class PromQLEngine:
                 "     AND s.value < acc.prev THEN acc.prev ELSE 0.0D END),"
                 " acc -> acc.comp)"
             )
-            delta = last["value"] - first["value"] + comp
+            delta = f"({last}.value - {first}.value + {comp})"
             if self.extrapolate:
                 value = self._extrapolated_value(expr, first, last, delta)
             else:
-                span_s = (last["ts"] - first["ts"]) / F.lit(1000.0)
+                span_s = f"(({last}.ts - {first}.ts) / 1000.0D)"
                 # both need >= 2 samples in the window (Prometheus returns
                 # no point otherwise); span_s > 0 iff the window has
                 # distinct samples
                 if expr.func == "increase":
-                    value = F.when(span_s > 0, delta)
+                    value = f"CASE WHEN {span_s} > 0 THEN {delta} END"
                 else:  # rate
-                    value = F.when(span_s > 0, delta / span_s)
-        return (
-            grouped.withColumn("value", value)
-            .filter(F.col("value").isNotNull())
-            .drop("__w")
-        )
+                    value = f"CASE WHEN {span_s} > 0 THEN {delta} / {span_s} END"
+        return grouped.selectExpr(
+            *[_quote(k) for k in keys], f"{value} AS value"
+        ).where("value IS NOT NULL")
 
     @staticmethod
-    def _extrapolated_value(expr: PromExpr, first, last, delta):
+    def _extrapolated_value(expr: PromExpr, first: str, last: str, delta: str):
         """Prometheus window-edge extrapolation (promql extrapolatedRate):
         scale the in-window delta out to the full range, but extrapolate
         past the first/last sample by at most half the average sample
         spacing, and never below the counter's estimated zero crossing.
         Every float op is ordered identically to the SQL twin in the
         corpus so the oracle reproduces it bit-for-bit before rounding.
+        Arguments and result are SQL text over the ``__w`` window array.
         """
-        range_ms = float(expr.range_ms)
-        sampled = (last["ts"] - first["ts"]).cast("double")
-        n = F.size("__w").cast("double")
-        avg = sampled / (n - F.lit(1.0))
-        thresh = avg * F.lit(1.1)
-        dstart0 = (first["ts"] - (F.col("t") - F.lit(expr.range_ms))).cast(
-            "double"
+        sampled = f"CAST({last}.ts - {first}.ts AS DOUBLE)"
+        n = "CAST(size(__w) AS DOUBLE)"
+        avg = f"({sampled} / ({n} - 1.0D))"
+        thresh = f"({avg} * 1.1D)"
+        dstart0 = f"CAST({first}.ts - (t - {expr.range_ms}) AS DOUBLE)"
+        dend0 = f"CAST(t - {last}.ts AS DOUBLE)"
+        dstart1 = (
+            f"(CASE WHEN {dstart0} >= {thresh} THEN {avg} / 2.0D"
+            f" ELSE {dstart0} END)"
         )
-        dend0 = (F.col("t") - last["ts"]).cast("double")
-        dstart1 = F.when(dstart0 >= thresh, avg / F.lit(2.0)).otherwise(dstart0)
-        dend = F.when(dend0 >= thresh, avg / F.lit(2.0)).otherwise(dend0)
-        dzero = sampled * (first["value"] / delta)
-        dstart = F.when(
-            (delta > 0) & (first["value"] >= 0) & (dzero < dstart1), dzero
-        ).otherwise(dstart1)
-        factor = (sampled + dstart + dend) / sampled
-        inc = delta * factor
+        dend = (
+            f"(CASE WHEN {dend0} >= {thresh} THEN {avg} / 2.0D"
+            f" ELSE {dend0} END)"
+        )
+        dzero = f"({sampled} * ({first}.value / {delta}))"
+        dstart = (
+            f"(CASE WHEN {delta} > 0 AND {first}.value >= 0"
+            f" AND {dzero} < {dstart1} THEN {dzero} ELSE {dstart1} END)"
+        )
+        factor = f"(({sampled} + {dstart} + {dend}) / {sampled})"
+        inc = f"({delta} * {factor})"
         if expr.func == "increase":
-            return F.when(sampled > 0, inc)
-        return F.when(sampled > 0, inc * F.lit(1000.0) / F.lit(range_ms))
+            return f"CASE WHEN {sampled} > 0 THEN {inc} END"
+        return (
+            f"CASE WHEN {sampled} > 0"
+            f" THEN {inc} * 1000.0D / {float(expr.range_ms)!r}D END"
+        )
+
+
+def _quote(name: str) -> str:
+    """A column name as a SQL identifier: label columns may be ``U__``
+    escapes or carry characters SQL text would misread."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 # ---------------------------------------------------------------------------
@@ -3289,6 +3281,34 @@ def _api_value(v: float) -> str:
     return format(Decimal(s), "f")
 
 
+def sort_vector(node, samples: list) -> list:
+    """Order one step's instant-vector samples as Prometheus answers
+    them, in place, and return the list.  Each sample is a tuple whose
+    first two items are its rendered label dict and its float value.
+
+    The default is label-set order.  A top-level ``sort``/``sort_desc``
+    orders by value, NaN last either way; ``sort_by_label``/``_desc``
+    by the named labels' string values ("" when absent).  Ties keep
+    label-set order (both passes are stable sorts)."""
+    samples.sort(key=lambda s: sorted(s[0].items()))
+    if not isinstance(node, PromSort):
+        return samples
+    if node.by_labels:
+        samples.sort(
+            key=lambda s: tuple(s[0].get(lbl, "") for lbl in node.by_labels),
+            reverse=not node.ascending,
+        )
+        return samples
+    sign = 1.0 if node.ascending else -1.0
+
+    def by_value(s):
+        v = s[1]
+        return (True, 0.0) if v is None or v != v else (False, sign * v)
+
+    samples.sort(key=by_value)
+    return samples
+
+
 def to_api_response(result: "DataFrame", t_col: str = "t",
                     value_col: str = "value") -> dict:
     """Shape a ``query_range`` result frame as the Prometheus HTTP API's
@@ -3297,6 +3317,10 @@ def to_api_response(result: "DataFrame", t_col: str = "t",
     ``metric`` (""-valued labels omitted, Prometheus's absent-label
     convention) and ``values`` as ``[unix_seconds, "value"]`` pairs in
     time order.
+
+    This renderer owns the order: ``query_range`` frames are unordered,
+    and a matrix is ordered by label set, then time, whatever the query
+    (Prometheus ignores ``sort*`` in range queries).
 
     The collect is driver-side BY DESIGN: an API response is a
     rendering boundary (a dashboard panel's worth of steps x series),
@@ -3323,11 +3347,15 @@ def to_api_response(result: "DataFrame", t_col: str = "t",
 
 
 def to_api_instant_response(result: "DataFrame", t_col: str = "t",
-                            value_col: str = "value") -> dict:
+                            value_col: str = "value", node=None) -> dict:
     """The ``/api/v1/query`` (INSTANT) response: ``resultType: vector``,
     one ``value`` pair per series.  Feed it a single-step
     ``query_range(t, t, step)`` frame; a multi-step frame is rejected —
-    that is a matrix, not a vector."""
+    that is a matrix, not a vector.
+
+    This renderer owns the order: ``query_range`` frames are unordered,
+    and the samples come out in :func:`sort_vector` order for ``node``,
+    the parsed query (None = label-set order)."""
     label_cols = [c for c in result.columns if c not in (t_col, value_col)]
     rows = result.collect()
     ts = {row[t_col] for row in rows}
@@ -3335,16 +3363,18 @@ def to_api_instant_response(result: "DataFrame", t_col: str = "t",
         raise ValueError(
             f"instant response needs exactly one step, got {sorted(ts)}"
         )
-    out = [
-        {
-            "metric": {
-                _unescape_name(c): row[c] for c in label_cols if row[c]
-            },
-            "value": [row[t_col] / 1000.0, _api_value(row[value_col])],
-        }
+    samples = [
+        (
+            {_unescape_name(c): row[c] for c in label_cols if row[c]},
+            row[value_col],
+            row[t_col],
+        )
         for row in rows
     ]
-    out.sort(key=lambda e: sorted(e["metric"].items()))
+    out = [
+        {"metric": metric, "value": [t / 1000.0, _api_value(v)]}
+        for metric, v, t in sort_vector(node, samples)
+    ]
     return {
         "status": "success",
         "data": {"resultType": "vector", "result": out},

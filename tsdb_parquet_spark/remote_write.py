@@ -407,7 +407,7 @@ def remote_write_frame(
 
     Each input row is one POST body (snappy-framed protobuf, v1 or v2 —
     sniffed per payload, exactly as a receiver dispatches per request).
-    Decode runs executor-side via ``mapInPandas``: a receiver fleet's
+    Decode runs executor-side via ``mapInArrow``: a receiver fleet's
     captured payloads fan out across the cluster, the driver never
     touches payload bytes.  ``label_names`` must be given explicitly for
     the same reason as ``blocks_to_chunk_frame`` — deriving the union
@@ -416,7 +416,9 @@ def remote_write_frame(
     payload are dropped.
 
     Rows stream out in ``batch_rows``-sized Arrow batches so one giant
-    payload never materializes as a single batch.
+    payload never materializes as a single batch.  The batches are
+    built from per-column lists, never pandas: a pandas hop turns a NaN
+    sample value (stale markers included) into NULL.
 
     Remote-write 2.0 carries UTF-8 label names natively (the symbols
     table has no charset restriction): pass the RAW names in
@@ -424,13 +426,11 @@ def remote_write_frame(
     value-encoded forms (`names.py` — identity for classic names), the
     same contract as `otlp.otlp_frame` / `scrape.scrape_samples`.
 
-    The input is pruned to ``payload_col`` BEFORE the ``mapInPandas``
+    The input is pruned to ``payload_col`` BEFORE the ``mapInArrow``
     hop: a Python map reads every column it is handed, so without the
     projection a payload table's sidecar columns (capture time, sender,
     headers) would cross the Arrow bridge just to be dropped.
     """
-    import pandas as pd
-
     from tsdb_parquet_spark.names import escape_name
 
     payloads = payloads.select(payload_col)
@@ -442,22 +442,47 @@ def remote_write_frame(
     )
 
     def convert(batches):
-        cols = col_names + ["ts", "value"]
+        arrow_schema = _arrow_schema(col_names, ["ts", "value"])
         buf: list[tuple] = []
-        for pdf in batches:
-            for body in pdf[payload_col]:
-                proto = unframe_payload(bytes(body)) if compressed else bytes(body)
+        for batch in batches:
+            for body in batch.column(payload_col).to_pylist():
+                proto = unframe_payload(body) if compressed else body
                 for labels, samples in decode_write_request(proto):
                     lab = tuple(labels.get(c, "") for c in label_names)
                     for ts_ms, value in samples:
                         buf.append(lab + (ts_ms, value))
                         if len(buf) >= batch_rows:
-                            yield pd.DataFrame(buf, columns=cols)
+                            yield _record_batch(buf, arrow_schema)
                             buf = []
         if buf:
-            yield pd.DataFrame(buf, columns=cols)
+            yield _record_batch(buf, arrow_schema)
 
-    return payloads.mapInPandas(convert, schema)
+    return payloads.mapInArrow(convert, schema)
+
+
+def _arrow_schema(label_cols: Sequence[str], tail: Sequence[str]):
+    """Arrow schema of a decoded sample batch: string label columns, then
+    ``tail`` — string columns except ``ts`` (int64) and ``value``
+    (float64)."""
+    import pyarrow as pa
+
+    types = {"ts": pa.int64(), "value": pa.float64()}
+    return pa.schema(
+        [(c, pa.string()) for c in label_cols]
+        + [(c, types.get(c, pa.string())) for c in tail]
+    )
+
+
+def _record_batch(rows: list[tuple], schema):
+    """One Arrow batch from row tuples, transposed into per-column lists.
+    ``pa.array`` keeps a float NaN as NaN (only ``from_pandas`` reads it
+    as null)."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), schema)],
+        schema=schema,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -784,17 +809,14 @@ def remote_write_histogram_frame(
     """Decode native histograms from a DataFrame of remote-write bodies
     into CLASSIC-EXPANDED samples ``(label_names..., le string, ts
     long, value double)`` — the histogram counterpart of
-    :func:`remote_write_frame`, same executor-side mapInPandas shape.
+    :func:`remote_write_frame`, same executor-side mapInArrow shape.
     The metric name column carries the classic suffixes
     (``<name>_bucket``/``_count``/``_sum``); ``le`` is "" on the
     count/sum rows (missing-label convention)."""
-    import pandas as pd
-
     from tsdb_parquet_spark.histograms import expand_to_classic
-
-    payloads = payloads.select(payload_col)
     from tsdb_parquet_spark.names import escape_name
 
+    payloads = payloads.select(payload_col)
     label_names = list(label_names)
     col_names = [escape_name(c) for c in label_names]
     schema = (
@@ -803,13 +825,11 @@ def remote_write_histogram_frame(
     )
 
     def convert(batches):
-        cols = col_names + ["le", "ts", "value"]
+        arrow_schema = _arrow_schema(col_names, ["le", "ts", "value"])
         buf: list[tuple] = []
-        for pdf in batches:
-            for body in pdf[payload_col]:
-                proto = (
-                    unframe_payload(bytes(body)) if compressed else bytes(body)
-                )
+        for batch in batches:
+            for body in batch.column(payload_col).to_pylist():
+                proto = unframe_payload(body) if compressed else body
                 for labels, hists in decode_histograms(proto):
                     name = labels.get("__name__", "")
                     rest = {k: v for k, v in labels.items() if k != "__name__"}
@@ -825,12 +845,12 @@ def remote_write_histogram_frame(
                                 + (mlabels.get("le", ""), t, v)
                             )
                             if len(buf) >= batch_rows:
-                                yield pd.DataFrame(buf, columns=cols)
+                                yield _record_batch(buf, arrow_schema)
                                 buf = []
         if buf:
-            yield pd.DataFrame(buf, columns=cols)
+            yield _record_batch(buf, arrow_schema)
 
-    return payloads.mapInPandas(convert, schema)
+    return payloads.mapInArrow(convert, schema)
 
 
 # ---------------------------------------------------------------------------

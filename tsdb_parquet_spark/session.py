@@ -31,6 +31,16 @@ _RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow transfer for the few pandas-UDF code paths (chunk decode etc.)
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # no per-call call-site capture: with it on, every DataFrame and
+    # functions call makes ~5 extra JVM round trips (active session,
+    # conf read, origin set/clear), about half of a PromQL plan's JVM
+    # round trips.  The trade: an analysis error loses PySpark's
+    # "DataFrame query context" block (the Python line that built the
+    # failing expression); the error class and message are unchanged.
+    # PySpark reads this once per process, at the first DataFrame call,
+    # so it only takes effect on sessions built by get_spark (or
+    # configured before any DataFrame work).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -11,7 +11,7 @@ feed this.
 
 Scale shape: the spool listing is driver-side metadata (file stream
 source); payload DECODE runs executor-side per micro-batch —
-``remote_write_frame``'s ``mapInPandas`` for protobuf bodies, the
+``remote_write_frame``'s ``mapInArrow`` for protobuf bodies, the
 all-JVM ``scrape_samples`` plan for exposition text — and each
 micro-batch writes one sorted part, compacted by ``finalize()`` /
 ``vacuum`` like every other ingest path.
