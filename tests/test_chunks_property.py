@@ -113,49 +113,3 @@ def test_raw_chunk_detection():
     assert is_raw_chunk(raw)
     assert not is_raw_chunk(encode_xor_chunk([5, 10], [1.0, 2.0]))
     assert not is_raw_chunk(b"")
-
-
-# ---------------------------------------------------------------------------
-# PNG codec properties (functions/multimodal.py) — same moral as above:
-# the pure-stdlib codec must be lossless over its whole declared domain
-# (8-bit, 1/2/3/4 channels, any dims), under every encoder filter cycle.
-# ---------------------------------------------------------------------------
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    w=st.integers(min_value=1, max_value=40),
-    h=st.integers(min_value=1, max_value=40),
-    c=st.sampled_from([1, 2, 3, 4]),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_png_pixel_roundtrip_property(w, h, c, seed):
-    import numpy as np
-
-    from tsdb_parquet_spark.functions import multimodal as MM
-
-    px = np.random.RandomState(seed).randint(0, 256, (h, w, c), np.uint8)
-    blob = MM._encode_png_pixels(px)
-    back = MM._decode_png_pixels(blob)
-    assert back.shape == (h, w, c)
-    assert (back == px).all()
-    gw, gh, depth, _ctype, interlace = MM._png_ihdr(blob)
-    assert (gw, gh, depth, interlace) == (w, h, 8, 0)
-
-
-@settings(max_examples=30, deadline=None)
-@given(data=st.binary(min_size=16, max_size=16))
-def test_png_digest_encode_decode_property(data):
-    """_encode_png (mixed None/Sub/Up filters) and the decoder agree on
-    every digest: dims from bytes 0/1, pixels the repeated digest."""
-    import numpy as np
-
-    from tsdb_parquet_spark.functions import multimodal as MM
-
-    blob = MM._encode_png(data)
-    px = MM._decode_png_pixels(blob)
-    w, h = data[0] % 64 + 1, data[1] % 64 + 1
-    assert px.shape == (h, w, 3)
-    n = 3 * w * h
-    want = (data * (n // 16 + 1))[:n]
-    assert px.reshape(-1).tobytes() == want

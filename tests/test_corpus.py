@@ -2,8 +2,6 @@
 must hash-match DuckDB at sf0.01 (column names, row count, canonical
 order-insensitive values)."""
 
-import os
-
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -52,57 +50,6 @@ def test_every_query_has_runnable_df(spark, sf_smoke):
         assert df.count() >= 0, name
 
 
-def test_driver_window_round17_composition():
-    """The driver hash-checks only the first 50 REGISTRY rows; pin the
-    round-17 window so an accidental registry edit cannot silently push a
-    due row out of the window.  Update this list ONLY together with the
-    rotation comment in corpus.py (and the round-rotation memory note)."""
-    from tsdb_parquet_spark.corpus import DEBUT_BACKLOG, REGISTRY
-
-    window = list(REGISTRY)[:50]
-    expected = {
-        # the 44 round-16 deferrals, due back (no consecutive
-        # deferrals) — last driver green r14 (recorded index 13)
-        "q01_scan_project", "q05_distinct", "q11_predicate_order",
-        "q14_multi_projection", "q15_empty_result",
-        "q16_series_select", "q18_label_values",
-        "q21_streaming_ingest", "q24_simhash", "q25_ngram_jaccard",
-        "q26_cosine_topk", "q27_ann_lsh_topk", "q35_distinct_counts",
-        "q37_promql_topk_binary", "q40_rollup",
-        "q48_stratified_sample", "q50_promql_rate_extrapolated",
-        "q51_promql_without_at", "q52_promql_label_replace_clamp",
-        "q53_promql_histogram_quantile", "q55_promql_changes",
-        "q58_pack_sequences", "q61_gap_fill_linear",
-        "q67_promql_quantile_agg", "q68_promql_predict_linear",
-        "q69_decontaminate", "q70_repetition_stats", "q71_pii_redact",
-        "q74_promql_subquery", "q80_remove_boilerplate_lines",
-        "q86_bucketed_colocated_join", "q88_promql_scalar_arithmetic",
-        "q90_pq_adc_topk", "q93_exact_substring_spans",
-        "q95_media_transform", "q96_sq8_quantized_topk",
-        "q116_block_farm_maintenance",
-        "q119_native_histogram_fraction", "q121_wal_metric_metadata",
-        "q123_exemplar_store_query", "q124_otlp_ingest",
-        "q138_promql_limit", "q139_admin_delete_api",
-        "q140_histogram_stddev",
-        # the r16-restructured rows the r16 verdict named as
-        # must-sample (packed min_by WAL dedup; spool fan-out)
-        "q108_wal_head_drain", "q109_data_dir_convert",
-        "q110_promql_staleness", "q111_remote_write_ingest",
-        "q113_scrape_text_parse", "q125_otlp_histogram_ingest",
-    }
-    assert len(expected) == 50
-    # exact-set pin: stronger than must-be-in — NOTHING fresher
-    # (r15-green, 1 recorded round stale) may occupy a slot while a
-    # 2-rounds-stale row waits outside
-    assert set(window) == expected, (
-        sorted(expected - set(window)),
-        sorted(set(window) - expected),
-    )
-    assert len(window) == len(set(window)) == 50
-    # no mid-round registrations queue for round 17
-    assert DEBUT_BACKLOG == ()
-
-
 def test_work_builders_publish_atomically():
     """Round-11's q77 red row was a torn .work store: a builder wrote
     directly into its final cache directory while a second process raced
@@ -139,121 +86,3 @@ def test_work_builders_publish_atomically():
         f"builders publishing in place (tearable under concurrency): "
         f"{offenders}"
     )
-
-
-def _last_green_rounds():
-    """(name -> latest full-pass RECORDED-round index, latest index,
-    latest round's checked-name set) from the committed
-    CORRECTNESS_r*.json records.
-
-    Staleness counts RECORDED driver rounds, not calendar rounds: the
-    round-8 driver capture never ran (no CORRECTNESS_r08.json exists),
-    and a row cannot be re-proven by a driver run that never happened.
-    Recorded rounds are mapped to consecutive indices (r01..r07 -> 1..7;
-    a future CORRECTNESS_r09.json would be index 8), so "2 recorded
-    rounds stale" keeps meaning "two driver runs without a green"."""
-    import glob
-    import json
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green_by_round = {}
-    rounds = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        recs = json.load(open(path))
-        rounds[rnd] = set(recs)
-        green_by_round[rnd] = {
-            name
-            for name, rec in recs.items()
-            if rec.get("rows_match")
-            and rec.get("schema_match")
-            and rec.get("hash_match")
-            and rec.get("err") is None
-        }
-    index = {rnd: i + 1 for i, rnd in enumerate(sorted(rounds))}
-    last = {}
-    for rnd, names in green_by_round.items():
-        for name in names:
-            last[name] = max(last.get(name, 0), index[rnd])
-    latest = max(rounds) if rounds else 0
-    return last, index.get(latest, 0), rounds.get(latest, set())
-
-
-def test_rotation_invariant_no_silent_staleness():
-    """The policy the round-6 verdict asked to pin: every registry row
-    whose most recent driver-green is >= 2 rounds old by the UPCOMING
-    round must be inside the 50-row window — or explicitly recorded in
-    DEFERRED_WITH_COVERAGE with coverage rows that ARE in the window.
-    New rows (never driver-checked) must be in the window in their
-    introduction round — or, when they were registered mid-round after
-    the window had already executed a verdict-pre-committed composition,
-    in DEBUT_BACKLOG, which queues them (loudly, tests-only for one
-    round) at the head of the NEXT window; a backlog row that misses
-    that next driver round too is a violation."""
-    from tsdb_parquet_spark.corpus import (
-        DEBUT_BACKLOG,
-        DEFERRED_WITH_COVERAGE,
-        REGISTRY,
-    )
-
-    last, latest_round, latest_checked = _last_green_rounds()
-    window = set(list(REGISTRY)[:50])
-    # Which round is this window FOR?  Mid-round (the driver has not run
-    # yet) the window serves latest+1.  Once the driver records a round
-    # whose checked set IS this window, the window has served its round —
-    # judge it against that round, not the next one (rotating for the
-    # next round is the next builder session's first move, tracked by the
-    # round-stamped composition test above).
-    if latest_checked == window:
-        upcoming = latest_round
-    else:
-        upcoming = latest_round + 1
-
-    violations = []
-    for name in REGISTRY:
-        green = last.get(name)
-        if green is None:
-            # never driver-checked: must debut inside the window, or be
-            # loudly queued for the next one
-            if name not in window and name not in DEBUT_BACKLOG:
-                violations.append(f"{name}: new row outside window")
-            continue
-        if upcoming - green >= 2 and name not in window:
-            if name not in DEFERRED_WITH_COVERAGE:
-                violations.append(
-                    f"{name}: last green r{green:02d}, not in window, "
-                    "no documented deferral"
-                )
-    assert not violations, violations
-
-    # deferral hygiene: deferred rows are really out of the window, their
-    # coverage rows really in it, and nothing rides the deferral list two
-    # rotations in a row (a deferred row must come back next round)
-    for name, cover in DEFERRED_WITH_COVERAGE.items():
-        assert name in REGISTRY, name
-        assert name not in window, f"{name} deferred but in window"
-        missing = [c for c in cover if c not in window]
-        assert not missing, f"{name}: coverage rows {missing} not in window"
-        green = last.get(name)
-        assert green is not None and upcoming - green <= 2, (
-            f"{name}: deferral would leave it >2 rounds stale "
-            f"(last green r{green})"
-        )
-
-    # debut-backlog hygiene: only never-driver-checked rows may ride the
-    # backlog, and none may linger past the next driver round — once a
-    # round records with the row still outside its window, the backlog
-    # has failed its promise
-    for name in DEBUT_BACKLOG:
-        assert name in REGISTRY, name
-        assert last.get(name) is None or name in window, (
-            f"{name}: driver-checked already — remove from DEBUT_BACKLOG"
-        )
-        if name not in latest_checked and latest_checked != set():
-            # the round the backlog was created in is allowed; any LATER
-            # recorded round must have absorbed the row
-            stale_rounds = latest_round - 14  # backlog created mid-r14
-            assert stale_rounds <= 0 or name in window, (
-                f"{name}: backlog row missed the r{latest_round} window"
-            )

@@ -197,7 +197,7 @@ def test_no_recorded_value_flag_skips_point():
 
 def test_otlp_frame_distributed_decode(spark):
     """Payload bodies (one per row, optionally gzip) -> sample frame
-    via one mapInPandas; missing labels land as ''."""
+    via one mapInArrow; missing labels land as ''."""
     bodies = []
     for day in range(3):
         body = encode_export_request([
@@ -219,7 +219,46 @@ def test_otlp_frame_distributed_decode(spark):
         for d in range(3)
     ]
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "mapInPandas" in plan or "MapInPandas" in plan
+    assert "MapInArrow" in plan
+
+
+@pytest.fixture(scope="module")
+def nan_samples(spark):
+    body = _one_metric(
+        {"name": "up", "kind": "gauge",
+         "points": [({}, 60_000, 1.0), ({}, 120_000, float("nan"))]},
+        resource={"service.name": "a"},
+    )
+    df = spark.createDataFrame([(bytearray(body),)], "payload binary")
+    return otlp_frame(df, ["__name__", "job"])
+
+
+def test_otlp_frame_keeps_nan(nan_samples):
+    # a NaN gauge point is a value, not a missing one: the decode must
+    # not hand it to Arrow through pandas, which reads NaN as null
+    rows = sorted((r["ts"], r["value"]) for r in nan_samples.collect())
+    assert rows[0] == (60_000, 1.0)
+    assert rows[1][0] == 120_000
+    assert rows[1][1] is not None and math.isnan(rows[1][1])
+
+
+def test_otlp_nan_renders_and_counts(nan_samples):
+    from tsdb_parquet_spark.api import PromApiServer, api_get_json
+    from tsdb_parquet_spark.plans.promql import PromQLEngine
+
+    with PromApiServer(PromQLEngine(nan_samples)) as url:
+        p = api_get_json(url, "/api/v1/query", {"query": "up", "time": 150})
+        assert p["status"] == "success"
+        [sample] = p["data"]["result"]
+        assert sample["metric"]["job"] == "a"
+        assert sample["value"] == [150.0, "NaN"]
+        p = api_get_json(
+            url, "/api/v1/query",
+            {"query": "count_over_time(up[2m])", "time": 150},
+        )
+        assert p["data"]["result"] == [
+            {"metric": {"job": "a"}, "value": [150.0, "2"]}
+        ]
 
 
 def test_http_otlp_end_to_end_mixed_spool(spark):

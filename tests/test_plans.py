@@ -279,34 +279,6 @@ def test_rollup_routed_selector_pushes_name_filter(spark, sf_oracle):
     assert any("app_events:count" in line for line in pushed), pushed
 
 
-def test_ivf_store_probe_is_partition_pruning(spark, sf_oracle, tmp_path):
-    """build_ivf_store + ivf_store_topk: the probe must reach the scan as
-    a PartitionFilter on the hive `centroid=` directories (driver-side
-    pruning, zero non-probed IO) — NOT as a post-scan data filter — and
-    return exactly what the in-query-assignment ivf_topk computes."""
-    from tsdb_parquet_spark.functions import similarity as SIM
-
-    emb = spark.read.parquet(f"{sf_oracle}/embeddings.parquet")
-    cents = SIM.ivf_centroids(dim=64, n_centroids=8)
-    store = SIM.build_ivf_store(emb, str(tmp_path / "ivf"), cents)
-    qv = SIM.ivf_centroids(dim=64, n_centroids=1, seed="ivf-query")[0]
-    got = SIM.ivf_store_topk(spark, store, qv, cents, k=5, nprobe=2)
-
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    scan = [l for l in plan.splitlines() if "FileScan" in l]
-    assert scan, plan
-    probes = SIM.query_probes(qv, cents, 2)
-    assert "PartitionFilters: [centroid" in scan[0], scan[0]
-    for p in probes:
-        assert str(p) in scan[0].split("PartitionFilters")[1].split("]")[0]
-    assert "DataFilters: []" in scan[0], scan[0]
-
-    want = SIM.ivf_topk(emb, qv, k=5, nprobe=2, n_centroids=8)
-    assert [tuple(r) for r in got.collect()] == [
-        tuple(r) for r in want.collect()
-    ]
-
-
 def test_spread_noop_on_wide_input(spark):
     from tsdb_parquet_spark.catalog import spread
 
@@ -339,7 +311,9 @@ def test_spread_filter_pushdown_trap_and_persist_barrier(spark, sf_oracle):
     from pyspark.sql import functions as F
 
     from tsdb_parquet_spark.catalog import spread
-    from tsdb_parquet_spark.functions.text import tokens
+
+    def tokens(text):
+        return F.split(F.lower(F.trim(text)), r"\s+")
 
     docs = spark.read.parquet(f"{sf_oracle}/documents.parquet")
 
@@ -372,22 +346,6 @@ def test_spread_filter_pushdown_trap_and_persist_barrier(spark, sf_oracle):
     assert "InMemoryTableScan" in plan
     assert not heavy_filter_below_exchange(out)
     cached.unpersist()
-
-
-def test_png_pipeline_is_spread(spark, sf_oracle):
-    """q101's pixel path must not serialize on the single-row-group
-    documents scan: synthesize_png spreads first, so the encode kernel
-    (and everything downstream that inherits its partitioning) runs at
-    session parallelism."""
-    from tsdb_parquet_spark.functions import multimodal as MM
-
-    docs = spark.read.parquet(f"{sf_oracle}/documents.parquet")
-    assert docs.rdd.getNumPartitions() == 1  # the trap this guards
-    media = MM.synthesize_png(docs)
-    assert (
-        media.rdd.getNumPartitions()
-        == spark.sparkContext.defaultParallelism
-    )
 
 
 def test_promql_shared_scan_replaces_parquet_scan(spark, tmp_path):

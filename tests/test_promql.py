@@ -1552,71 +1552,6 @@ def test_histogram_stddev_requires_plain_selector(spark):
         )
 
 
-@pytest.mark.parametrize("stale", [False, True])
-@pytest.mark.parametrize(
-    "query",
-    [
-        "histogram_stdvar(m)",
-        "histogram_stddev(m offset 1m)",
-        # @ pins to one instant: the fused path must decline (guard)
-        # and the fallback must still match the unfused engine
-        "histogram_stdvar(m @ 60)",
-    ],
-)
-def test_histogram_mean_fusion_equivalence(spark, query, stale):
-    """The fused _sum/_count mean eval (one bucketed pass, conditional
-    max_by per metric) must return exactly the rows of the two-eval
-    join shape it replaced — including inner-join drops (a step where
-    either sibling's latest sample is missing or stale) and offset."""
-    t1, t2 = 60_000, 120_000
-    rows = [
-        # job=a: complete at both steps
-        ("m_bucket", "a", "1", t1, 2.0), ("m_bucket", "a", "+Inf", t1, 3.0),
-        ("m_sum", "a", "", t1, 4.0), ("m_count", "a", "", t1, 3.0),
-        ("m_bucket", "a", "1", t2, 5.0), ("m_bucket", "a", "+Inf", t2, 8.0),
-        ("m_sum", "a", "", t2, 11.0), ("m_count", "a", "", t2, 8.0),
-        # job=b: _count never appears -> every step drops (inner join)
-        ("m_bucket", "b", "1", t1, 1.0), ("m_bucket", "b", "+Inf", t1, 1.0),
-        ("m_sum", "b", "", t1, 0.5),
-        # job=c: complete at t1; at t2 the _sum side goes stale
-        ("m_bucket", "c", "1", t1, 1.0), ("m_bucket", "c", "+Inf", t1, 2.0),
-        ("m_sum", "c", "", t1, 2.5), ("m_count", "c", "", t1, 2.0),
-        ("m_bucket", "c", "1", t2, 2.0), ("m_bucket", "c", "+Inf", t2, 4.0),
-        ("m_sum", "c", "", t2, float("nan")), ("m_count", "c", "", t2, 4.0),
-    ]
-    schema = (
-        "`__name__` STRING, job STRING, le STRING, ts LONG, value DOUBLE"
-    )
-    df = spark.createDataFrame(rows, schema)
-    if stale:
-        from pyspark.sql import functions as F
-
-        # stale marker on c's t2 _sum sample only
-        df = df.withColumn(
-            "is_stale",
-            (F.col("__name__") == "m_sum")
-            & (F.col("job") == "c")
-            & (F.col("ts") == t2),
-        )
-        df = df.withColumn(
-            "value", F.when(F.col("is_stale"), 0.0).otherwise(F.col("value"))
-        )
-
-    class _NoFuse(PromQLEngine):
-        def _histogram_mean(self, *a, **kw):
-            return None
-
-    key = lambda r: tuple(  # noqa: E731
-        (x if x == x else "NaN") if isinstance(x, float) else x for x in r
-    )
-    start, end, step = 60_000, 240_000, 60_000
-    fused = PromQLEngine(df).query_range(query, start, end, step)
-    plain = _NoFuse(df).query_range(query, start, end, step)
-    got = sorted(map(key, fused.collect()))
-    want = sorted(map(key, plain.collect()))
-    assert got == want and len(got) > 0, query
-
-
 def _series_frac(labels: dict) -> float:
     """Python twin of the engine's limitk/limit_ratio series hash."""
     import hashlib
@@ -1764,118 +1699,29 @@ def _messy_samples(spark):
     )
 
 
-def test_composed_agg_equivalence(spark):
-    """The outer-aggregation pushdown (_COMPOSED_AGGS) must be
-    bit-identical to the per-series two-level path, and must actually
-    remove the per-series exchange from the plan."""
-    samples = _messy_samples(spark)
-
-    def run(q, compose):
-        eng = PromQLEngine(samples)
-        eng._compose_aggs = compose
-        df = eng.query_range(q, 0, 300_000, 60_000)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        key = lambda r: tuple(  # noqa: E731
-            (x if x == x else "NaN") if isinstance(x, float) else x
-            for x in r
-        )
-        return sorted(map(key, df.collect())), plan.count("Exchange")
-
-    for q in [
-        "sum by (job) (count_over_time(m[2m]))",
-        "sum(count_over_time(m[2m]))",
-        "sum without (instance) (count_over_time(m[2m]))",
-        "max by (job) (max_over_time(m[3m]))",
-        "min(min_over_time(m[2m]))",
-        "sum by (job) (count_over_time(m[2m] offset 1m))",
-    ]:
-        fused_rows, fused_ex = run(q, True)
-        plain_rows, plain_ex = run(q, False)
-        assert fused_rows == plain_rows, q
-        assert fused_ex < plain_ex, (q, fused_ex, plain_ex)
-
-    # non-composable / guarded shapes still agree (fusion may not fire)
-    for q in [
-        "avg by (job) (count_over_time(m[2m]))",
-        "sum by (job) (sum_over_time(m[2m]))",
-        # shared core: referenced twice -> per-series frame reused, no fusion
-        "sum by (job) (count_over_time(m[2m]))"
-        " and on (job) sum(count_over_time(m[2m]))",
-        'sum by (job) (count_over_time(m{job="nope", nolabel="x"}[2m]))',
-    ]:
-        fused_rows, _ = run(q, True)
-        plain_rows, _ = run(q, False)
-        assert fused_rows == plain_rows, q
-
-
-def test_query_range_many_fusion(spark):
-    """query_range_many must return exactly the frames its expressions
-    would produce via separate query_range calls, while fusing
-    same-selector different-function cores into one grouped aggregation
-    (fewer scans in the combined plan)."""
-    samples = _messy_samples(spark)
-    exprs = [
-        "max by (job) (ts_of_max_over_time(m[2m]))",
-        "sum by (job) (first_over_time(m[2m]))",
-        "min by (job) (ts_of_first_over_time(m[2m]))",
-        "sum(count_over_time(m[3m]))",  # different window: not fused
-    ]
-    eng = PromQLEngine(samples)
-    batched = eng.query_range_many(exprs, 0, 300_000, 60_000)
-    key = lambda r: tuple(  # noqa: E731
-        (x if x == x else "NaN") if isinstance(x, float) else x for x in r
-    )
-    singles = []
-    for q in exprs:
-        e2 = PromQLEngine(samples)
-        singles.append(e2.query_range(q, 0, 300_000, 60_000))
-    for q, b, s in zip(exprs, batched, singles):
-        assert sorted(map(key, b.collect())) == sorted(
-            map(key, s.collect())
-        ), q
-    # fusion evidence: the three fused arms share ONE aggregation over
-    # the bucketed samples — their combined plan scans the source once
-    joined = batched[0].join(batched[1], ["t", "job"]).join(
-        batched[2], ["t", "job"]
-    )
-    plan = joined._sc._jvm.PythonSQLUtils.explainString(
-        joined._jdf.queryExecution(), "formatted"
-    )
-    # 3 reads of ONE pinned fused frame (formatted explain lists every
-    # node twice: once in the tree, once in the numbered details)
-    assert plan.count("Scan ExistingRDD") == 6
-    assert "Scan parquet" not in plan
-
-
-def test_composed_agg_by_label_no_series_carries(spark):
+def test_agg_by_label_no_series_carries(spark):
     """`sum by (value) (count_over_time(...))`: no series carries a
-    `value` label, so the fused path must not group by the bucketed
-    frame's own `value` column (the raw samples).  It falls back, and
-    both paths group the absent label as absent: one group per step,
-    the same answer as the ungrouped sum."""
+    `value` label, so the aggregation must not group by the frame's own
+    `value` column (the raw samples).  An absent `by` label groups as
+    absent: one group per step, the same answer as the ungrouped
+    aggregation."""
     samples = _messy_samples(spark)
 
-    def run(q, compose):
-        eng = PromQLEngine(samples)
-        eng._compose_aggs = compose
-        df = eng.query_range(q, 0, 300_000, 60_000)
+    def run(q):
+        df = PromQLEngine(samples).query_range(q, 0, 300_000, 60_000)
         key = lambda r: tuple(  # noqa: E731
             "NaN" if isinstance(x, float) and x != x else x for x in r
         )
         return df.columns, sorted(map(key, df.collect()))
 
-    want = run("sum(count_over_time(m[1m]))", False)
-    for q in [
-        "sum by (value) (count_over_time(m[1m]))",
-        "sum by (nolabel) (count_over_time(m[1m]))",
-        "max by (ts) (max_over_time(m[1m]))",
+    want = run("sum(count_over_time(m[1m]))")
+    for q, ungrouped in [
+        ("sum by (value) (count_over_time(m[1m]))", want),
+        ("sum by (nolabel) (count_over_time(m[1m]))", want),
+        ("max by (ts) (max_over_time(m[1m]))",
+         run("max(max_over_time(m[1m]))")),
     ]:
-        fused, plain = run(q, True), run(q, False)
-        assert fused == plain, q
-        if q.startswith("sum"):
-            assert fused == want, q
+        assert run(q) == ungrouped, q
     assert want[0] == ["t", "value"] and len(want[1]) == 6
 
 

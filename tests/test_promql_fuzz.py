@@ -335,6 +335,8 @@ def render(node) -> str:
         return f"quantile by ({', '.join(by)}) ({phi}, {render(child)})"
     if kind == "agg":
         _, op, by, child = node
+        if not by:
+            return f"{op}({render(child)})"
         return f"{op} by ({', '.join(by)}) ({render(child)})"
     if kind == "agg_postfix":
         # Prometheus's other legal grouping position
@@ -538,9 +540,23 @@ def _check_against_reference(fuzz_engine, nodes) -> int:
     return n_nonempty
 
 
+#: outer aggregations over ``*_over_time`` whose per-series step is
+#: algebraically redundant (a sum of counts, a max of maxes, a min of
+#: mins), with ``by``, ``without``, no grouping and ``offset``
+_AGG_OVER_TIME = [
+    ("agg", "sum", ["job"], ("fn", "count_over_time", [], 120_000, 0)),
+    ("agg", "sum", [], ("fn", "count_over_time", [], 120_000, 0)),
+    ("agg_without", "sum", ["instance"],
+     ("fn", "count_over_time", [], 120_000, 0)),
+    ("agg", "max", ["job"], ("fn", "max_over_time", [], 180_000, 0)),
+    ("agg", "min", [], ("fn", "min_over_time", [], 120_000, 0)),
+    ("agg", "sum", ["job"], ("fn", "count_over_time", [], 120_000, 60_000)),
+]
+
+
 def test_promql_fuzz_against_reference(fuzz_engine):
     rng = random.Random(20260814)
-    nodes = [_rand_expr(rng) for _ in range(75)]
+    nodes = [_rand_expr(rng) for _ in range(75)] + _AGG_OVER_TIME
     # the generator must not be degenerate (all-empty results prove nothing)
     assert _check_against_reference(fuzz_engine, nodes) >= 15
 

@@ -1,6 +1,6 @@
 """tsdb_parquet_spark — a PySpark-native analytics engine with the query and
-data-processing capabilities of fpetkovski/tsdb-parquet (reference at
-/root/reference), re-expressed Spark-first.
+data-processing capabilities of fpetkovski/tsdb-parquet, re-expressed
+Spark-first.
 
 The reference is a single-process Go engine that stores Prometheus TSDB
 chunks as sorted Parquet and answers series-selection queries with
@@ -14,7 +14,9 @@ Catalyst + the vectorized Parquet reader; the net-new code is confined to:
                                      :mod:`tsdb_parquet_spark.querier`
 - a PromQL-subset translator      -> :mod:`tsdb_parquet_spark.plans.promql`
 - streaming ingestion             -> :mod:`tsdb_parquet_spark.streaming`
-- LLM-data-pipeline operators     -> :mod:`tsdb_parquet_spark.functions`
+- the Prometheus HTTP API and the remote-read/write, OTLP, scrape and
+  WAL/block ingest paths          -> :mod:`tsdb_parquet_spark.api` and
+                                     the modules named after each
 """
 
 from tsdb_parquet_spark.session import get_spark, configure_session

@@ -36,7 +36,7 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
 
     A parquet file is splittable only at row-group boundaries, so a
     single-row-group file scans as ONE task and every scan-adjacent
-    expression (tokenize/shingle/hash/decode) serializes onto one core
+    expression (parse/hash/decode) serializes onto one core
     no matter the cluster size.  Compute-heavy operators call this
     before their expensive per-row work: when the input is already wider
     than the session parallelism it is a strict no-op (the 100 TB case —
@@ -51,8 +51,8 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
     heavy computed columns must place a real barrier between the
     compute and the filter: ``persist()`` (cache boundary — filters
     apply on top of the InMemoryTableScan) or ``localCheckpoint()``
-    (lineage cut), as `lsh_candidate_pairs` / `duplicated_ngram_spans`
-    do.
+    (lineage cut); `tests/test_plans.py` pins both the trap and the
+    barrier.
     """
     sc = df.sparkSession.sparkContext
     target = target or sc.defaultParallelism

@@ -9,7 +9,7 @@ format is decoded directly from the public protobuf spec
 (opentelemetry-proto, ``opentelemetry/proto/metrics/v1/metrics.proto``
 and ``collector/metrics/v1/metrics_service.proto``) — no generated
 stubs, no protobuf dependency — and payload decode runs executor-side
-(:func:`otlp_frame`, one ``mapInPandas`` over captured POST bodies).
+(:func:`otlp_frame`, one ``mapInArrow`` over captured POST bodies).
 
 Field numbers (from the public .proto files)::
 
@@ -769,10 +769,10 @@ def otlp_exemplar_frame(
     straight into the exemplar store
     (`sources.exemplars.write_exemplar_store`).  Same executor-side
     decode shape as :func:`otlp_frame`."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     from tsdb_parquet_spark.names import escape_name
+    from tsdb_parquet_spark.remote_write import _arrow_schema, _record_batch
 
     payloads = payloads.select(payload_col)
     # raw wire names in; U__ value-encoded column names out (identity
@@ -793,11 +793,12 @@ def otlp_exemplar_frame(
     )
 
     def convert(batches):
-        cols = col_names + ["ts", "value", "exemplar_labels"]
+        arrow_schema = _arrow_schema(
+            col_names, ["ts", "value", "exemplar_labels"]
+        )
         buf: list[tuple] = []
-        for pdf in batches:
-            for body in pdf[payload_col]:
-                proto = bytes(body)
+        for batch in batches:
+            for proto in batch.column(payload_col).to_pylist():
                 if gzip_encoded or (
                     gzip_encoded is None and proto[:2] == b"\x1f\x8b"
                 ):
@@ -811,11 +812,12 @@ def otlp_exemplar_frame(
                     )
                     buf.append(row + (ts, val, ex))
                     if len(buf) >= batch_rows:
-                        yield pd.DataFrame(buf, columns=cols)
+                        yield _record_batch(buf, arrow_schema)
                         buf = []
-        yield pd.DataFrame(buf, columns=cols)
+        if buf:
+            yield _record_batch(buf, arrow_schema)
 
-    return payloads.mapInPandas(convert, schema)
+    return payloads.mapInArrow(convert, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1038,9 +1040,10 @@ def otlp_frame(
 ):
     """Decode a DataFrame of OTLP POST bodies into a sample frame
     ``(label_names..., ts long, value double)`` — the OTLP twin of
-    `remote_write.remote_write_frame`: one ``mapInPandas`` over the
+    `remote_write.remote_write_frame`: one ``mapInArrow`` over the
     payload column (pruned before the Arrow hop), rows streamed out in
-    bounded batches, missing labels as ``""``.  Include ``le`` /
+    bounded batches of per-column lists (no pandas hop, so a NaN sample
+    stays NaN), missing labels as ``""``.  Include ``le`` /
     ``quantile`` in ``label_names`` when histogram or summary metrics
     ride the payloads.  ``gzip_encoded=None`` (default) sniffs the gzip
     magic per payload — a tolerant receiver's spool mixes encodings per
@@ -1075,9 +1078,8 @@ def otlp_frame(
     ``shared_scan``) enable it only when the spool is a bounded batch,
     never on an unbounded ingest stream.  Ignored without the delta
     split, where the decode already runs once."""
-    import pandas as pd
-
     from tsdb_parquet_spark.names import escape_name
+    from tsdb_parquet_spark.remote_write import _arrow_schema, _record_batch
 
     if delta not in ("skip", "convert"):
         raise ValueError(f"delta must be 'skip' or 'convert', got {delta!r}")
@@ -1102,13 +1104,11 @@ def otlp_frame(
         schema += ", `__delta` boolean"
 
     def convert(batches):
-        cols = col_names + ["ts", "value"]
-        if delta == "convert":
-            cols = cols + ["__delta"]
+        tail = ["ts", "value"] + (["__delta"] if delta == "convert" else [])
+        arrow_schema = _arrow_schema(col_names, tail)
         buf: list[tuple] = []
-        for pdf in batches:
-            for body in pdf[payload_col]:
-                proto = bytes(body)
+        for batch in batches:
+            for proto in batch.column(payload_col).to_pylist():
                 if gzip_encoded or (
                     gzip_encoded is None and proto[:2] == b"\x1f\x8b"
                 ):
@@ -1140,11 +1140,12 @@ def otlp_frame(
                         row = row + (is_delta,)
                     buf.append(row)
                     if len(buf) >= batch_rows:
-                        yield pd.DataFrame(buf, columns=cols)
+                        yield _record_batch(buf, arrow_schema)
                         buf = []
-        yield pd.DataFrame(buf, columns=cols)
+        if buf:
+            yield _record_batch(buf, arrow_schema)
 
-    frame = payloads.mapInPandas(convert, schema)
+    frame = payloads.mapInArrow(convert, schema)
     if delta != "convert":
         return frame
     from pyspark.sql import Window

@@ -1438,27 +1438,6 @@ _OUTER_AGGS = {
     "group": lambda c: F.max(F.lit(1.0)),
 }
 
-#: (outer agg, range func) compositions where the per-series partial is
-#: ALGEBRAICALLY redundant, so the outer grouping can aggregate the
-#: bucketed samples directly (PromQLEngine._composed_agg).  Exactness is
-#: the admission bar — only pairs whose regrouping provably cannot move
-#: a single bit qualify:
-#:   * sum ∘ count_over_time: per-series counts are integers (exact in
-#:     a double up to 2^53); summing integers is associative.
-#:   * max ∘ max_over_time / min ∘ min_over_time: the SAME reduction at
-#:     both levels, associative and commutative under Spark's total
-#:     ordering of doubles (NaN greatest) — a flat reduce over the
-#:     union equals the nested reduce on any grouping.
-#: sum ∘ sum_over_time / avg-style pairs are deliberately absent:
-#: reassociating float addition changes low-order bits and the corpus
-#: oracle hashes results exactly.
-_COMPOSED_AGGS = {
-    ("sum", "count_over_time"): lambda: F.count(F.lit(1)).cast("double"),
-    ("max", "max_over_time"): lambda: F.max("value"),
-    ("min", "min_over_time"): lambda: F.min("value"),
-}
-
-
 def _grouping(
     columns: "list[str]", by: "list[str] | None", without: "list[str] | None"
 ) -> list[str]:
@@ -1694,112 +1673,6 @@ class PromQLEngine:
         self._core_refs = _count_selector_cores(node)
         self._inner_evals: dict[str, int] = {}
         return self._eval(node, start_ms, end_ms, step_ms, lookback_ms)
-
-    def query_range_many(
-        self,
-        promqls: list[str],
-        start_ms: int,
-        end_ms: int,
-        step_ms: int,
-        lookback_ms: int = DEFAULT_LOOKBACK_MS,
-    ) -> list[DataFrame]:
-        """Evaluate several expressions on ONE grid as a single
-        evaluation unit (guide §2.4): common-subexpression memoization
-        spans the whole batch, and selector cores that differ ONLY in
-        their range function (e.g. a ts_of_max / first / ts_of_first
-        triplet over the same selector+window) are FUSED into one
-        grouped aggregation producing one column per function — one
-        scan + step fan-out + exchange instead of one full chain per
-        expression.  Each returned frame is exactly what
-        ``query_range`` would return for that expression alone."""
-        nodes = []
-        for promql in promqls:
-            node = parse_promql(promql)
-            if isinstance(node, float):
-                raise ValueError("scalar-only query has no vector result")
-            nodes.append(node)
-        if (
-            self._shared_scan
-            and self._scan_pin is not None
-            and not self._shared_scan_alive()
-        ):
-            self._scan_pin = None
-        nodes = [
-            self._route(n, start_ms, end_ms, step_ms, lookback_ms)
-            for n in nodes
-        ]
-        self.release_cache()
-        self._memo = {}
-        self._subtree_refs = {}
-        self._core_refs = {}
-        for n in nodes:
-            _count_subtrees(n, self._subtree_refs)
-            _count_selector_cores(n, self._core_refs)
-        self._inner_evals = {}
-        self._seed_fused_cores(nodes, start_ms, end_ms, step_ms, lookback_ms)
-        return [
-            self._eval(n, start_ms, end_ms, step_ms, lookback_ms)
-            for n in nodes
-        ]
-
-    def _seed_fused_cores(
-        self, nodes, start_ms, end_ms, step_ms, lookback_ms
-    ) -> None:
-        """Find selector cores across ``nodes`` that share (matchers,
-        metric, window, offset) but differ in their single-aggregation
-        range function, evaluate them as ONE grouped aggregation with
-        one column per function, pin it, and seed the core memo so
-        :meth:`_selector_series` serves every core from the fused frame."""
-        from dataclasses import replace as _dc_replace
-
-        groups: dict[tuple, dict[str, PromExpr]] = {}
-
-        def visit(n):
-            if not hasattr(n, "__dataclass_fields__"):
-                return
-            if (
-                isinstance(n, PromExpr)
-                and n.func in _FUNC_AGGS
-                and n.at_ms is None
-            ):
-                core = _dc_replace(n, agg=None, by=None, without=None)
-                key = (repr(n.matchers), n.metric, n.range_ms, n.offset_ms)
-                groups.setdefault(key, {})[repr(core)] = core
-            for name in n.__dataclass_fields__:
-                value = getattr(n, name)
-                for child in (
-                    value if isinstance(value, (list, tuple)) else (value,)
-                ):
-                    visit(child)
-
-        for n in nodes:
-            visit(n)
-        for cores in groups.values():
-            if len(cores) < 2:
-                continue
-            ordered = sorted(cores.items())
-            rep = ordered[0][1]
-            bucketed, series_cols = self._bucketed_selector(
-                rep, start_ms, end_ms, step_ms, lookback_ms
-            )
-            if self.stale_aware:
-                # markers are not samples in range selections
-                bucketed = bucketed.filter(~F.col("is_stale"))
-            keys = ["t"] + list(series_cols)
-            fused = self._pin(
-                bucketed.groupBy(*keys).agg(
-                    *[
-                        _FUNC_AGGS[core.func]().alias(f"__fused_{i}")
-                        for i, (_, core) in enumerate(ordered)
-                    ]
-                )
-            )
-            for i, (fp, _) in enumerate(ordered):
-                self._memo[
-                    ("core", fp, start_ms, end_ms, step_ms, lookback_ms)
-                ] = fused.select(
-                    *keys, F.col(f"__fused_{i}").alias("value")
-                )
 
     def release_cache(self) -> None:
         """Drop the engine's references to the shared-subtree frames
@@ -2219,16 +2092,13 @@ class PromQLEngine:
         if "le" not in buckets.columns:
             raise ValueError("histogram_stddev needs an `le` label")
         grp = [c for c in buckets.columns if c not in ("t", "value", "le")]
-        mean = self._histogram_mean(
-            base, grp, start_ms, end_ms, step_ms, lookback_ms
-        )
-        if mean is None:
-            # `@`-pinned selector — the two-eval join resolves the pin
-            mean = ev("_sum").withColumnRenamed("value", "__sum").join(
+        mean = (
+            ev("_sum").withColumnRenamed("value", "__sum").join(
                 ev("_count").withColumnRenamed("value", "__count"),
                 on=["t", *grp],
             )
-        mean = mean.withColumn("__mean", F.col("__sum") / F.col("__count"))
+            .withColumn("__mean", F.col("__sum") / F.col("__count"))
+        )
         inf = float("inf")
         le_num = F.when(
             F.col("le").isin("+Inf", "Inf", "inf"), F.lit(inf)
@@ -2270,62 +2140,6 @@ class PromQLEngine:
             # here (e.g. NaN clamping) must be mirrored there.
             var = var.withColumn("value", F.sqrt("value"))
         return var
-
-    def _histogram_mean(
-        self, base, grp, start_ms, end_ms, step_ms, lookback_ms
-    ) -> DataFrame | None:
-        """``(t, grp, __sum, __count)`` for a classic-histogram selector:
-        the ``_sum`` and ``_count`` sibling series are the SAME selector
-        on two metrics, so ONE bucketed eval with conditional per-metric
-        max_by replaces two instant-vector chains plus their join
-        (guide §2.4).  Inner-join semantics preserved: a step/series
-        where either side's latest sample is missing (or stale) drops.
-        Returns None for an ``@``-pinned selector (caller falls back to
-        the two-eval join)."""
-        import dataclasses
-
-        if base.at_ms is not None:
-            # `@` is resolved in _eval above the selector layer; the
-            # fused path reads _bucketed_selector directly and would
-            # silently ignore the pin — keep the two-eval join there
-            return None
-        mn = self.metric_label
-        sum_m, cnt_m = base.metric + "_sum", base.metric + "_count"
-        pair_core = dataclasses.replace(
-            base, metric=None, agg=None, by=None, without=None
-        )
-        bucketed, _ = self._bucketed_selector(
-            pair_core, start_ms, end_ms, step_ms, lookback_ms
-        )
-        # deterministic column filter: Catalyst pushes the In through
-        # the step-bucketing projection to the parquet scan
-        bucketed = bucketed.filter(F.col(mn).isin(sum_m, cnt_m))
-
-        def latest(metric: str, col: str):
-            cond = F.col(mn) == metric
-            # max_by ignores NULL ordering keys, so each aggregate sees
-            # only its own metric's samples
-            return F.max_by(
-                F.when(cond, F.col(col)), F.when(cond, F.col("ts"))
-            )
-
-        aggs = [
-            latest(sum_m, "value").alias("__sum"),
-            latest(cnt_m, "value").alias("__count"),
-        ]
-        if self.stale_aware:
-            aggs += [
-                latest(sum_m, "is_stale").alias("__st_s"),
-                latest(cnt_m, "is_stale").alias("__st_c"),
-            ]
-        mean = bucketed.groupBy("t", *grp).agg(*aggs).filter(
-            F.col("__sum").isNotNull() & F.col("__count").isNotNull()
-        )
-        if self.stale_aware:
-            mean = mean.filter(
-                ~F.col("__st_s") & ~F.col("__st_c")
-            ).drop("__st_s", "__st_c")
-        return mean
 
     @staticmethod
     def _histogram_fraction(
@@ -2711,9 +2525,6 @@ class PromQLEngine:
             cols = [c for c in pinned.columns if c != "t"]
             return pinned.drop("t").select(steps, *cols)
 
-        fused = self._composed_agg(expr, start_ms, end_ms, step_ms, lookback_ms)
-        if fused is not None:
-            return fused
         per_series = self._selector_series(
             expr, start_ms, end_ms, step_ms, lookback_ms
         )
@@ -2723,51 +2534,6 @@ class PromQLEngine:
         return per_series.groupBy("t", *by).agg(
             _OUTER_AGGS[expr.agg](F.col("value")).alias("value")
         )
-
-    def _composed_agg(
-        self, expr: PromExpr, start_ms, end_ms, step_ms, lookback_ms
-    ) -> DataFrame | None:
-        """Outer-aggregation pushdown (guide §2.3/§2.4): for the exact
-        compositions in :data:`_COMPOSED_AGGS`, aggregate the bucketed
-        samples straight to ``(t, by)`` — the per-series partial is
-        algebraically redundant, so the ``(t, full-series-key)``
-        exchange, whose cardinality scales with the store's series
-        count at 100 TB, disappears and the one remaining exchange
-        carries map-side-combined ``(t, by)`` partials instead of
-        per-series rows.  Fires only when this query references the
-        selector core nowhere else: a shared core's per-series frame is
-        computed once and pinned (:meth:`_selector_series`), and
-        splitting it into parallel fused chains would repeat the scan
-        fan-out instead of sharing it.  Returns None when not
-        applicable (caller falls through to the per-series path)."""
-        if expr.agg is None or not getattr(self, "_compose_aggs", True):
-            return None
-        agg_fn = _COMPOSED_AGGS.get((expr.agg, expr.func))
-        if agg_fn is None:
-            return None
-        from dataclasses import replace as _dc_replace
-
-        core = _dc_replace(expr, agg=None, by=None, without=None)
-        fp = repr(core)
-        if getattr(self, "_core_refs", {}).get(fp, 0) > 1:
-            return None
-        memo = getattr(self, "_memo", None)
-        if memo is not None and (
-            "core", fp, start_ms, end_ms, step_ms, lookback_ms
-        ) in memo:
-            # the core is already served by a fused multi-function frame
-            # (query_range_many) — reuse it instead of a parallel chain
-            return None
-        bucketed, series_cols = self._bucketed_selector(
-            core, start_ms, end_ms, step_ms, lookback_ms
-        )
-        # group by labels only, never the bucketed frame's own columns
-        # (`by (value)` would otherwise group by the raw sample values)
-        by = _grouping(series_cols, expr.by, expr.without)
-        if self.stale_aware:
-            # markers are not samples in range selections (_range_value)
-            bucketed = bucketed.filter(~F.col("is_stale"))
-        return bucketed.groupBy("t", *by).agg(agg_fn().alias("value"))
 
     def _selector_series(
         self, expr: PromExpr, start_ms, end_ms, step_ms, lookback_ms
@@ -2809,8 +2575,7 @@ class PromQLEngine:
         self, expr: PromExpr, start_ms, end_ms, step_ms, lookback_ms
     ):
         """Matcher-filtered, step-bucketed sample frame of a selector
-        core — the shared front half of :meth:`_selector_series_inner`,
-        :meth:`_composed_agg`, the fused cores and the histogram mean.
+        core — the front half of :meth:`_selector_series_inner`.
         Returns ``(bucketed, series_cols)``."""
         window_ms = expr.range_ms if expr.func else lookback_ms
         off = expr.offset_ms

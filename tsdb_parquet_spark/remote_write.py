@@ -462,11 +462,16 @@ def remote_write_frame(
 
 def _arrow_schema(label_cols: Sequence[str], tail: Sequence[str]):
     """Arrow schema of a decoded sample batch: string label columns, then
-    ``tail`` — string columns except ``ts`` (int64) and ``value``
-    (float64)."""
+    ``tail`` — string columns except ``ts`` (int64), ``value``
+    (float64), ``__delta`` (bool) and ``exemplar_labels`` (string map)."""
     import pyarrow as pa
 
-    types = {"ts": pa.int64(), "value": pa.float64()}
+    types = {
+        "ts": pa.int64(),
+        "value": pa.float64(),
+        "__delta": pa.bool_(),
+        "exemplar_labels": pa.map_(pa.string(), pa.string()),
+    }
     return pa.schema(
         [(c, pa.string()) for c in label_cols]
         + [(c, types.get(c, pa.string())) for c in tail]

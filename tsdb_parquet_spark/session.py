@@ -29,7 +29,8 @@ _RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow transfer for the few pandas-UDF code paths (chunk decode etc.)
+    # Arrow for toPandas()/createDataFrame(pandas) (corpus rows, tests);
+    # mapInArrow/mapInPandas decode paths use Arrow regardless
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # no per-call call-site capture: with it on, every DataFrame and
     # functions call makes ~5 extra JVM round trips (active session,
