@@ -1,12 +1,9 @@
-"""Unit tests for the LLM-pipeline operator layer (dedup / similarity /
-text / multimodal)."""
+"""Unit tests for the LLM-pipeline text operators (dedup / text / quality)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from tsdb_parquet_spark.functions import dedup as D
-from tsdb_parquet_spark.functions import multimodal as MM
-from tsdb_parquet_spark.functions import similarity as SIM
 from tsdb_parquet_spark.functions import text as TX
 
 
@@ -51,79 +48,6 @@ def test_lsh_finds_near_duplicates(docs):
     assert (0, 1) in pairs or (0, 3) in pairs
     assert (0, 3) in pairs  # identical docs always collide
     assert not any(2 in p for p in pairs)  # unrelated doc never pairs
-
-
-def test_lsh_does_not_leak_cached_blocks(spark, docs):
-    """Repeated pipeline calls must not accumulate cached bucket/signature
-    frames: each call may leave at most its one (small, GC-freed) local
-    checkpoint, never the persisted join inputs."""
-    sc = spark.sparkContext._jsc.sc()
-    before = sc.getPersistentRDDs().size()
-    D.lsh_candidate_pairs(docs).count()
-    D.lsh_candidate_pairs(docs).count()
-    grown = sc.getPersistentRDDs().size() - before
-    assert grown <= 2  # the two checkpoints; un-unpersisted caches double it
-
-    emb = spark.createDataFrame(
-        [(i, [float(i % 3), 1.0, 0.5]) for i in range(6)],
-        "vec_id LONG, embedding ARRAY<FLOAT>",
-    )
-    before = sc.getPersistentRDDs().size()
-    SIM.near_duplicate_pairs(emb, threshold=0.5).count()
-    assert sc.getPersistentRDDs().size() - before <= 1
-
-    # eager=False with a derived width (n_rows omitted) must not leave
-    # the input persisted either: the count runs on a pruned projection,
-    # and the only cache left is the bucket frame for THIS plan, which
-    # dies with the DataFrame. Repeated calls must not accumulate.
-    before = sc.getPersistentRDDs().size()
-    lazy = SIM.near_duplicate_pairs(emb, threshold=0.5, eager=False)
-    lazy.count()
-    first = sc.getPersistentRDDs().size() - before
-    lazy2 = SIM.near_duplicate_pairs(emb, threshold=0.5, eager=False)
-    lazy2.count()
-    assert sc.getPersistentRDDs().size() - before <= first + 1
-    assert first <= 1  # buckets only — never the persisted input
-
-
-def test_multiband_finds_boundary_pair_single_bucket_misses(spark):
-    """A near-dup pair straddling ONE hyperplane boundary flips one sign
-    bit: full-signature bucket equality (bands=1) loses it, any-band
-    matching recovers it — the multi-band recall fix, with exact cosine
-    re-rank keeping precision."""
-    import hashlib
-
-    planes = SIM.hyperplanes(8, 32)
-    p0 = planes[0]
-
-    def dot(a, b):
-        return sum(x * y for x, y in zip(a, b))
-
-    # deterministic construction: u is exactly on plane 0's boundary and
-    # comfortably off every other plane's; +-eps along p0 flips bit 0 only
-    w = [1.0 + b / 32.0 for b in hashlib.md5(b"w0").digest()[:8]]
-    d = dot(w, p0) / 8.0
-    u = [a - d * b for a, b in zip(w, p0)]
-    eps = 0.02
-    va = [a + eps * b for a, b in zip(u, p0)]
-    vb = [a - eps * b for a, b in zip(u, p0)]
-    assert [
-        j for j in range(32)
-        if (dot(va, planes[j]) > 0) != (dot(vb, planes[j]) > 0)
-    ] == [0]  # precondition: exactly one differing sign bit
-
-    df = spark.createDataFrame(
-        [(1, va), (2, vb)], "vec_id LONG, embedding ARRAY<DOUBLE>"
-    )
-    single = SIM.near_duplicate_pairs(
-        df, threshold=0.99, bands=1, bits_per_band=32, eager=False
-    ).collect()
-    banded = SIM.near_duplicate_pairs(
-        df, threshold=0.99, bands=4, bits_per_band=8, eager=False
-    ).collect()
-    assert single == []  # one flipped bit kills the full-signature bucket
-    assert [(r["id_a"], r["id_b"]) for r in banded] == [(1, 2)]
-    assert banded[0]["cos_sim"] >= 0.999
 
 
 def test_jaccard_values(docs):
@@ -208,77 +132,6 @@ def test_precomputed_hits_equivalence(docs):
     assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
 
 
-def test_cosine_topk_self_similarity(spark):
-    rows = [(i, [float(i == j) for j in range(4)]) for i in range(4)]
-    rows.append((99, [1.0, 0.0, 0.0, 0.001]))
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    top = SIM.brute_force_topk(df, [1.0, 0.0, 0.0, 0.0], k=2, exclude_ids=[0])
-    got = [(r["vec_id"], r["cos_sim"]) for r in top.collect()]
-    assert got[0][0] == 99 and got[0][1] == 1.0  # cos ~0.9999995 rounds to 1
-    assert got[1][1] == 0.0
-
-
-def test_lsh_topk_matches_brute_force_for_bucket_member(spark):
-    import random
-
-    random.seed(7)
-    rows = [
-        (i, [random.uniform(-1, 1) for _ in range(16)]) for i in range(200)
-    ]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    q = rows[17][1]
-    ann = SIM.lsh_topk(df, q, k=1, bits=4, exclude_ids=[])
-    top = ann.collect()[0]
-    assert top["vec_id"] == 17 and top["cos_sim"] == 1.0
-
-
-def test_multimodal_metadata_stub(docs):
-    media = MM.attach_fake_media(docs)
-    meta = MM.extract_media_metadata(media, decode_stub=True).collect()
-    for r in meta:
-        assert r["meta"]["n_bytes"] == 16
-        assert 1 <= r["meta"]["width"] <= 64
-        assert r["meta"]["format"] in ("png", "jpeg", "webp")
-
-
-def test_multimodal_real_decode_raises_on_unknown_container(docs):
-    """Raw md5 blobs are not BMP/WAV containers — the real decode path
-    must refuse them (compressed formats need absent codec libraries)."""
-    media = MM.attach_fake_media(docs)
-    with pytest.raises(Exception) as exc_info:
-        MM.extract_media_metadata(media, decode_stub=False).collect()
-    assert "NotImplementedError" in str(exc_info.value) or isinstance(
-        exc_info.value, NotImplementedError
-    )
-
-
-def test_multimodal_real_header_roundtrip(docs):
-    """synthesize_media writes byte-valid BMP/WAV containers and the
-    struct-based decoder recovers the true header fields: dimensions,
-    padded file size, sample rate, channel count."""
-    media = MM.synthesize_media(docs)
-    rows = MM.extract_media_metadata(media, decode_stub=False).collect()
-    assert len(rows) == docs.count()
-    seen = set()
-    for r in rows:
-        blob, m = bytes(r["media"]), r["meta"]
-        seen.add(m["format"])
-        assert m["n_bytes"] == len(blob)
-        if m["format"] == "bmp":
-            assert blob[:2] == b"BM"
-            assert 1 <= m["width"] <= 64 and 1 <= m["height"] <= 64
-            row_bytes = (m["width"] * 3 + 3) // 4 * 4
-            assert m["n_bytes"] == 54 + row_bytes * m["height"]
-            assert m["sample_rate"] == 0 and m["channels"] == 0
-        else:
-            assert m["format"] == "wav"
-            assert blob[:4] == b"RIFF" and blob[8:12] == b"WAVE"
-            assert m["channels"] in (1, 2)
-            assert 8000 <= m["sample_rate"] <= 15000
-            assert m["width"] == 0 and m["height"] == 0
-    assert seen == {"bmp", "wav"}
-
-
 def test_approx_count_distinct_within_tolerance(spark, sf_oracle):
     """The HLL sketch path (not oracle-comparable — sketch internals
     differ per engine) must land within 5% of the exact distinct count."""
@@ -288,78 +141,6 @@ def test_approx_count_distinct_within_tolerance(spark, sf_oracle):
         F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx"),
     ).collect()[0]
     assert abs(row["approx"] - row["exact"]) / row["exact"] < 0.05
-
-
-def test_frame_sampling_fanout(docs):
-    media = MM.attach_fake_media(docs)
-    frames = MM.sample_frames(media, every_nth_byte=4)
-    # 16-byte blobs sampled every 4 bytes -> 4 frames per doc
-    assert frames.count() == docs.count() * 4
-
-
-def test_band_signature_udf_bit_identical_to_hof(spark, sf_oracle):
-    """The Arrow-batched signature kernel must reproduce the interpreted
-    HOF fold's buckets EXACTLY (same left-assoc accumulation order), on
-    real float32 embeddings — the cross-engine hash contract for
-    q27/q28 rides on this."""
-    planes = SIM.hyperplanes(dim=64, bits=32)
-    emb = spark.read.parquet(f"{sf_oracle}/embeddings.parquet")
-    hof = [
-        SIM.signature_column(
-            F.col("embedding"), planes[j * 8 : (j + 1) * 8]
-        ).alias(f"s{j}")
-        for j in range(4)
-    ]
-    udf_sigs = SIM.band_signature_udf(planes, bands=4)(F.col("embedding"))
-    mismatches = (
-        emb.select("vec_id", *hof, udf_sigs.alias("u"))
-        .filter(
-            (F.col("s0") != F.col("u")[0])
-            | (F.col("s1") != F.col("u")[1])
-            | (F.col("s2") != F.col("u")[2])
-            | (F.col("s3") != F.col("u")[3])
-        )
-        .count()
-    )
-    assert mismatches == 0
-
-
-def test_ivf_assign_matches_python_reference(spark, sf_oracle):
-    """Arrow-kernel centroid assignment == a pure-Python left-assoc
-    reference on real embeddings (the oracle contract)."""
-    cents = SIM.ivf_centroids(dim=64, n_centroids=8)
-    invs = SIM._inv_norms(cents)
-    emb = spark.read.parquet(f"{sf_oracle}/embeddings.parquet")
-    rows = emb.select(
-        "vec_id",
-        "embedding",
-        SIM.centroid_assign_udf(cents)(F.col("embedding")).alias("c"),
-    ).collect()
-    assert len(rows) > 0
-    for r in rows[:50]:
-        scores = []
-        for j, (c, iv) in enumerate(zip(cents, invs)):
-            acc = 0.0
-            for x, y in zip(r["embedding"], c):
-                acc = acc + float(x) * y
-            scores.append(acc * iv)
-        assert r["c"] == scores.index(max(scores))
-
-
-def test_ivf_topk_is_exact_within_probed_lists(spark, sf_oracle):
-    emb = spark.read.parquet(f"{sf_oracle}/embeddings.parquet")
-    qv = SIM.ivf_centroids(dim=64, n_centroids=1, seed="ivf-query")[0]
-    cents = SIM.ivf_centroids(dim=64, n_centroids=8)
-    probes = SIM.query_probes(qv, cents, 2)
-    assert len(probes) == 2 and len(set(probes)) == 2
-    got = SIM.ivf_topk(emb, qv, k=5, nprobe=2, n_centroids=8).collect()
-    # brute force restricted to the probed lists must agree exactly
-    assign = SIM.centroid_assign_udf(cents)
-    cand = emb.filter(assign(F.col("embedding")).isin(probes))
-    want = SIM.brute_force_topk(cand, qv, k=5).collect()
-    assert [(r["vec_id"], r["cos_sim"]) for r in got] == [
-        (r["vec_id"], r["cos_sim"]) for r in want
-    ]
 
 
 def test_simhash_banding_is_complete_for_small_hamming(docs):
@@ -377,104 +158,6 @@ def test_simhash_banding_is_complete_for_small_hamming(docs):
         for r in D.simhash_near_duplicates(docs, max_hamming=3).collect()
     }
     assert got == want
-
-
-def test_cosine_scores_udf_bit_identical_to_hof(spark, sf_oracle):
-    emb = spark.read.parquet(f"{sf_oracle}/embeddings.parquet")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    q = F.array(*[F.lit(x) for x in qv])
-    mismatches = (
-        emb.select(
-            SIM.cosine(F.col("embedding"), q).alias("hof"),
-            SIM.cosine_scores_udf(qv)(F.col("embedding")).alias("udf"),
-        )
-        .filter(F.col("hof") != F.col("udf"))
-        .count()
-    )
-    assert mismatches == 0
-
-
-def test_train_ivf_centroids_separates_blobs(spark):
-    """Lloyd's on two well-separated blobs: learned centroids land near
-    the blob means, every vector assigns to its own blob's centroid, and
-    the learned codebook beats the random init on within-cluster cosine."""
-    import numpy as np
-
-    from tsdb_parquet_spark.functions.similarity import (
-        centroid_assign_udf,
-        ivf_centroids,
-        train_ivf_centroids,
-    )
-
-    rng = np.random.RandomState(7)
-    dim = 8
-    a = rng.normal(loc=+5.0, scale=0.1, size=(40, dim))
-    b = rng.normal(loc=-5.0, scale=0.1, size=(40, dim))
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(np.vstack([a, b]))]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-
-    cents = train_ivf_centroids(df, dim=dim, n_centroids=2, iters=6)
-    # each learned centroid sits in one blob (all-positive or all-negative)
-    signs = sorted(float(np.sign(np.mean(c))) for c in cents)
-    assert signs == [-1.0, 1.0]
-
-    out = df.select(
-        "vec_id",
-        centroid_assign_udf(cents)(df["embedding"]).alias("c"),
-    ).collect()
-    by_blob = {0: set(), 1: set()}
-    for r in out:
-        by_blob[0 if r["vec_id"] < 40 else 1].add(r["c"])
-    # pure assignment: each blob maps to exactly one (distinct) centroid
-    assert len(by_blob[0]) == 1 and len(by_blob[1]) == 1
-    assert by_blob[0] != by_blob[1]
-
-    # convergence beats the deterministic init: centroids sit on the unit
-    # sphere (spherical update) in the direction of the blob means
-    def unit(v):
-        v = np.asarray(v, dtype=np.float64)
-        return v / np.linalg.norm(v)
-
-    means = {tuple(np.round(unit(np.mean(a, axis=0)), 2)),
-             tuple(np.round(unit(np.mean(b, axis=0)), 2))}
-    learned = {tuple(np.round(np.asarray(c), 2)) for c in cents}
-    assert learned == means
-    for c in cents:
-        assert abs(float(np.linalg.norm(c)) - 1.0) < 1e-9
-    assert cents != ivf_centroids(dim=dim, n_centroids=2)
-
-
-def test_semantic_dedup_drops_in_cluster_copies(spark):
-    # two exact-direction pairs (scaled copies, cosine 1.0) plus two
-    # orthogonal singletons; centroids chosen so each pair lands in its
-    # own cluster and copies are dropped keep-first
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [2.0, 0.0, 0.0, 0.0]),  # copy of 0 (same direction)
-        (2, [0.0, 1.0, 0.0, 0.0]),
-        (3, [0.0, 3.0, 0.0, 0.0]),  # copy of 2
-        (4, [0.0, 0.0, 1.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]]
-    out = {
-        r["vec_id"]: (r["cluster"], r["dropped"])
-        for r in SIM.semantic_dedup(df, cents, threshold=0.95).collect()
-    }
-    assert out[0] == (0, False) and out[1] == (0, True)
-    assert out[2] == (1, False) and out[3] == (1, True)
-    assert out[4] == (2, False)
-
-
-def test_semantic_dedup_threshold_boundary(spark):
-    # cosine between the two vectors is ~0.707 — below 0.95, above 0.5
-    rows = [(0, [1.0, 0.0]), (1, [1.0, 1.0])]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    cents = [[1.0, 0.0]]
-    strict = SIM.semantic_dedup(df, cents, threshold=0.95)
-    assert not any(r["dropped"] for r in strict.collect())
-    loose = SIM.semantic_dedup(df, cents, threshold=0.5)
-    assert {r["vec_id"]: r["dropped"] for r in loose.collect()}[1] is True
 
 
 def test_duplicated_ngram_spans(spark):
@@ -495,171 +178,6 @@ def test_duplicated_ngram_spans(spark):
     assert out[1]["n_dup_shingles"] == 1
     assert out[2]["n_dup_shingles"] == 0 and out[2]["dup_ratio"] == 0.0
     assert abs(out[0]["dup_ratio"] - round(1 / 3, 4)) < 1e-9
-
-
-def test_bmp_pixel_roundtrip_and_resize():
-    import numpy as np
-
-    # 2x2 BGR image with distinct corner values
-    px = np.array(
-        [[[1, 2, 3], [4, 5, 6]], [[7, 8, 9], [10, 11, 12]]], dtype=np.uint8
-    )
-    blob = MM._encode_bmp_pixels(px)
-    assert blob[:2] == b"BM"
-    back = MM._decode_bmp_pixels(blob)
-    assert np.array_equal(back, px)
-    # nearest-neighbor 2x2 -> 1x1 keeps the top-left source pixel
-    one = MM._resize_nn(px, 1, 1)
-    assert one.shape == (1, 1, 3) and list(one[0, 0]) == [1, 2, 3]
-    # upscale 2x2 -> 4x4 repeats each pixel 2x2
-    four = MM._resize_nn(px, 4, 4)
-    assert np.array_equal(four[0, 0], px[0, 0])
-    assert np.array_equal(four[3, 3], px[1, 1])
-    assert np.array_equal(four[0, 3], px[0, 1])
-
-
-def test_bmp_decode_handles_row_padding():
-    import numpy as np
-
-    # width 3 -> 9 pixel bytes/row, padded to 12; decode must strip pad
-    px = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
-    blob = MM._encode_bmp_pixels(px)
-    row_bytes = (3 * 3 + 3) // 4 * 4
-    assert len(blob) == 54 + row_bytes * 2
-    assert np.array_equal(MM._decode_bmp_pixels(blob), px)
-
-
-def test_wav_sample_decode_and_features():
-    import hashlib
-    import numpy as np
-
-    d = hashlib.md5(b"audio-doc").digest()
-    blob = MM._encode_wav(d)
-    samples, rate = MM._decode_wav_samples(blob)
-    assert rate == 8000 + (d[1] % 8) * 1000
-    assert samples.shape == (d[2] % 64 + 1, d[0] % 2 + 1)
-    # samples are the tiled digest reinterpreted LE int16
-    n, ch = samples.shape
-    raw = (d * (n * ch * 2 // len(d) + 1))[: n * ch * 2]
-    expect = np.frombuffer(raw, "<i2").reshape(-1, ch)
-    assert np.array_equal(samples, expect)
-
-
-def test_media_features_fused_pass(spark):
-    rows = [(0, "bmp seed text x"), (1, "wav doc"), (2, "another")]
-    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    media = MM.synthesize_media(docs)
-    out = {r["doc_id"]: r for r in MM.media_features(media, out_w=8, out_h=8).collect()}
-    import hashlib
-
-    for i, txt in rows:
-        d = hashlib.md5(txt.encode()).digest()
-        r = out[i]
-        if d[2] % 2 == 0:
-            assert r["format"] == "bmp"
-            assert (r["out_w"], r["out_h"], r["out_bytes"]) == (8, 8, 246)
-        else:
-            assert r["format"] == "wav"
-            assert r["n_samples"] == d[2] % 64 + 1
-            assert r["sample_rate"] == 8000 + (d[1] % 8) * 1000
-            assert r["duration_ms"] == r["n_samples"] * 1000 // r["sample_rate"]
-
-
-def test_resize_media_and_audio_features_passthrough(spark):
-    rows = [(0, "bmp seed text x"), (1, "wav doc"), (2, "another")]
-    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    media = MM.synthesize_media(docs)
-    rz = {r["doc_id"]: r for r in MM.resize_media(media, out_w=4, out_h=4).collect()}
-    au = {r["doc_id"]: r for r in MM.audio_features(media).collect()}
-    import hashlib
-
-    for i, txt in rows:
-        d = hashlib.md5(txt.encode()).digest()
-        if d[2] % 2 == 0:
-            blob = bytes(rz[i]["resized"])
-            assert blob[:2] == b"BM"
-            assert MM._decode_bmp_pixels(blob).shape == (4, 4, 3)
-            assert au[i]["audio"] is None
-        else:
-            assert rz[i]["resized"] is None
-            assert au[i]["audio"]["channels"] == d[0] % 2 + 1
-
-
-def test_sq8_train_encode_bounds(spark):
-    rows = [(0, [0.0, -2.0]), (1, [1.0, 2.0]), (2, [0.5, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    mins, maxs = SIM.sq8_train(df, dim=2)
-    assert mins == [0.0, -2.0] and maxs == [1.0, 2.0]
-    codes = {
-        r["vec_id"]: r["c"]
-        for r in df.select(
-            "vec_id", SIM.sq8_encode(F.col("embedding"), mins, maxs).alias("c")
-        ).collect()
-    }
-    # min codes to 0, max clamps to 255, midpoint lands mid-range
-    assert codes[0] == [0, 0]
-    assert codes[1] == [255, 255]
-    assert codes[2] == [128, 128]
-
-
-def test_sq8_topk_orders_by_quantized_dot(spark):
-    # vectors along axis 0 with increasing magnitude: quantized dot with
-    # q=[1,0] must preserve the magnitude order
-    rows = [(i, [float(i), 0.0]) for i in range(6)]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    mins, maxs = SIM.sq8_train(df, dim=2)
-    top = SIM.sq8_topk(df, [1.0, 0.0], mins, maxs, k=3).collect()
-    assert [r["vec_id"] for r in top] == [5, 4, 3]
-    trained = SIM.sq8_topk_trained(df, [1.0, 0.0], k=3, dim=2).collect()
-    assert [(r["vec_id"], r["dot_approx"]) for r in trained] == [
-        (r["vec_id"], r["dot_approx"]) for r in top
-    ]
-
-
-def test_sq8_quantization_error_bounded(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    vecs = rng.uniform(-1, 1, size=(50, 8))
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(50)]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    mins, maxs = SIM.sq8_train(df, dim=8)
-    q = [float(x) for x in rng.uniform(-1, 1, 8)]
-    approx = {
-        r["vec_id"]: r["dot_approx"]
-        for r in SIM.sq8_topk(df, q, mins, maxs, k=50).collect()
-    }
-    # per-dim max error is scale/2 ~ 2/512; dot error bound sum |q_i|*scale/2
-    bound = sum(abs(x) for x in q) * (2.0 / 256.0) / 2 + 1e-6
-    for i in range(50):
-        exact = float(np.dot(vecs[i], q))
-        assert abs(approx[i] - exact) <= bound + 1e-4
-
-
-def test_semantic_dedup_keep_farthest(spark):
-    # cluster centered on axis 0; ids chosen so keep-first and
-    # keep-farthest disagree: id 0 is CLOSEST to the centroid, id 1 is
-    # farther out, both near-duplicates of each other
-    rows = [
-        (0, [1.0, 0.0]),        # ccos = 1.0 (at the centroid)
-        (1, [1.0, 0.05]),       # ccos < 1.0 (farther from centroid)
-        (2, [0.0, 1.0]),        # other cluster, untouched
-    ]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    cents = [[1.0, 0.0], [0.0, 1.0]]
-    first = {
-        r["vec_id"]: r["dropped"]
-        for r in SIM.semantic_dedup(df, cents, threshold=0.99).collect()
-    }
-    assert first == {0: False, 1: True, 2: False}
-    farthest = {
-        r["vec_id"]: r["dropped"]
-        for r in SIM.semantic_dedup(
-            df, cents, threshold=0.99, keep="farthest"
-        ).collect()
-    }
-    # the paper keeps the LOW-centroid-similarity example: id 1 survives
-    assert farthest == {0: True, 1: False, 2: False}
 
 
 def test_duplicated_ngram_spans_matches_bruteforce(spark):
@@ -752,203 +270,6 @@ def test_lm_score_prefers_in_domain_text(spark):
     assert 2 not in out
     assert out[0]["avg_logprob"] > out[1]["avg_logprob"]
     assert out[0]["n_bigrams"] == 5 and out[1]["n_bigrams"] == 5
-
-
-def test_semantic_dedup_survivors_are_fixed_point(spark):
-    """keep-first semantics: a survivor has no lower-id neighbor at or
-    above the threshold, so survivors are pairwise below it within every
-    cluster — re-running the dedup on the survivors must drop nobody."""
-    import numpy as np
-
-    rng = np.random.RandomState(17)
-    base = rng.normal(0, 1, (30, 8))
-    # inject near-dup groups: scaled copies and tiny perturbations
-    vecs = list(base) + [base[i] * 2.0 for i in range(10)] + [
-        base[i] + rng.normal(0, 0.01, 8) for i in range(5)
-    ]
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    cents = SIM.ivf_centroids(dim=8, n_centroids=4, seed="fp-test")
-    first = SIM.semantic_dedup(df, cents, threshold=0.98)
-    survivors = {r["vec_id"] for r in first.collect() if not r["dropped"]}
-    assert len(survivors) < len(rows)  # the injected dups were dropped
-    kept_df = df.filter(F.col("vec_id").isin([int(i) for i in survivors]))
-    second = SIM.semantic_dedup(kept_df, cents, threshold=0.98)
-    assert not any(r["dropped"] for r in second.collect())
-
-
-def test_semantic_dedup_cluster_size_guard(spark):
-    """An under-clustered input (every vector lands in one cluster, more
-    rows than max_cluster_rows) must fail fast naming the remedy — the
-    within-cluster join is O((n/k)^2) and may not silently go quadratic
-    at scale."""
-    rows = [(i, [1.0, float(i) * 1e-3]) for i in range(10)]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    cents = [[1.0, 0.0], [0.0, 1.0]]  # all 10 vectors pick centroid 0
-    with pytest.raises(ValueError, match="max_cluster_rows"):
-        SIM.semantic_dedup(df, cents, threshold=0.99, max_cluster_rows=5)
-    # explicit opt-out (or a bound that fits) runs normally
-    ok = SIM.semantic_dedup(
-        df, cents, threshold=0.99, max_cluster_rows=None
-    )
-    assert ok.count() == 10
-    ok2 = SIM.semantic_dedup(df, cents, threshold=0.99, max_cluster_rows=10)
-    assert ok2.count() == 10
-
-
-def test_png_decode_all_filter_types():
-    """The stdlib PNG decoder reconstructs every scanline filter the spec
-    defines (None/Sub/Up/Average/Paeth)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    px = rng.randint(0, 256, (9, 7, 3), dtype=np.uint8)
-    h, w, c = px.shape
-    body = px.reshape(h, w * c).astype(np.int32)
-
-    def encode_with(ftype: int) -> bytes:
-        out = b""
-        for y in range(h):
-            prev = body[y - 1] if y > 0 else np.zeros(w * c, np.int32)
-            line, filt = body[y], np.zeros(w * c, np.int32)
-            for x in range(w * c):
-                a = line[x - c] if x >= c else 0
-                b = prev[x]
-                cc = prev[x - c] if x >= c else 0
-                if ftype == 0:
-                    pred = 0
-                elif ftype == 1:
-                    pred = a
-                elif ftype == 2:
-                    pred = b
-                elif ftype == 3:
-                    pred = (a + b) >> 1
-                else:
-                    p = a + b - cc
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                    pred = (
-                        a if pa <= pb and pa <= pc else (b if pb <= pc else cc)
-                    )
-                filt[x] = (line[x] - pred) & 0xFF
-            out += bytes([ftype]) + filt.astype(np.uint8).tobytes()
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        return (
-            MM._PNG_SIG
-            + MM._png_chunk(b"IHDR", ihdr)
-            + MM._png_chunk(b"IDAT", zlib.compress(out))
-            + MM._png_chunk(b"IEND", b"")
-        )
-
-    for ftype in range(5):
-        assert (MM._decode_png_pixels(encode_with(ftype)) == px).all()
-
-
-def test_png_metadata_resize_roundtrip(spark, docs):
-    """PNG blobs flow through the SAME Spark plumbing as BMP/WAV: digest
-    encode -> container metadata decode -> real pixel resize, all via
-    Arrow mapInPandas, with dimensions the oracle can predict from md5."""
-    import hashlib
-
-    import numpy as np
-
-    rows = [(r["doc_id"], bytes(MM._encode_png(
-        hashlib.md5(r["text"].encode()).digest()
-    ))) for r in docs.select("doc_id", "text").collect()]
-    media = spark.createDataFrame(rows, "doc_id LONG, media BINARY")
-    meta = MM.extract_media_metadata(media, decode_stub=False)
-    for r in meta.collect():
-        blob, m = bytes(r["media"]), r["meta"]
-        d = blob  # dims derive from the digest baked into the header
-        assert m["format"] == "png" and m["n_bytes"] == len(blob)
-        assert 1 <= m["width"] <= 64 and 1 <= m["height"] <= 64
-        # IHDR agrees with pixel-level decode
-        px = MM._decode_png_pixels(blob)
-        assert px.shape == (m["height"], m["width"], 3)
-    resized = MM.resize_media(media, out_w=8, out_h=8)
-    for r in resized.collect():
-        out = bytes(r["resized"])
-        px = MM._decode_png_pixels(out)
-        assert px.shape == (8, 8, 3)
-        # nearest-neighbor: every output pixel exists in the source
-        src = MM._decode_png_pixels(bytes(r["media"]))
-        flat = {tuple(p) for row_ in src.reshape(-1, 3) for p in [row_]}
-        assert all(tuple(p) in flat for p in px.reshape(-1, 3))
-
-
-def test_near_dup_pairs_target_bucket_rows(spark):
-    """target_bucket_rows widens bits_per_band with log2(n) so bucket
-    occupancy stays constant at scale; at small n the floor wins and the
-    result set is unchanged vs the fixed-width default."""
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    base = rng.normal(0, 1, (40, 8))
-    vecs = list(base) + [base[i] * 3.0 for i in range(6)]  # 6 exact dirs
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    fixed = {
-        (r["id_a"], r["id_b"])
-        for r in SIM.near_duplicate_pairs(df, threshold=0.999).collect()
-    }
-    scaled = {
-        (r["id_a"], r["id_b"])
-        for r in SIM.near_duplicate_pairs(
-            df, threshold=0.999, target_bucket_rows=16
-        ).collect()
-    }
-    # n=46, target=16 -> derived ceil(log2(2.875)) = 2 < floor 8: no-op
-    assert scaled == fixed
-    assert {(i, i + 40) for i in range(6)} <= fixed
-    # a tiny target forces wider bands; the exact-direction pairs (cosine
-    # 1.0 agrees with every hyperplane) must survive any width
-    wide = {
-        (r["id_a"], r["id_b"])
-        for r in SIM.near_duplicate_pairs(
-            df, threshold=0.999, target_bucket_rows=1
-        ).collect()
-    }
-    assert {(i, i + 40) for i in range(6)} <= wide
-
-
-def test_resize_media_corrupt_blobs_pass_through(spark):
-    """Corrupt or truncated blobs behind a valid magic — and NULL cells —
-    must yield NULL, never a task failure: one bad asset cannot kill a
-    corpus-wide job."""
-    import struct
-    import zlib
-
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0)  # palette PNG
-    palette_png = (
-        MM._PNG_SIG
-        + MM._png_chunk(b"IHDR", ihdr)
-        + MM._png_chunk(b"IDAT", zlib.compress(b"\x00" * 6))
-        + MM._png_chunk(b"IEND", b"")
-    )
-    good = MM._encode_png(bytes(range(16)))
-    # a BIG image (51x41) whose IDAT stream cannot possibly complete in
-    # 80 bytes — a tiny image's whole deflate block can survive a
-    # shallow cut, silently decoding
-    big = MM._encode_png(bytes([50, 40] + list(range(14))))
-    rows = [
-        (1, b"BM\x01\x02"),                       # truncated BMP header
-        (2, MM._PNG_SIG + b"\x00\x00\x00\x0dIHDR"),  # truncated IHDR
-        (3, big[:80]),                             # truncated IDAT (zlib)
-        (4, palette_png),                          # unsupported color type
-        (5, None),                                 # NULL media cell
-        (6, good),                                 # valid — still resizes
-    ]
-    df = spark.createDataFrame(rows, "doc_id LONG, media BINARY")
-    out = {
-        r["doc_id"]: r["resized"]
-        for r in MM.resize_media(df, out_w=4, out_h=4).collect()
-    }
-    assert out[1] is None and out[2] is None and out[3] is None
-    assert out[4] is None and out[5] is None
-    assert out[6] is not None
-    assert MM._decode_png_pixels(bytes(out[6])).shape == (4, 4, 3)
 
 
 # ---------------------------------------------------------------------------

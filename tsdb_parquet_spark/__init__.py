@@ -14,6 +14,7 @@ Catalyst + the vectorized Parquet reader; the net-new code is confined to:
                                      :mod:`tsdb_parquet_spark.querier`
 - a PromQL-subset translator      -> :mod:`tsdb_parquet_spark.plans.promql`
 - streaming ingestion             -> :mod:`tsdb_parquet_spark.streaming`
+- LLM-data-pipeline text operators -> :mod:`tsdb_parquet_spark.functions`
 - the Prometheus HTTP API and the remote-read/write, OTLP, scrape and
   WAL/block ingest paths          -> :mod:`tsdb_parquet_spark.api` and
                                      the modules named after each

@@ -1763,6 +1763,285 @@ def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# q22-q25 — deduplication suite (LLM-data-pipeline operators)
+# ---------------------------------------------------------------------------
+#
+# The documents table has no native duplicates, so each query synthesizes
+# them with engine-reproducible transforms (UNION ALL of exact copies /
+# token-appended near-copies) before running the operator.
+
+from tsdb_parquet_spark.functions import dedup as D  # noqa: E402
+from tsdb_parquet_spark.functions import pipeline as PL  # noqa: E402
+from tsdb_parquet_spark.functions import text as TX  # noqa: E402
+
+
+def _doubled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id", "text")
+    return docs.union(docs.select(F.col("doc_id") + 500000, F.col("text")))
+
+
+def _near_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = (
+        _cat(spark, sf_dir)["documents"]
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 200)
+    )
+    mutated = docs.select(
+        (F.col("doc_id") + 100000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zz qq xx")).alias("text"),
+    )
+    return docs.union(mutated)
+
+
+_SQL_NEAR_DUP_DOCS = """
+docs AS (
+  SELECT doc_id, text FROM documents WHERE doc_id < 200
+  UNION ALL
+  SELECT doc_id + 100000 AS doc_id, text || ' zz qq xx' AS text
+  FROM documents WHERE doc_id < 200
+)"""
+
+_SQL_LSH_PIPELINE = f"""
+WITH {_SQL_NEAR_DUP_DOCS},
+sh AS (SELECT doc_id, {D.sql_shingles('text')} AS shingles FROM docs),
+mh AS (SELECT doc_id, {D.sql_minhash_from_shingles('shingles')} AS sig
+       FROM sh WHERE len(shingles) > 0),
+bands AS (
+  SELECT doc_id, j,
+         md5(array_to_string(sig[j*2+1:j*2+2], '')) AS bucket
+  FROM mh CROSS JOIN (SELECT unnest(range(0, 4)) AS j) _b
+),
+pairs AS (
+  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
+  FROM bands l JOIN bands r
+    ON l.j = r.j AND l.bucket = r.bucket AND l.doc_id < r.doc_id
+)"""
+
+
+@query(
+    "q22_exact_dedup",
+    f"""WITH docs AS (
+          SELECT doc_id, text FROM documents
+          UNION ALL
+          SELECT doc_id + 500000 AS doc_id, text FROM documents
+        )
+        SELECT {TX.sql_fingerprint('text')} AS fp,
+               min(doc_id) AS keep_id,
+               count(*) AS n_copies
+        FROM docs GROUP BY 1 ORDER BY keep_id""",
+)
+def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact dedup by normalized-text fingerprint over a corpus with every
+    document duplicated: one group per text, keep_id = original doc,
+    n_copies = 2."""
+    return D.exact_dedup_groups(_doubled_docs(spark, sf_dir)).orderBy("keep_id")
+
+
+@query(
+    "q23_minhash_lsh_pairs",
+    _SQL_LSH_PIPELINE + "\nSELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b",
+)
+def q23(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash(8)+LSH(4 bands x 2 rows) candidate pairs over a corpus with
+    token-appended near-duplicates: signature -> band buckets -> bucket
+    self-join (never O(n^2))."""
+    pairs = D.lsh_candidate_pairs(
+        _near_dup_docs(spark, sf_dir), num_hashes=8, bands=4, shingle_size=3,
+        eager=False,  # single-shot: skip the upfront checkpoint
+    )
+    return pairs.orderBy("doc_a", "doc_b")
+
+
+@query(
+    "q24_simhash",
+    D.sql_simhash("(SELECT doc_id, text FROM documents WHERE doc_id < 100) _d")
+    + "\nORDER BY doc_id",
+)
+def q24(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """16-bit SimHash per document (token bit votes via md5 nibbles) — the
+    near-dup sketch whose Hamming distance approximates cosine distance."""
+    docs = (
+        _cat(spark, sf_dir)["documents"]
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 100)
+    )
+    return D.simhash(docs).orderBy("doc_id")
+
+
+@query(
+    "q62_simhash_near_dup",
+    D.sql_simhash_near_duplicates("documents", max_hamming=3)
+    + "\nORDER BY doc_a, doc_b",
+)
+def q62(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash Hamming-distance near-duplicates, banded 4x4 bits: any
+    pair within 3 differing bits shares a band by pigeonhole, so the
+    bucketed self-join generates a COMPLETE candidate set (never
+    all-pairs) and bit_count(xor) verifies exactly — pure integer ops
+    end to end."""
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id", "text")
+    out = D.simhash_near_duplicates(docs, max_hamming=3)
+    return out.orderBy("doc_a", "doc_b")
+
+
+_SQL_JACCARD = """
+SELECT p.doc_a, p.doc_b,
+       round(
+         CAST(len(list_filter(list_distinct({A}), x ->
+                  list_contains(list_distinct({B}), x))) AS DOUBLE)
+         / (len(list_distinct({A})) + len(list_distinct({B}))
+            - len(list_filter(list_distinct({A}), x ->
+                  list_contains(list_distinct({B}), x)))), 4) AS jaccard
+FROM pairs p
+JOIN sh a ON a.doc_id = p.doc_a
+JOIN sh b ON b.doc_id = p.doc_b
+WHERE len(list_distinct({A})) + len(list_distinct({B})) > 0
+""".format(A="a.shingles", B="b.shingles")
+
+
+@query(
+    "q25_ngram_jaccard",
+    _SQL_LSH_PIPELINE
+    + f""",
+scored AS ({_SQL_JACCARD})
+SELECT doc_a, doc_b, jaccard FROM scored
+WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b""",
+)
+def q25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact 3-gram Jaccard verification of the LSH candidates (the refine
+    step): two id-keyed joins back to the texts, no quadratic stage."""
+    docs = _near_dup_docs(spark, sf_dir)
+    pairs = D.lsh_candidate_pairs(docs, num_hashes=8, bands=4, shingle_size=3,
+                                  eager=False)
+    return D.verify_pairs_jaccard(docs, pairs, threshold=0.5).orderBy(
+        "doc_a", "doc_b"
+    )
+
+
+@query(
+    "q47_dedup_clusters",
+    _SQL_LSH_PIPELINE.replace("\nWITH ", "\nWITH RECURSIVE ", 1)
+    + """,
+edges AS (
+  SELECT doc_a AS src, doc_b AS dst FROM pairs
+  UNION ALL
+  SELECT doc_b AS src, doc_a AS dst FROM pairs
+),
+walk(node, label) AS (
+  SELECT DISTINCT src AS node, src AS label FROM edges
+  UNION
+  SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node
+),
+cc AS (SELECT node, min(label) AS cluster_id FROM walk GROUP BY node)
+SELECT cluster_id,
+       count(*) AS n_members,
+       max(node) AS max_member
+FROM cc GROUP BY cluster_id ORDER BY cluster_id""",
+)
+def q47(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairs -> duplicate CLUSTERS: connected components (iterative
+    min-label propagation, `functions/clusters.py`) over the q23 LSH
+    candidate pairs, summarized per component.  The oracle resolves the
+    same components with a recursive CTE — viable at oracle scale only;
+    the Spark loop is the shape that survives 100 TB (per-round equi-join
+    + groupBy, rounds = component diameter)."""
+    from tsdb_parquet_spark.functions.clusters import connected_components
+
+    pairs = D.lsh_candidate_pairs(
+        _near_dup_docs(spark, sf_dir), num_hashes=8, bands=4, shingle_size=3
+    )
+    stats: dict = {}
+    cc = connected_components(pairs, src="doc_a", dst="doc_b", stats=stats)
+    # telemetry gate: LSH dup clusters are near-cliques (diameter <= ~3)
+    # on THIS corpus; chain-shaped candidate graphs (A~B~C~... with only
+    # adjacent band agreement) are legal LSH output though, so the bound
+    # leaves headroom above the clique case — it flags a propagation
+    # REGRESSION (e.g. losing the fused seed round), not data shape.
+    # RuntimeError so `python -O` cannot strip the check.
+    if stats["rounds"] > 6:
+        raise RuntimeError(
+            f"label propagation took {stats['rounds']} rounds "
+            "(> regression bound 6) on a near-clique dup graph"
+        )
+    return (
+        cc.groupBy("cluster_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_members"),
+            F.max("node").alias("max_member"),
+        )
+        .orderBy("cluster_id")
+    )
+
+
+_MIX_SEED = "mix1"
+_MIX_RATES = {"en": 0.25}  # downsample English; keep all low-resource langs
+_MIX_DEFAULT = 1.0
+
+
+def _mixture_oracle() -> str:
+    from tsdb_parquet_spark.functions.sampling import (
+        hex_threshold,
+        sample_draw_sql,
+    )
+
+    draw = sample_draw_sql("doc_id", _MIX_SEED)
+    case = (
+        "CASE lang WHEN 'en' THEN '" + hex_threshold(_MIX_RATES["en"])
+        + "' ELSE '" + hex_threshold(_MIX_DEFAULT) + "' END"
+    )
+    return f"""
+SELECT doc_id, lang FROM documents
+WHERE {draw} < {case}
+ORDER BY doc_id"""
+
+
+@query("q48_stratified_sample", _mixture_oracle())
+def q48(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mixture-governed deterministic sampling: per-language keep rates
+    (25% of English, 100% of everything else) as a pure md5-threshold
+    scan filter (`functions/sampling.py`) — the selected id set is a
+    function of (seed, doc_id) only, hence identical in Spark and the
+    DuckDB oracle, across runs, partitionings, and engines."""
+    from tsdb_parquet_spark.functions.sampling import stratified_sample
+
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id", "lang")
+    return stratified_sample(
+        docs, "lang", _MIX_RATES, key_col="doc_id", seed=_MIX_SEED,
+        default_fraction=_MIX_DEFAULT,
+    ).orderBy("doc_id")
+
+
+_WS_SEED = "wlen1"
+_WS_SCALE = 0.002  # n_chars 47..558 -> keep rates ~0.09 .. clamp at 1.0
+
+
+def _weighted_oracle() -> str:
+    from tsdb_parquet_spark.functions.sampling import weighted_sample_sql
+
+    pred = weighted_sample_sql("doc_id", "n_chars", _WS_SCALE, _WS_SEED)
+    return f"""
+SELECT doc_id, n_chars FROM documents
+WHERE {pred}
+ORDER BY doc_id"""
+
+
+@query("q63_weighted_sample", _weighted_oracle())
+def q63(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Length-proportional deterministic sampling: keep probability
+    min(1, n_chars * 0.002) per document, as a pure scan-fused
+    md5-vs-printf-hex compare (`functions/sampling.py:weighted_sample`)
+    — still zero shuffle, and the selected set is identical across
+    engines, runs, and partitionings."""
+    from tsdb_parquet_spark.functions.sampling import weighted_sample
+
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id", "n_chars")
+    return weighted_sample(
+        docs, key_col="doc_id", weight_col="n_chars",
+        scale=_WS_SCALE, seed=_WS_SEED,
+    ).orderBy("doc_id")
+
+
 @query(
     "q85_salted_distinct_count",
     """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT)
@@ -2158,6 +2437,25 @@ def q89(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("t", "event_type", "shard")
 
 
+# ---------------------------------------------------------------------------
+# q93 — exact-substring span stats
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "q93_exact_substring_spans",
+    D.sql_duplicated_ngram_spans("documents", size=5) + "ORDER BY doc_id",
+)
+def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-substring duplication stats (arXiv:2107.06499): per document,
+    the count and fraction of its 5-token windows that also occur in
+    another document — the repeated-span signal ExactSubstr dedup cuts.
+    One explode + one min/max groupBy on the window key (map-side
+    partial agg, no count-distinct), then a keyed join back."""
+    docs = _cat(spark, sf_dir)["documents"]
+    return D.duplicated_ngram_spans(docs, size=5).orderBy("doc_id")
+
+
 @query(
     "q100_tsdb_stats",
     """WITH s AS (
@@ -2187,6 +2485,104 @@ def q100(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = ChunkQuerier.from_parquet(spark, events_chunk_store(spark, sf_dir))
     return q.tsdb_stats().orderBy("stat")
+
+
+from tsdb_parquet_spark.functions import quality as QA  # noqa: E402
+
+
+@query(
+    "q99_lm_perplexity_score",
+    QA.sql_lm_score(
+        corpus_pred="doc_id % 10 <> 0", train_pred="doc_id % 10 = 0"
+    )
+    + " ORDER BY doc_id",
+)
+def q99(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LM-perplexity quality scoring (the CCNet recipe, arXiv:1911.00359):
+    an add-alpha smoothed word-bigram model trains on every tenth
+    document and scores the rest by mean log-likelihood — the canonical
+    quality/domain filter an LLM data pipeline runs before mixing.  The
+    model tables are vocabulary-bounded so both probability lookups are
+    BROADCAST joins and the corpus side never shuffles except the final
+    per-doc aggregation; V comes from an in-plan 1-row aggregate, no
+    driver collect.  4dp rounding absorbs the accumulation-order ulp
+    skew of the float mean."""
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id", "text")
+    train = docs.filter(F.col("doc_id") % 10 == 0)
+    rest = docs.filter(F.col("doc_id") % 10 != 0)
+    return QA.lm_score(rest, train).orderBy("doc_id")
+
+
+@query(
+    "q98_exact_substring_removal",
+    D.sql_remove_duplicated_spans("documents", size=5) + "ORDER BY doc_id",
+)
+def q98(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ExactSubstr span REMOVAL (arXiv:2107.06499): q93 finds the
+    repeated 5-token windows, this row actually cuts them — every token
+    covered by a window that also occurs in another document is dropped
+    and the text rebuilt, all inside one codegen filter over the token
+    array (no Python string surgery).  The oracle rebuilds identically
+    from raw window strings, so the hash pins the full
+    explode -> shared-window -> coverage -> reconstruction chain."""
+    docs = _cat(spark, sf_dir)["documents"]
+    return D.remove_duplicated_spans(docs, size=5).orderBy("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# q30-q31 — text analysis + scalar/JSON function surface
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "q30_text_analysis",
+    f"""SELECT doc_id,
+       len({TX.SQL_TOKENS.format(col='text')}) AS n_tokens,
+       {TX.sql_bpe_token_count('text')} AS n_bpe_tokens,
+       {TX.sql_language_id('text')} AS lang_pred,
+       {TX.sql_quality_score('text')} AS quality,
+       {TX.sql_fingerprint('text')} AS fp
+FROM documents ORDER BY doc_id""",
+)
+def q30(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The text-analysis suite in one pass: whitespace + BPE-ish token
+    counts, heuristic language ID, composite quality score, 64-bit
+    fingerprint — all pure Catalyst expressions (no Python in the scan).
+    Tokenization materializes once per row (two-projection shape; the
+    analyzers read the array instead of re-splitting per feature).
+    ``spread`` widens the single-row-group scan so the analyzers run on
+    every core instead of serializing onto the one scan task — a no-op
+    at 100 TB where the scan is already thousands of tasks wide."""
+    docs = spread(_cat(spark, sf_dir)["documents"])
+    t = F.col("text")
+    toks = F.col("__toks")
+    # three-projection shape: tokens once, then the four stopword-hit
+    # counts once (each an interpreted HOF the language CASE would
+    # otherwise re-run up to 6x per row), then the analyzers
+    hits = {lang: F.col(f"__hit_{lang}") for lang in TX.STOPWORDS}
+    return (
+        docs.select("doc_id", "text", TX.tokens(t).alias("__toks"))
+        .select(
+            "doc_id",
+            "text",
+            "__toks",
+            *[
+                TX.stopword_hits(t, lang, toks).alias(f"__hit_{lang}")
+                for lang in TX.STOPWORDS
+            ],
+        )
+        .select(
+            "doc_id",
+            TX.token_count(t, toks).alias("n_tokens"),
+            TX.bpe_token_count(t).alias("n_bpe_tokens"),
+            TX.language_id(t, toks, hits=hits).alias("lang_pred"),
+            TX.quality_score(t, toks, stop_hits=hits["en"]).alias(
+                "quality"
+            ),
+            TX.fingerprint(t, toks).alias("fp"),
+        )
+        .orderBy("doc_id")
+    )
 
 
 @query(
@@ -2303,6 +2699,99 @@ def q36(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg("value").over(frame), 4).alias("mov_avg"),
     )
     return out.filter(F.col("rn") <= 100).orderBy("event_type", "rn")
+
+
+@query(
+    "q38_training_chunks",
+    PL.sql_training_chunks(
+        "(SELECT doc_id, text FROM documents WHERE doc_id < 100) _d"
+    )
+    + "\nORDER BY doc_id, chunk_id",
+)
+def q38(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-token overlapping training chunks (40 tokens, stride 32):
+    tokenize once, JVM explode — zero shuffles, the fan-out runs inside
+    the scan stage."""
+    from tsdb_parquet_spark.functions.pipeline import training_chunks
+
+    docs = (
+        _cat(spark, sf_dir)["documents"]
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 100)
+    )
+    return training_chunks(docs).orderBy("doc_id", "chunk_id")
+
+
+@query(
+    "q58_pack_sequences",
+    PL.sql_pack_sequences("documents", budget_tokens=512, shards=16)
+    + "\nORDER BY doc_id",
+)
+def q58(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Concat-and-chunk sequence packing into 512-token training
+    sequences, 16-way shard-parallel (`functions/pipeline.py:
+    pack_sequences`): deterministic id-order streams per shard, one
+    shuffle, never a global single-task window."""
+    from tsdb_parquet_spark.functions.pipeline import pack_sequences
+
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id", "text")
+    out = pack_sequences(docs, budget_tokens=512, shards=16)
+    return out.orderBy("doc_id")
+
+
+@query(
+    "q39_cleaning_pipeline",
+    f"""
+WITH gated AS (
+  SELECT doc_id, text,
+         {TX.sql_quality_score('text')} AS q,
+         {TX.sql_language_id('text')} AS lang_pred,
+         {TX.sql_fingerprint('text')} AS fp,
+         len({TX.SQL_TOKENS.format(col='text')}) AS n_tokens
+  FROM documents
+  WHERE {TX.sql_quality_score('text')} >= 0.5
+    AND {TX.sql_language_id('text')} = 'en'
+),
+kept AS (
+  SELECT * FROM gated
+  WHERE doc_id IN (SELECT min(doc_id) FROM gated GROUP BY fp)
+)
+SELECT count(*) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+       floor(avg(q) * 10000.0 + 0.5) / 10000.0 AS avg_quality
+FROM kept""",
+)
+def q39(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The composed C4-style cleaning pipeline: quality gate -> language
+    gate -> exact dedup, then corpus statistics.  Catalyst fuses the gates
+    into the scan; the dedup groupBy is the only shuffle."""
+    from tsdb_parquet_spark.functions.pipeline import clean_corpus
+
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id", "text")
+    kept = clean_corpus(docs, min_quality=0.5, languages=("en",))
+    t = F.col("text")
+    toks = F.col("__toks")
+    stats = (
+        kept.select(
+            "doc_id",
+            t,
+            TX.tokens(t).alias("__toks"),
+        )
+        .select(
+            "*", TX.stopword_hits(t, "en", toks).alias("__hit_en")
+        )
+        .select(
+            TX.token_count(t, toks).alias("n_tokens"),
+            TX.quality_score(
+                t, toks, stop_hits=F.col("__hit_en")
+            ).alias("q"),
+        )
+    )
+    return stats.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("total_tokens"),
+        (F.floor(F.avg("q") * 10000.0 + 0.5) / 10000.0).alias("avg_quality"),
+    )
 
 
 @query(
@@ -2531,6 +3020,136 @@ def q68(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# Q69-Q72 — corpus-hygiene pipeline: decontamination, repetition filters,
+# PII redaction, deterministic training order
+# ---------------------------------------------------------------------------
+
+from tsdb_parquet_spark.functions import decontaminate as DC  # noqa: E402
+from tsdb_parquet_spark.functions import ordering as ORD  # noqa: E402
+from tsdb_parquet_spark.functions import pii as PII  # noqa: E402
+from tsdb_parquet_spark.functions import quality as QA  # noqa: E402
+
+
+@query(
+    "q69_decontaminate",
+    DC.sql_contamination_report(
+        corpus_pred="doc_id % 10 <> 0",
+        benchmark_pred="doc_id % 10 = 0",
+        ngram=4,
+    )
+    + " ORDER BY doc_id",
+)
+def q69(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benchmark decontamination: every tenth document plays the held-out
+    benchmark; report training docs sharing >= 1 distinct word 4-gram with
+    it.  The benchmark n-gram table is broadcast — the corpus side never
+    shuffles except the final per-doc aggregation."""
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id", "text")
+    bench = docs.filter(F.col("doc_id") % 10 == 0)
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    return DC.contamination_report(corpus, bench, ngram=4).orderBy("doc_id")
+
+
+@query(
+    "q70_repetition_stats",
+    QA.sql_repetition_stats(ngram=2) + " ORDER BY doc_id",
+)
+def q70(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style repetition signals (duplicate-2-gram fraction, top
+    2-gram share) per document — explode + two map-side-combining
+    aggregations, no Python in the plan.  A zero-shuffle sorted-array
+    variant exists for shuffle-IO-bound regimes
+    (`quality.repetition_stats(zero_shuffle=True)`, parity-tested)."""
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id", "text")
+    return QA.repetition_stats(docs, ngram=2).orderBy("doc_id")
+
+
+_PII_INJECT_SQL = """
+SELECT doc_id,
+       CASE WHEN doc_id % 7 = 0 THEN
+         text || ' contact user' || CAST(doc_id AS VARCHAR)
+              || '@mail.example.com or 415-555-'
+              || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+              || ' ssn 123-45-6789 ip 10.0.0.'
+              || CAST(doc_id % 255 AS VARCHAR)
+       ELSE text END AS text
+FROM documents
+"""
+
+
+def _pii_injected_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministically plant one email/phone/SSN/IP in every 7th doc —
+    the synthetic corpus is PII-free, so both engines build the same
+    fixture inline (same convention as `_near_dup_docs`)."""
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id", "text")
+    injected = F.concat(
+        F.col("text"),
+        F.lit(" contact user"),
+        F.col("doc_id").cast("string"),
+        F.lit("@mail.example.com or 415-555-"),
+        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
+        F.lit(" ssn 123-45-6789 ip 10.0.0."),
+        (F.col("doc_id") % 255).cast("string"),
+    )
+    return docs.select(
+        "doc_id",
+        F.when(F.col("doc_id") % 7 == 0, injected)
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+
+
+@query(
+    "q71_pii_redact",
+    f"""
+WITH aug AS ({_PII_INJECT_SQL})
+SELECT doc_id,
+       CAST({PII.sql_pii_counts('text')['email']} AS BIGINT) AS n_email,
+       CAST({PII.sql_pii_counts('text')['ssn']} AS BIGINT) AS n_ssn,
+       CAST({PII.sql_pii_counts('text')['phone']} AS BIGINT) AS n_phone,
+       CAST({PII.sql_pii_counts('text')['ipv4']} AS BIGINT) AS n_ipv4,
+       md5({PII.sql_redact_pii('text')}) AS redacted_md5
+FROM aug ORDER BY doc_id""",
+)
+def q71(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PII scrub: count matches per kind on the original text, then emit
+    the md5 of the fully redacted text — regex-only Catalyst expressions,
+    fused into the scan (RE2/Java common-subset patterns so the DuckDB
+    oracle redacts byte-identically).  ``spread`` runs the five regex
+    passes on every core instead of the one scan task."""
+    aug = spread(_pii_injected_docs(spark, sf_dir))
+    counts = PII.pii_counts(F.col("text"))
+    return aug.select(
+        "doc_id",
+        counts["email"].cast("long").alias("n_email"),
+        counts["ssn"].cast("long").alias("n_ssn"),
+        counts["phone"].cast("long").alias("n_phone"),
+        counts["ipv4"].cast("long").alias("n_ipv4"),
+        F.md5(PII.redact_pii(F.col("text"))).alias("redacted_md5"),
+    ).orderBy("doc_id")
+
+
+@query(
+    "q72_global_shuffle",
+    f"""
+SELECT CAST(row_number() OVER (
+         ORDER BY {ORD.sql_shuffle_draw('doc_id', 'r3')}) AS BIGINT) - 1
+         AS pos,
+       doc_id
+FROM documents ORDER BY pos""",
+)
+def q72(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic global shuffle: seeded md5 draw defines a
+    reproducible training permutation; dense positions assigned with the
+    partition-offset trick (`chunks.dense_series_ids`), NOT a single-task
+    global row_number window."""
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id")
+    return ORD.with_global_positions(docs, "doc_id", seed="r3").orderBy(
+        "pos"
+    )
+
+
 @query(
     "q73_promql_time_functions",
     f"""
@@ -2674,6 +3293,48 @@ def q75(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "t", "event_type", "shard", F.round("value", 4).alias("value")
     )
+
+
+_Q80_BOILER = "subscribe to our newsletter for updates"
+
+
+def _q80_oracle() -> str:
+    from tsdb_parquet_spark.functions import quality as _QA
+
+    synth = (
+        "WITH __synth AS (\n"
+        "  SELECT doc_id,\n"
+        f"         CASE WHEN doc_id % 3 = 0\n"
+        f"              THEN '{_Q80_BOILER}' || chr(10) || text\n"
+        "              ELSE text END AS text\n"
+        "  FROM documents)"
+    )
+    body = _QA.sql_remove_repeated_lines(table="__synth", min_docs=10)
+    return synth + body.replace("\nWITH ", ",\n", 1) + "\nORDER BY doc_id"
+
+
+@query("q80_remove_boilerplate_lines", _q80_oracle())
+def q80(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4/RefinedWeb-style line-level boilerplate removal: a synthetic
+    "subscribe" header injected into every third document appears in
+    far more than ``min_docs`` distinct docs and must be stripped, while
+    each document's own (unique) text line survives with order intact.
+    Plan: posexplode -> map-side-combining line count -> broadcast
+    anti-join -> per-document reassembly (see
+    `functions/quality.py:remove_repeated_lines`)."""
+    from tsdb_parquet_spark.functions.quality import remove_repeated_lines
+
+    docs = _cat(spark, sf_dir)["documents"].select("doc_id", "text")
+    synth = docs.select(
+        "doc_id",
+        F.when(
+            F.col("doc_id") % 3 == 0,
+            F.concat(F.lit(_Q80_BOILER + "\n"), F.col("text")),
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    return remove_repeated_lines(synth, min_docs=10).orderBy("doc_id")
 
 
 def _streamed_sessions_oracle() -> str:
@@ -6182,6 +6843,37 @@ def q127(spark: SparkSession, sf_dir: str) -> DataFrame:
         "metric STRING, event_type STRING, shard STRING, ts LONG, "
         "value DOUBLE",
     ).orderBy("metric", "event_type", "shard")
+
+
+def _q128_oracle() -> str:
+    from tsdb_parquet_spark.functions.packing import sql_pack_token_chunks
+
+    inner = sql_pack_token_chunks(256)
+    return f"""
+WITH spans AS ({inner})
+SELECT CAST(chunk_id AS BIGINT) AS chunk_id, doc_id,
+       CAST(doc_offset AS BIGINT) AS doc_offset,
+       CAST(chunk_offset AS BIGINT) AS chunk_offset,
+       CAST(span_len AS BIGINT) AS span_len
+FROM spans ORDER BY chunk_id, doc_id"""
+
+
+@query("q128_sequence_packing", _q128_oracle())
+def q128(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Concat-and-chunk sequence packing (`functions/packing.py`) — the
+    GPT-pretraining data layout: documents' tokens concatenated in
+    doc_id order and sliced into 256-token training sequences, emitted
+    as (chunk, doc, offsets, len) spans.  The global token offset is a
+    distributed prefix sum (content-deterministic quantile buckets ->
+    per-bucket totals -> literal base map -> per-bucket window), ONE
+    shuffle, no Python, no global sort; the DuckDB oracle is allowed
+    the single-process cumulative window the distributed plan avoids."""
+    from tsdb_parquet_spark.functions.packing import pack_token_chunks
+
+    docs = _cat(spark, sf_dir)["documents"]
+    return pack_token_chunks(docs, 256, num_buckets=16).orderBy(
+        "chunk_id", "doc_id"
+    )
 
 
 @query(

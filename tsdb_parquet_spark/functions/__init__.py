@@ -2,13 +2,11 @@ from tsdb_parquet_spark.functions import (
     clusters,
     decontaminate,
     dedup,
-    multimodal,
     ordering,
     pii,
     pipeline,
     quality,
     sampling,
-    similarity,
     text,
 )
 
@@ -16,12 +14,10 @@ __all__ = [
     "clusters",
     "decontaminate",
     "dedup",
-    "multimodal",
     "ordering",
     "pii",
     "pipeline",
     "quality",
     "sampling",
-    "similarity",
     "text",
 ]

@@ -1,8 +1,8 @@
 """Duplicate-cluster resolution: connected components over candidate pairs.
 
-LSH / embedding near-dup stages (`functions/dedup.py`,
-`functions/similarity.py`) emit PAIRS, but dedup policy acts on
-CLUSTERS — "keep one representative per group of mutual near-dups".
+The LSH near-dup stages (`functions/dedup.py`) emit PAIRS, but dedup
+policy acts on CLUSTERS — "keep one representative per group of mutual
+near-dups".
 Pairs→clusters is connected components, which neither the reference
 (no dedup surface at all) nor Spark SQL has built in.
 
