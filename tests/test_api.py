@@ -581,6 +581,59 @@ def test_rules_endpoint_config_and_state(engine):
             assert a["activeAt"].endswith("Z")
 
 
+def test_concurrent_queries_match_serial(engine):
+    """/api/v1/query_range, /api/v1/query and live /api/v1/rules run
+    side by side on one engine: 6 threads sending a mixed request set
+    get exactly the serial answers, with and without ``shared_scan``.
+    The set holds the CSE shape (a subtree referenced twice, pinned
+    once per call) and a subquery grid beside the same aggregation on
+    the outer grid."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from tsdb_parquet_spark.rules import AlertingRule, RuleGroup
+
+    groups = [RuleGroup(
+        "g",
+        (AlertingRule("Busy", "app_events > 2", for_ms=0),),
+        interval_ms=60_000,
+    )]
+    sel = "sum by (event_type) (count_over_time(app_events[2m]))"
+    grid = {"start": 1000, "end": 1240, "step": 60}
+    requests = [
+        ("/api/v1/query_range",
+         {"query": f"({sel} and on(event_type) {sel} > 1) or {sel}",
+          **grid}),
+        ("/api/v1/query_range",
+         {"query": "max_over_time(sum(app_events)[2m:1m])"
+                   " + sum(app_events)", **grid}),
+        ("/api/v1/query_range", {"query": "app_events * 2", **grid}),
+        ("/api/v1/query",
+         {"query": f"{sel} unless on(event_type) {sel} > 1",
+          "time": 1120}),
+        ("/api/v1/query", {"query": "sort_desc(app_events)", "time": 1120}),
+        ("/api/v1/rules", {"time": 1120}),
+    ]
+    with PromApiServer(engine, rule_groups=groups) as url:
+        serial = [api_get_json(url, *r) for r in requests]
+    for body in serial:
+        assert body["status"] == "success"
+        assert body["data"].get("result") or body["data"].get("groups")
+    for shared_scan in (False, True):
+        eng = PromQLEngine(engine.samples, shared_scan=shared_scan)
+        with PromApiServer(eng, rule_groups=groups) as url:
+            def client(k):
+                # each thread sends two requests from its own offset, so
+                # all six shapes are in flight at once
+                order = [(k + i) % len(requests) for i in range(2)]
+                return [(i, api_get_json(url, *requests[i])) for i in order]
+
+            with ThreadPoolExecutor(6) as pool:
+                answers = [a for got in pool.map(client, range(6)) for a in got]
+        assert len(answers) == 6 * 2
+        for i, body in answers:
+            assert body == serial[i], (shared_scan, requests[i])
+
+
 def test_admin_tsdb_api(spark, tmp_path):
     """/api/v1/admin/tsdb/*: delete_series runs the surgical store
     rewrite and the serving engine rebuilds so the deletion is

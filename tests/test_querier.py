@@ -197,44 +197,6 @@ def test_multi_store_schema_merge(spark):
     assert q.label_names() == ["__name__", "job", "region"]
 
 
-def test_late_materialization_matches_single_pass(spark, store):
-    """The two-pass keys-then-payload read must return exactly the
-    single-pass rows, including under a residual (non-pushable) regex
-    matcher, and push the surviving series ids into the payload scan."""
-    q = ChunkQuerier.from_parquet(spark, store)
-    matchers = [Matcher("job", "=~", "api-serve[r]")]  # residual rlike
-    base = q.select_chunks(mint=0, maxt=10**12, matchers=matchers)
-    late = q.select_chunks(
-        mint=0, maxt=10**12, matchers=matchers, late_materialize=True
-    )
-    key = [SERIES_ID, MIN_T]
-    assert sorted(map(tuple, base.select(*key).collect())) == sorted(
-        map(tuple, late.select(*key).collect())
-    )
-    plan = late._sc._jvm.PythonSQLUtils.explainString(
-        late._jdf.queryExecution(), "formatted"
-    )
-    pushed = plan.split("PushedFilters")[1].split("\n")[0]
-    assert f"In({SERIES_ID}" in pushed
-    assert "job" not in pushed  # matcher evaluated only in the keys pass
-
-    # samples read through the flag agrees too
-    a = q.select_samples(matchers=matchers, labels=["job"]).agg(
-        F.count("*"), F.sum("value")).collect()
-    b = q.select_samples(
-        matchers=matchers, labels=["job"], late_materialize=True
-    ).agg(F.count("*"), F.sum("value")).collect()
-    assert a == b
-
-
-def test_late_materialization_empty_keys(spark, store):
-    q = ChunkQuerier.from_parquet(spark, store)
-    out = q.select_chunks(
-        matchers=[Matcher("job", "=~", "nomatch[0-9]+")], late_materialize=True
-    )
-    assert out.count() == 0
-
-
 def test_chunk_bounds_match_samples(spark):
     samples = _fixture_samples(spark)
     chunks = samples_to_chunks(samples, LABELS, chunk_span_ms=MINUTE).collect()

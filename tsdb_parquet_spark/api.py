@@ -634,16 +634,11 @@ class PromApiServer:
         self._started_at = 0.0
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
-        #: PromQLEngine was written single-threaded: query_range mutates
-        #: shared per-evaluation state (release_cache drops the PREVIOUS
-        #: evaluation's CSE pins, then _memo/_subtree_refs rebuild), so
-        #: concurrent /api/v1/query* requests under ThreadingHTTPServer
-        #: must single-flight through this lock — held through result
-        #: materialization, because the NEXT evaluation's release_cache
-        #: would unpersist pins a still-collecting result depends on.
-        #: Metadata endpoints (series/labels/values/federate) stay
-        #: concurrent: they only read the samples frame.
-        self._engine_lock = threading.Lock()
+        #: serializes delete_series' store rewrite and engine swap.
+        #: Query handlers never take it: each reads ``self.engine``
+        #: once, and the old engine's snapshot stays readable until
+        #: ``vacuum_snapshots``.
+        self._admin_lock = threading.Lock()
 
     # -- request handling (pure: params dict -> (http status, body)) --
 
@@ -671,14 +666,8 @@ class PromApiServer:
                     "result": [_ts_json(t), format_sample_value(node)],
                 }
                 return data
-            with self._engine_lock:
-                df = eng.query_range(
-                    expr, t, t, 1, lookback_ms=self.lookback_ms
-                )
-                return {
-                    "resultType": "vector",
-                    "result": vector_result(df, node),
-                }
+            df = eng.query_range(expr, t, t, 1, lookback_ms=self.lookback_ms)
+            return {"resultType": "vector", "result": vector_result(df, node)}
         if path == "/api/v1/query_range":
             expr = p("query")
             missing = [
@@ -691,11 +680,10 @@ class PromApiServer:
             step = _parse_step_ms(p("step"))
             if end < start:
                 raise ValueError("end < start")
-            with self._engine_lock:
-                df = eng.query_range(
-                    expr, start, end, step, lookback_ms=self.lookback_ms
-                )
-                return {"resultType": "matrix", "result": matrix_result(df)}
+            df = eng.query_range(
+                expr, start, end, step, lookback_ms=self.lookback_ms
+            )
+            return {"resultType": "matrix", "result": matrix_result(df)}
         if path == "/api/v1/query_exemplars":
             if self.exemplar_store is None:
                 return None  # endpoint absent without a store, like 2.x
@@ -734,16 +722,13 @@ class PromApiServer:
                     eng, self.rule_groups, type_filter=p("type")
                 )
             # live state evaluation runs query_range per alerting rule
-            # — single-flight like /query*, the engine's per-evaluation
-            # memo/CSE state is not thread-safe
-            with self._engine_lock:
-                return rules_result(
-                    eng,
-                    self.rule_groups,
-                    time_ms=_parse_time_ms(raw_t),
-                    lookback_ms=self.lookback_ms,
-                    type_filter=p("type"),
-                )
+            return rules_result(
+                eng,
+                self.rule_groups,
+                time_ms=_parse_time_ms(raw_t),
+                lookback_ms=self.lookback_ms,
+                type_filter=p("type"),
+            )
         if path == "/api/v1/status/buildinfo":
             # the probe Grafana's Prometheus datasource health check
             # issues; shaped like a Prometheus response with the engine
@@ -898,7 +883,7 @@ class PromApiServer:
         )
         spark = self.engine.samples.sparkSession
         deleted = 0
-        with self._engine_lock:
+        with self._admin_lock:
             for matchers in matcher_sets:
                 rep = delete_samples(
                     spark,
@@ -917,10 +902,8 @@ class PromApiServer:
                     self.samples_factory(),
                     metric_label=old.metric_label,
                     extrapolate=old.extrapolate,
-                    shared_scan=getattr(old, "_shared_scan", False),
-                    samples_transform=getattr(
-                        old, "samples_transform", None
-                    ),
+                    shared_scan=old._shared_scan,
+                    samples_transform=old.samples_transform,
                 )
         # 204 bodies must be empty: the count rides a header
         return 204, b"", err_ctype, {"X-Deleted-Samples": str(deleted)}

@@ -1531,57 +1531,6 @@ def q46(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "session_id")
 
 
-@query(
-    "q44_late_materialization",
-    _CHUNK_ORACLE_CTE
-    + f"""
-SELECT s.event_type,
-       count(*) AS n_samples,
-       round(sum(s.value), 2) AS sum_value,
-       min(s.ts_ms) AS min_ts,
-       max(s.ts_ms) AS max_ts
-FROM s
-JOIN ch ON s.event_type = ch.event_type AND s.shard = ch.shard
-       AND s.ts_ms // {_DAY_MS} = ch.bucket
-WHERE ch.mint >= {_QMINT} AND ch.maxt <= {_QMAXT}
-  AND s.event_type IN ('click', 'view')
-GROUP BY s.event_type
-ORDER BY s.event_type""",
-)
-def q44(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q17's sample round-trip through the TWO-PASS late-materialization
-    path (`select_samples(late_materialize=True)`): a keys-only pass
-    evaluates the residual regex matcher over just the label columns,
-    then the surviving series-id set re-enters the payload scan as pushed
-    range + In predicates, zone-map-pruning the fat `__ts`/`__values` row
-    groups of non-matching series (reference analog: filter-first page
-    reads, `compute/projection.go:93-95`, `dataset/pages.go:30-64`).
-    Hash-matching q17-shaped output proves the flagged path is exact."""
-    from tsdb_parquet_spark.operators.selection import Matcher
-    from tsdb_parquet_spark.querier import ChunkQuerier
-
-    q = ChunkQuerier.from_parquet(spark, events_chunk_store(spark, sf_dir))
-    samples = q.select_samples(
-        mint=_QMINT,
-        maxt=_QMAXT,
-        # bracketed alternation stays a residual rlike — the shape late
-        # materialization exists for
-        matchers=[Matcher("event_type", "=~", "clic[k]|vie[w]")],
-        labels=["event_type"],
-        late_materialize=True,
-    )
-    return (
-        samples.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_samples"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-            F.min("ts").alias("min_ts"),
-            F.max("ts").alias("max_ts"),
-        )
-        .orderBy("event_type")
-    )
-
-
 _P_WEEK = 7 * _DAY_MS
 
 

@@ -84,7 +84,7 @@ import math
 
 import numpy as np
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -574,43 +574,35 @@ class PromLimit:
 PromNode = "PromExpr | PromBinary | PromTopK | float"
 
 
-def _count_subtrees(node, counts: dict[str, int] | None = None) -> dict[str, int]:
-    """Occurrence count of every structural subtree (by dataclass repr),
-    used by the evaluator to decide which common subexpressions to pin.
-    Scalar (float) operands are skipped — they never reach ``_eval``."""
-    if counts is None:
-        counts = {}
+def _selector_core(expr: "PromExpr") -> "PromExpr":
+    """A selector with its fused outer aggregation stripped: ``sum by
+    (a) (f(m[w]))`` and ``sum by (a, b) (f(m[w]))`` share this core, so
+    the evaluator computes the per-series frame once and aggregates it
+    twice."""
+    return replace(expr, agg=None, by=None, without=None)
+
+
+def _cse_refs(node, refs: dict[str, int] | None = None) -> dict[str, int]:
+    """How often a query references each subtree (by dataclass repr) —
+    the evaluator pins a subtree referenced twice or more.  An
+    aggregated selector also references its :func:`_selector_core`,
+    except under ``@``, whose core evaluates on its own one-step grid.
+    Scalar (float) operands are skipped — they are never evaluated."""
+    if refs is None:
+        refs = {}
     if not hasattr(node, "__dataclass_fields__"):
-        return counts
-    counts[repr(node)] = counts.get(repr(node), 0) + 1
+        return refs
+    keys = [repr(node)]
+    if isinstance(node, PromExpr) and node.agg and node.at_ms is None:
+        keys.append(repr(_selector_core(node)))
+    for key in keys:
+        refs[key] = refs.get(key, 0) + 1
     for name in node.__dataclass_fields__:
         value = getattr(node, name)
         for child in value if isinstance(value, (list, tuple)) else (value,):
             if hasattr(child, "__dataclass_fields__"):
-                _count_subtrees(child, counts)
-    return counts
-
-
-def _count_selector_cores(node, counts: dict[str, int] | None = None) -> dict[str, int]:
-    """Occurrence count of selector CORES — a ``PromExpr`` with its fused
-    outer aggregation stripped.  ``sum by (a) (f(m[w]))`` and ``sum by
-    (a, b) (f(m[w]))`` share one core, so the evaluator can compute the
-    per-series frame once and aggregate it twice."""
-    from dataclasses import replace
-
-    if counts is None:
-        counts = {}
-    if not hasattr(node, "__dataclass_fields__"):
-        return counts
-    if isinstance(node, PromExpr):
-        core = repr(replace(node, agg=None, by=None, without=None))
-        counts[core] = counts.get(core, 0) + 1
-    for name in node.__dataclass_fields__:
-        value = getattr(node, name)
-        for child in value if isinstance(value, (list, tuple)) else (value,):
-            if hasattr(child, "__dataclass_fields__"):
-                _count_selector_cores(child, counts)
-    return counts
+                _cse_refs(child, refs)
+    return refs
 
 
 class _Parser:
@@ -1450,12 +1442,78 @@ def _grouping(
     return [c for c in by or [] if c in labels]
 
 
+class _Evaluation:
+    """The state of ONE ``query_range`` call: the subtree memo, the
+    reference counts and the pinned frames.  The call builds it and
+    drops it, so concurrent queries on one engine share nothing but the
+    engine's ``shared_scan`` pin; the engine's evaluator methods receive
+    it as ``ev`` and evaluate their operands through :meth:`eval`."""
+
+    def __init__(self, engine: "PromQLEngine", node):
+        self.engine = engine
+        self.refs = _cse_refs(node)
+        self.memo: dict[tuple, DataFrame] = {}
+        self.pinned: list[DataFrame] = []
+
+    def eval(
+        self, node, start_ms: int, end_ms: int, step_ms: int, lookback_ms: int
+    ) -> DataFrame:
+        """Memoizing dispatcher: structurally identical subtrees evaluated
+        on the same grid reuse one DataFrame, and subtrees the query
+        references more than once are pinned (:meth:`_pin`) so Spark
+        executes them once instead of once per reference (e.g. ``a and
+        b or a`` pays one decode/scan for ``a``, not two).  ``repr`` of
+        the dataclass AST is the structural key."""
+        fp = repr(node)
+        key = (fp, start_ms, end_ms, step_ms, lookback_ms)
+        if key not in self.memo:
+            out = self.engine._eval_inner(
+                self, node, start_ms, end_ms, step_ms, lookback_ms
+            )
+            if self.refs.get(fp, 0) >= 2 and not isinstance(
+                node, (PromTime, PromVector)
+            ):
+                out = self._pin(out)
+            self.memo[key] = out
+        return self.memo[key]
+
+    def _pin(self, df: DataFrame) -> DataFrame:
+        """Mark a shared subtree compute-once for this evaluation — lazy:
+        materialized by the first action, reused after, so single-shot
+        subtrees never pay it.
+
+        ``localCheckpoint(eager=False)`` deliberately, not ``persist``:
+        both give every reference in the final plan one materialization,
+        but the InMemoryRelation cache pays a large one-time codegen cost
+        for its columnar writer (measured ~12 s on first use per session,
+        independent of data size) and plans over it lose AQE statistics,
+        while the checkpoint is a plain block-backed RDD.  Trade-off
+        accepted with eyes open: checkpoint blocks are NOT fault-tolerant
+        (an executor loss during one evaluation fails the query instead
+        of recomputing — acceptable for an interactive query engine:
+        the loss window is one evaluation, and the caller retries), and
+        release is by reference-drop: once this evaluation and the
+        caller's result are gone, Spark's ContextCleaner frees the
+        blocks.  The ENGINE-LIFETIME shared-scan pin has the stronger
+        story: it is health-checked at each ``query_range`` and rebuilt
+        from source when blocks were lost
+        (:meth:`PromQLEngine._shared_scan_alive`)."""
+        df = df.localCheckpoint(eager=False)
+        self.pinned.append(df)
+        return df
+
+
 class PromQLEngine:
     """Evaluates the PromQL subset over a samples DataFrame.
 
     ``samples``: columns ``ts`` (int64 Unix ms), ``value`` (double) and one
     string column per label; the metric name lives in ``__name__``
     (reference label convention, `db/writer.go:16-17`).
+
+    Each ``query_range`` keeps its evaluation state in its own
+    :class:`_Evaluation`; the engine holds no field a query writes except
+    the lazily built ``shared_scan`` pin, so one engine serves concurrent
+    queries without a lock.
     """
 
     def __init__(
@@ -1533,9 +1591,9 @@ class PromQLEngine:
 
     def _samples_frame(self) -> DataFrame:
         """Selector input: the raw samples plan, or the engine-lifetime
-        checkpoint when ``shared_scan`` is on.  Deliberately NOT dropped
-        by :meth:`release_cache` — that method scopes per-evaluation CSE
-        pins; this pin is the cross-evaluation working set.  The pin is
+        checkpoint when ``shared_scan`` is on.  Unlike the CSE pins of
+        one evaluation (:class:`_Evaluation`), this pin is the
+        cross-evaluation working set, held by the engine.  The pin is
         PRE-transform: a ``samples_transform`` runs above the
         checkpointed blocks per query, so e.g. the replica vote
         aggregates in-memory data bounded to the query's buckets."""
@@ -1664,51 +1722,9 @@ class PromQLEngine:
             # working set from source instead of failing this query
             self._scan_pin = None
         node = self._route(node, start_ms, end_ms, step_ms, lookback_ms)
-        # fresh common-subexpression state per top-level evaluation; the
-        # engine's references to the PREVIOUS call's pins are dropped here
-        # so their blocks free as soon as the caller's result refs die
-        self.release_cache()
-        self._memo: dict[tuple, DataFrame] = {}
-        self._subtree_refs = _count_subtrees(node)
-        self._core_refs = _count_selector_cores(node)
-        self._inner_evals: dict[str, int] = {}
-        return self._eval(node, start_ms, end_ms, step_ms, lookback_ms)
-
-    def release_cache(self) -> None:
-        """Drop the engine's references to the shared-subtree frames
-        pinned by the last ``query_range``.  Called automatically at the
-        start of each evaluation, so a long-lived engine holds at most
-        one call's pins: once the caller's own result reference dies, the
-        checkpointed RDDs become GC-eligible and Spark's ContextCleaner
-        frees their executor blocks.  (Callers that keep an engine alive
-        across many ``query_range`` calls AND hold every result can
-        still accumulate — that is their reference graph, not the
-        engine's.)"""
-        self._pinned: list[DataFrame] = []
-
-    def _pin(self, df: DataFrame) -> DataFrame:
-        """Mark a shared subtree compute-once for this evaluation.
-
-        ``localCheckpoint(eager=False)`` deliberately, not ``persist``:
-        both give every reference in the final plan one materialization,
-        but the InMemoryRelation cache pays a large one-time codegen cost
-        for its columnar writer (measured ~12 s on first use per session,
-        independent of data size) and plans over it lose AQE statistics,
-        while the checkpoint is a plain block-backed RDD.  Trade-off
-        accepted with eyes open: checkpoint blocks are NOT fault-tolerant
-        (an executor loss during one evaluation fails the query instead
-        of recomputing — acceptable for an interactive query engine:
-        the loss window is one evaluation, and the caller retries), and
-        release is by reference-drop (:meth:`release_cache`) + the
-        ContextCleaner rather than an explicit unpersist.  The ENGINE-
-        LIFETIME shared-scan pin has the stronger story: it is health-
-        checked at each ``query_range`` and rebuilt from source when
-        blocks were lost (:meth:`_shared_scan_alive`)."""
-        df = df.localCheckpoint(eager=False)
-        if not hasattr(self, "_pinned"):
-            self._pinned = []
-        self._pinned.append(df)
-        return df
+        return _Evaluation(self, node).eval(
+            node, start_ms, end_ms, step_ms, lookback_ms
+        )
 
     def _route(self, node, start_ms, end_ms, step_ms, lookback_ms):
         """AST hook between parse and eval; the rollup-routed engine
@@ -1716,82 +1732,59 @@ class PromQLEngine:
         selectors from a downsampled store."""
         return node
 
-    def _eval(
-        self, node, start_ms: int, end_ms: int, step_ms: int, lookback_ms: int
-    ) -> DataFrame:
-        """Memoizing dispatcher: structurally identical subtrees evaluated
-        on the same grid reuse one DataFrame, and subtrees the query
-        references more than once are lazily ``localCheckpoint``-ed so
-        Spark executes them once instead of once per reference (e.g.
-        ``a and b or a`` pays one decode/scan for ``a``, not two).  The
-        memo lives for one ``query_range`` call; ``repr`` of the frozen
-        dataclass AST is the structural key."""
-        fp = repr(node)
-        key = (fp, start_ms, end_ms, step_ms, lookback_ms)
-        memo = getattr(self, "_memo", None)
-        if memo is not None and key in memo:
-            return memo[key]
-        out = self._eval_inner(node, start_ms, end_ms, step_ms, lookback_ms)
-        if memo is not None:
-            stats = self._inner_evals
-            stats[fp] = stats.get(fp, 0) + 1
-            if self._subtree_refs.get(fp, 0) >= 2 and not isinstance(
-                node, (PromTime, PromVector)
-            ):
-                # lazy: materialized by the first action, reused after —
-                # single-shot subtrees never pay the persist
-                out = self._pin(out)
-            memo[key] = out
-        return out
-
     def _eval_inner(
-        self, node, start_ms: int, end_ms: int, step_ms: int, lookback_ms: int
+        self, ev, node, start_ms: int, end_ms: int, step_ms: int,
+        lookback_ms: int,
     ) -> DataFrame:
         if isinstance(node, PromBinary):
-            return self._eval_binary(node, start_ms, end_ms, step_ms, lookback_ms)
+            return self._eval_binary(
+                ev, node, start_ms, end_ms, step_ms, lookback_ms
+            )
         if isinstance(node, PromTopK):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             return self._topk(
                 inner, node.k, node.ascending, node.by, node.without
             )
         if isinstance(node, PromLimit):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             return self._limit_series(inner, node)
         if isinstance(node, PromMathFunc):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             return inner.withColumn(
                 "value", self._math_column(node.func, node.params)
             )
         if isinstance(node, PromLabelReplace):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             return self._label_replace(inner, node)
         if isinstance(node, PromHistogramQuantile):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             return self._histogram_quantile(inner, node.q)
         if isinstance(node, PromHistogramFraction):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             return self._histogram_fraction(inner, node.lower, node.upper)
         if isinstance(node, PromHistogramStd):
             return self._histogram_std(
-                node, start_ms, end_ms, step_ms, lookback_ms
+                ev, node, start_ms, end_ms, step_ms, lookback_ms
             )
         if isinstance(node, PromCountValues):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             return self._count_values(inner, node)
         if isinstance(node, PromSetOp):
-            return self._eval_setop(node, start_ms, end_ms, step_ms, lookback_ms)
+            return self._eval_setop(
+                ev, node, start_ms, end_ms, step_ms, lookback_ms
+            )
         if isinstance(node, PromSort):
             # ordering is applied by the renderer (sort_vector); nested
             # sorts are presentation no-ops
-            return self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            return ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
         if isinstance(node, PromAbsent):
             return self._absent_instant(
-                node, start_ms, end_ms, step_ms, lookback_ms
+                ev, node, start_ms, end_ms, step_ms, lookback_ms
             )
         if isinstance(node, PromInfo):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             return self._info(
-                inner, node, start_ms, end_ms, step_ms, lookback_ms
+                ev, inner, node, start_ms, end_ms, step_ms, lookback_ms
             )
         if isinstance(node, PromTime):
             return self._steps_frame(start_ms, end_ms, step_ms).select(
@@ -1802,7 +1795,7 @@ class PromQLEngine:
                 "t", F.lit(node.value).cast("double").alias("value")
             )
         if isinstance(node, PromScalarFn):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             # one tiny shuffle keyed on t; NaN where the step has >1 series
             return (
                 inner.groupBy("t")
@@ -1818,10 +1811,10 @@ class PromQLEngine:
                 )
             )
         if isinstance(node, PromTimeFunc):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             return inner.withColumn("value", self._time_column(node.func))
         if isinstance(node, PromLabelJoin):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             parts = [
                 F.col(s) if s in inner.columns else F.lit("")
                 for s in node.srcs
@@ -1831,21 +1824,27 @@ class PromQLEngine:
             )
         if isinstance(node, PromSubquery):
             return self._eval_subquery(
-                node, start_ms, end_ms, step_ms, lookback_ms
+                ev, node, start_ms, end_ms, step_ms, lookback_ms
             )
         if isinstance(node, PromAgg):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             by = _grouping(inner.columns, node.by, node.without)
             return inner.groupBy("t", *by).agg(
                 _OUTER_AGGS[node.op](F.col("value")).alias("value")
             )
         if isinstance(node, PromQuantileAgg):
-            inner = self._eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
+            inner = ev.eval(node.inner, start_ms, end_ms, step_ms, lookback_ms)
             by = _grouping(inner.columns, node.by, node.without)
             return inner.groupBy("t", *by).agg(
                 F.percentile("value", F.lit(node.phi)).alias("value")
             )
-        return self._eval_expr(node, start_ms, end_ms, step_ms, lookback_ms)
+        if node.agg is None and node.at_ms is None:
+            return self._selector_series(
+                node, start_ms, end_ms, step_ms, lookback_ms
+            )
+        return self._eval_expr(
+            ev, node, start_ms, end_ms, step_ms, lookback_ms
+        )
 
     def _steps_frame(self, start_ms, end_ms, step_ms) -> DataFrame:
         """The step axis as a one-column frame — O(steps) rows, built on
@@ -1881,7 +1880,7 @@ class PromQLEngine:
         return out.cast("double")
 
     def _eval_subquery(
-        self, node: PromSubquery, start_ms, end_ms, step_ms, lookback_ms
+        self, ev, node: PromSubquery, start_ms, end_ms, step_ms, lookback_ms
     ) -> DataFrame:
         """Evaluate the inner expression on an absolute-epoch-aligned
         sub-step grid covering (start - range, end], then treat its output
@@ -1893,7 +1892,7 @@ class PromQLEngine:
         sub = node.step_ms
         sub_start = ((start_ms - node.range_ms) // sub + 1) * sub
         sub_end = (end_ms // sub) * sub
-        inner = self._eval(node.inner, sub_start, sub_end, sub, lookback_ms)
+        inner = ev.eval(node.inner, sub_start, sub_end, sub, lookback_ms)
         samples = inner.withColumnRenamed("t", "ts")
         series_cols = [c for c in samples.columns if c not in ("ts", "value")]
         expr = PromExpr(
@@ -1910,7 +1909,7 @@ class PromQLEngine:
         return self._range_value(expr, bucketed, series_cols)
 
     def _eval_setop(
-        self, node: PromSetOp, start_ms, end_ms, step_ms, lookback_ms
+        self, ev, node: PromSetOp, start_ms, end_ms, step_ms, lookback_ms
     ) -> DataFrame:
         """Set operators as semi/anti equi-joins on (t, match labels) —
         one shuffle each, no fan-out.  Default matching is the FULL label
@@ -1921,8 +1920,8 @@ class PromQLEngine:
         carries come back ""-filled, keeping the output schema stable."""
         if isinstance(node.left, float) or isinstance(node.right, float):
             raise ValueError("set operators need vector operands")
-        left = self._eval(node.left, start_ms, end_ms, step_ms, lookback_ms)
-        right = self._eval(node.right, start_ms, end_ms, step_ms, lookback_ms)
+        left = ev.eval(node.left, start_ms, end_ms, step_ms, lookback_ms)
+        right = ev.eval(node.right, start_ms, end_ms, step_ms, lookback_ms)
         l_labels = [c for c in left.columns if c not in ("t", "value")]
         r_labels = [c for c in right.columns if c not in ("t", "value")]
         if node.matching_mode == "on":
@@ -2070,7 +2069,8 @@ class PromQLEngine:
         return found.select("t", *grp, value.alias("value"))
 
     def _histogram_std(
-        self, node: PromHistogramStd, start_ms, end_ms, step_ms, lookback_ms
+        self, ev, node: PromHistogramStd,
+        start_ms, end_ms, step_ms, lookback_ms,
     ) -> DataFrame:
         """Bucket-wise population variance (see :class:`PromHistogramStd`):
         the selector's ``_bucket`` / ``_sum`` / ``_count`` series
@@ -2084,17 +2084,17 @@ class PromQLEngine:
         from pyspark.sql import Window
 
         base = node.inner
-        ev = lambda m: self._eval(  # noqa: E731
+        series = lambda m: ev.eval(  # noqa: E731
             dataclasses.replace(base, metric=base.metric + m),
             start_ms, end_ms, step_ms, lookback_ms,
         )
-        buckets = ev("_bucket")
+        buckets = series("_bucket")
         if "le" not in buckets.columns:
             raise ValueError("histogram_stddev needs an `le` label")
         grp = [c for c in buckets.columns if c not in ("t", "value", "le")]
         mean = (
-            ev("_sum").withColumnRenamed("value", "__sum").join(
-                ev("_count").withColumnRenamed("value", "__count"),
+            series("_sum").withColumnRenamed("value", "__sum").join(
+                series("_count").withColumnRenamed("value", "__count"),
                 on=["t", *grp],
             )
             .withColumn("__mean", F.col("__sum") / F.col("__count"))
@@ -2226,7 +2226,7 @@ class PromQLEngine:
         return df.select(*others, new_dst.alias(node.dst), "value")
 
     def _eval_binary(
-        self, node: PromBinary, start_ms, end_ms, step_ms, lookback_ms
+        self, ev, node: PromBinary, start_ms, end_ms, step_ms, lookback_ms
     ) -> DataFrame:
         ops = {
             "+": lambda a, b: a + b,
@@ -2250,7 +2250,7 @@ class PromQLEngine:
         is_cmp = node.op in cmps
         if _is_dynamic_scalar(node.left) or _is_dynamic_scalar(node.right):
             return self._eval_binary_scalar_fn(
-                node, start_ms, end_ms, step_ms, lookback_ms, ops, cmps
+                ev, node, start_ms, end_ms, step_ms, lookback_ms, ops, cmps
             )
         left_scalar = isinstance(node.left, float)
         right_scalar = isinstance(node.right, float)
@@ -2261,7 +2261,7 @@ class PromQLEngine:
             # Comparisons FILTER the vector (keeping its value) unless
             # `bool`, which keeps every series and emits 1/0.
             vec = node.left if right_scalar else node.right
-            df = self._eval(vec, start_ms, end_ms, step_ms, lookback_ms)
+            df = ev.eval(vec, start_ms, end_ms, step_ms, lookback_ms)
             lhs = F.col("value") if right_scalar else F.lit(node.left)
             rhs = F.lit(node.right) if right_scalar else F.col("value")
             if not is_cmp:
@@ -2272,8 +2272,8 @@ class PromQLEngine:
                     "value", F.when(cond, F.lit(1.0)).otherwise(F.lit(0.0))
                 )
             return df.filter(cond)
-        left = self._eval(node.left, start_ms, end_ms, step_ms, lookback_ms)
-        right = self._eval(node.right, start_ms, end_ms, step_ms, lookback_ms)
+        left = ev.eval(node.left, start_ms, end_ms, step_ms, lookback_ms)
+        right = ev.eval(node.right, start_ms, end_ms, step_ms, lookback_ms)
         shared = [c for c in left.columns if c in right.columns and c != "value"]
         if node.matching_mode == "on":
             keys = ["t"] + [l for l in node.matching if l != "t"]
@@ -2344,7 +2344,7 @@ class PromQLEngine:
         )
 
     def _eval_binary_scalar_fn(
-        self, node, start_ms, end_ms, step_ms, lookback_ms, ops, cmps
+        self, ev, node, start_ms, end_ms, step_ms, lookback_ms, ops, cmps
     ) -> DataFrame:
         """Binary ops with a ``scalar(v)`` operand: the scalar varies per
         STEP, so it joins the other side on t — broadcast (one row per
@@ -2360,7 +2360,7 @@ class PromQLEngine:
         right_sfn = _is_dynamic_scalar(node.right)
 
         def sframe(n):
-            return self._eval(n, start_ms, end_ms, step_ms, lookback_ms)
+            return ev.eval(n, start_ms, end_ms, step_ms, lookback_ms)
 
         if left_sfn and right_sfn:
             l = sframe(node.left).select("t", F.col("value").alias("__lv"))
@@ -2492,26 +2492,31 @@ class PromQLEngine:
 
     def _eval_expr(
         self,
+        ev,
         expr: PromExpr,
         start_ms: int,
         end_ms: int,
         step_ms: int,
         lookback_ms: int,
     ) -> DataFrame:
+        """A selector with ``@`` or a fused outer aggregation (a bare
+        selector is :meth:`_selector_series`).  The aggregation groups
+        the selector core, which evaluates through ``ev``: ``sum by (a)``
+        and ``sum by (a, b)`` over the same range function share ONE
+        decode-scan-window pipeline."""
         if expr.at_ms is not None:
             # `@` modifier: evaluate ONCE at the pinned timestamp, then
             # broadcast the constant vector across the step axis (explode
             # over the step sequence — no join, no recompute per step).
             # The start()/end() forms resolve against THIS query's range.
-            from dataclasses import replace as _dc_replace
-
             at = expr.at_ms
             if at == "start":
                 at = start_ms
             elif at == "end":
                 at = end_ms
             pinned = self._eval_expr(
-                _dc_replace(expr, at_ms=None),
+                ev,
+                replace(expr, at_ms=None),
                 at,
                 at,
                 step_ms,
@@ -2525,8 +2530,8 @@ class PromQLEngine:
             cols = [c for c in pinned.columns if c != "t"]
             return pinned.drop("t").select(steps, *cols)
 
-        per_series = self._selector_series(
-            expr, start_ms, end_ms, step_ms, lookback_ms
+        per_series = ev.eval(
+            _selector_core(expr), start_ms, end_ms, step_ms, lookback_ms
         )
         if expr.agg is None:
             return per_series
@@ -2538,30 +2543,8 @@ class PromQLEngine:
     def _selector_series(
         self, expr: PromExpr, start_ms, end_ms, step_ms, lookback_ms
     ) -> DataFrame:
-        """Per-series frame of a selector core (fused outer aggregation
-        stripped): ``sum by (a)`` and ``sum by (a, b)`` over the same
-        range function share ONE decode-scan-window pipeline, memoized
-        like any other subtree for the duration of a ``query_range``."""
-        from dataclasses import replace as _dc_replace
-
-        core = _dc_replace(expr, agg=None, by=None, without=None)
-        fp = repr(core)
-        key = ("core", fp, start_ms, end_ms, step_ms, lookback_ms)
-        memo = getattr(self, "_memo", None)
-        if memo is not None and key in memo:
-            return memo[key]
-        out = self._selector_series_inner(
-            core, start_ms, end_ms, step_ms, lookback_ms
-        )
-        if memo is not None:
-            if getattr(self, "_core_refs", {}).get(fp, 0) >= 2:
-                out = self._pin(out)
-            memo[key] = out
-        return out
-
-    def _selector_series_inner(
-        self, expr: PromExpr, start_ms, end_ms, step_ms, lookback_ms
-    ) -> DataFrame:
+        """Per-series frame of a selector core (no fused aggregation, no
+        ``@``)."""
         bucketed, series_cols = self._bucketed_selector(
             expr, start_ms, end_ms, step_ms, lookback_ms
         )
@@ -2575,7 +2558,7 @@ class PromQLEngine:
         self, expr: PromExpr, start_ms, end_ms, step_ms, lookback_ms
     ):
         """Matcher-filtered, step-bucketed sample frame of a selector
-        core — the front half of :meth:`_selector_series_inner`.
+        core — the front half of :meth:`_selector_series`.
         Returns ``(bucketed, series_cols)``."""
         window_ms = expr.range_ms if expr.func else lookback_ms
         off = expr.offset_ms
@@ -2606,7 +2589,7 @@ class PromQLEngine:
         return bucketed, series_cols
 
     def _info(
-        self, inner: DataFrame, node: PromInfo,
+        self, ev, inner: DataFrame, node: PromInfo,
         start_ms, end_ms, step_ms, lookback_ms,
     ) -> DataFrame:
         """``info(v)``: one instant-select of ``target_info`` on the same
@@ -2621,7 +2604,7 @@ class PromQLEngine:
             # no identifying labels survive on the input vector (e.g.
             # aggregated away) — nothing can match, like Prometheus
             return inner
-        info = self._eval_expr(
+        info = ev.eval(
             PromExpr(metric="target_info"),
             start_ms, end_ms, step_ms, lookback_ms,
         )
@@ -2667,14 +2650,14 @@ class PromQLEngine:
         return joined.select(*order)
 
     def _absent_instant(
-        self, node: "PromAbsent", start_ms, end_ms, step_ms, lookback_ms
+        self, ev, node: "PromAbsent", start_ms, end_ms, step_ms, lookback_ms
     ) -> DataFrame:
         """absent(v): the step axis anti-joined against the steps where
         the inner instant vector has any series — both sides O(steps)
         after the inner evaluation's own aggregation.  Reuses the full
         selector machinery (lookback, offset, matchers) by evaluating the
         inner expression like any other instant vector."""
-        present = self._eval(
+        present = ev.eval(
             node.inner, start_ms, end_ms, step_ms, lookback_ms
         ).select("t").distinct()
         steps = self._steps_frame(start_ms, end_ms, step_ms)

@@ -84,8 +84,8 @@ def rewrite_for_rollup(
     ``(rewritten_node, n_rewrites)``; unrewritable subtrees come back
     untouched.  Subquery interiors are rewritten against their OWN grid:
     the interior evaluates at ``start=((outer_start - range) // sub + 1)
-    * sub, step=sub`` (the absolute-aligned sub-grid `_eval`'s subquery
-    branch derives), so alignment is re-checked per scope — a 1d-step
+    * sub, step=sub`` (the absolute-aligned sub-grid `_eval_subquery`
+    derives), so alignment is re-checked per scope — a 1d-step
     interior under a misaligned outer grid still routes, and a nested
     subquery re-derives again.
 

@@ -146,58 +146,8 @@ class ChunkQuerier:
         maxt: int | None = None,
         matchers: Sequence[Matcher] = (),
         columns: Sequence[str] | None = None,
-        late_materialize: bool = False,
-        max_keys: int = 10_000,
     ) -> DataFrame:
-        """Scan -> prune -> project (`cmd/read/main.go:95-126`).
-
-        ``late_materialize=True`` is the two-pass escape hatch for the
-        reference's payload late materialization (`compute/scan.go:64-78`
-        decodes filter columns first, then reads the payload pages
-        only for surviving row ranges — `compute/projection.go:93-95`,
-        `dataset/pages.go:30-64`):
-
-        1. a keys-only pass scans just the (small) label columns and
-           evaluates the matchers — including residual predicates like
-           un-anchorable regexes that never reach PushedFilters;
-        2. the surviving ``__series__id`` set (bounded by ``max_keys``) is
-           re-applied to a fresh scan as a pushed ``In`` filter, so the
-           payload pass prunes row groups on the SORT-PREFIX column and
-           skips the fat payload pages of non-matching series
-           entirely.
-
-        When the key set exceeds ``max_keys`` (unselective matchers) the
-        pushed-In plan stops paying for itself and we fall back to the
-        single-pass scan.  Only worthwhile when a selective residual label
-        predicate guards a fat payload column.
-        """
-        if late_materialize and SERIES_ID in self.chunks.columns:
-            keys_pass = (
-                self._filtered(mint, maxt, matchers)
-                .select(SERIES_ID)
-                .distinct()
-                .limit(max_keys + 1)
-            )
-            keys = [r[0] for r in keys_pass.collect()]
-            if len(keys) <= max_keys:
-                if keys:
-                    # the range bounds are implied by the In, but parquet
-                    # only pushes In up to ~10 values
-                    # (spark.sql.parquet.pushdown.inFilterThreshold) —
-                    # min/max comparisons ALWAYS push, so a sort-clustered
-                    # key set still zone-map-prunes whole row groups of
-                    # payload; the In evaluates as a residual
-                    preds = [
-                        F.col(SERIES_ID) >= F.lit(min(keys)),
-                        F.col(SERIES_ID) <= F.lit(max(keys)),
-                        F.col(SERIES_ID).isin(keys),
-                    ]
-                else:
-                    preds = [F.lit(False)]
-                df = self.chunks.filter(
-                    conjunction(preds + self._time_preds(mint, maxt))
-                )
-                return df.select(*columns) if columns else df
+        """Scan -> prune -> project (`cmd/read/main.go:95-126`)."""
         df = self._filtered(mint, maxt, matchers)
         return df.select(*columns) if columns else df
 
@@ -220,7 +170,6 @@ class ChunkQuerier:
         maxt: int | None = None,
         matchers: Sequence[Matcher] = (),
         labels: Sequence[str] | None = None,
-        late_materialize: bool = False,
     ) -> DataFrame:
         from tsdb_parquet_spark.names import escape_name
 
@@ -233,9 +182,7 @@ class ChunkQuerier:
         )
         # the explode projects labels + payload; Catalyst prunes the scan
         # to those columns
-        df = self.select_chunks(
-            mint, maxt, matchers, late_materialize=late_materialize
-        )
+        df = self.select_chunks(mint, maxt, matchers)
         return chunks_to_samples(df, labels)
 
     def label_names(self, matchers: Sequence[Matcher] = ()) -> list[str]:
